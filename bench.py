@@ -290,6 +290,11 @@ def main() -> None:
             os.environ.get("SPARK_DRIVER_MEMORY", default_mem),
         )
         .config("spark.ui.enabled", "false")
+        # the status store must still hold every job and stage of a
+        # query's first run when query_stats reads it (streaming harness
+        # queries run hundreds of jobs per run; the default keeps 1000)
+        .config("spark.ui.retainedJobs", "20000")
+        .config("spark.ui.retainedStages", "20000")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -313,9 +318,10 @@ def main() -> None:
     REGISTRY[bench_queries[0]].fn(spark, sf_dir).count()
 
     # Scaling evidence (r12, VERDICT item 2): per-query executed job /
-    # stage / task counts, read from the DAGScheduler job counter + the
-    # public StatusTracker AFTER the timed runs — the probe adds nothing
-    # to the timed path. The driver's low-core probe can then tell
+    # stage / task counts of the first timed run, read from the
+    # DAGScheduler job counter + the public StatusTracker right after that
+    # run, outside its timed span — the probe adds nothing to the timed
+    # path. A low-core rerun can then tell
     # overhead-bound (few tasks, ratio ~1 at tiny SF) from genuinely
     # serial (tasks >> cores but ratio ~1) instead of flagging
     # suspect_cpus_ignored on sub-second queries.
@@ -328,6 +334,9 @@ def main() -> None:
     query_stats: dict[str, dict[str, int]] = {}
 
     def _collect_stats(name: str, j0: int, j1: int) -> None:
+        # the status store is fed asynchronously by the listener bus;
+        # drain it so the run's last jobs and stages are there
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
         tracker = sc.statusTracker()
         stages: set[int] = set()
         for jid in range(j0, j1):
@@ -349,17 +358,14 @@ def main() -> None:
         timings: dict[str, float] = {}
         for name in names:
             best = float("inf")
-            run1_jobs: tuple[int, int] | None = None
             for run in range(2):
                 j0 = _next_job_id()
                 t0 = time.perf_counter()
                 REGISTRY[name].fn(spark, sf_dir).count()
                 best = min(best, time.perf_counter() - t0)
                 if run == 0:
-                    run1_jobs = (j0, _next_job_id())
+                    _collect_stats(name, j0, _next_job_id())
             timings[name] = round(best, 3)
-            if run1_jobs is not None:
-                _collect_stats(name, *run1_jobs)
             # a query that persists internally (item_item_cosine_topk's
             # 4-consumer cp set) must not pin executor storage for every
             # LATER query's memory budget — clear between queries (no-op

@@ -11,10 +11,24 @@ Two strategies, trading determinism against scale:
   ``slice`` (and is oracle-testable), but the global window funnels through a
   single partition — fine for the ≤10k-per-request sink payloads the
   reference targets, wrong for bulk data movement.
-- :func:`assign_batches_distributed` — batch ids local to each partition
-  (``spark_partition_id * 2^32 + local row_number``). No global shuffle; ids
-  are not contiguous, which the sink does not care about. This is the 100 TB
-  path.
+- :func:`assign_batches_distributed` — batch ids local to each partition,
+  computed from ``monotonically_increasing_id`` arithmetic alone. No
+  window, no exchange; ids are not contiguous, which the sink does not care
+  about. This is the 100 TB path.
+
+The arithmetic: ``monotonically_increasing_id`` is
+``(partition_index << 33) + row_index``, where ``row_index`` counts the
+rows of that partition from 0 in iteration order. So with ``mid`` that id
+and ``N`` the batch size,
+
+    batch_id = (mid >> 33) * 2^32 + floor((mid & (2^33 - 1)) / N)
+
+puts rows ``k*N .. k*N + N - 1`` of each partition in batch ``k`` of that
+partition's id space ``partition_index * 2^32``. It equals a ``row_number``
+over ``mid`` within each partition, minus one, divided by ``N`` — the
+window form this replaces — so the ids, and the bodies, are the same. Ids
+of two partitions stay apart while a partition holds fewer than
+``2^32 * N`` rows.
 """
 
 from __future__ import annotations
@@ -25,6 +39,14 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 BATCH_COL = "__batch_id"
+
+# The reference's request-body template, templates/targetBody.hbs,
+# byte-verbatim (no trailing newline): the input to assemble_bodies_hbs
+# that reproduces the reference's bodies.
+TARGET_BODY_HBS = (
+    "[\n{{#each entities}}{{{.}}}"
+    "{{#unless @last}},{{/unless}}{{/each}}\n]"
+)
 
 
 _PROFILE_GUARD = object()  # sentinel: resolve guard from the active profile
@@ -95,29 +117,26 @@ def assign_batches(
 
 def assign_batches_distributed(df: DataFrame, max_batch_size: int) -> DataFrame:
     """Parallel batch ids, unique but non-contiguous: one id space per
-    ORIGINAL map partition.
+    map partition, ``max_batch_size`` consecutive rows of a partition per
+    batch (see the module docstring for the arithmetic).
 
-    The partition key is captured from ``monotonically_increasing_id``'s
-    upper bits in a projection BEFORE the window's exchange, so the id
-    prefix and the grouping key agree (``spark_partition_id()`` re-evaluated
-    after the exchange would not). The window still plans one hash exchange
-    keyed by that captured id — rows move once, whole partitions at a time —
-    but there is no global single-task funnel like :func:`assign_batches`'s
-    unpartitioned window, and batch sizes stay exact."""
+    A single projection: the ids are computed in the stage that produces
+    the rows, so no rows move and no job runs for them, and there is no
+    global single-task funnel like :func:`assign_batches`'s unpartitioned
+    window. Batch sizes are exact."""
     if max_batch_size <= 0:
         raise ValueError("max_batch_size must be positive")
-    mid = F.monotonically_increasing_id()
-    staged = df.withColumn("__mid", mid).withColumn(
-        "__pid", F.shiftright(F.col("__mid"), 33)
-    )
-    w = Window.partitionBy("__pid").orderBy("__mid")
+    # projected once and read twice below: the id is nondeterministic, so
+    # the optimizer keeps this projection apart instead of inlining it
+    mid = F.col("__mid")
     return (
-        staged.withColumn(
+        df.withColumn("__mid", F.monotonically_increasing_id())
+        .withColumn(
             BATCH_COL,
-            F.col("__pid") * F.lit(1 << 32)
-            + F.floor((F.row_number().over(w) - F.lit(1)) / F.lit(max_batch_size)),
+            F.shiftleft(F.shiftright(mid, 33), 32)
+            + F.floor(mid.bitwiseAND(F.lit((1 << 33) - 1)) / F.lit(max_batch_size)),
         )
-        .drop("__mid", "__pid")
+        .drop("__mid")
     )
 
 

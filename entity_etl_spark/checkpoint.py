@@ -13,7 +13,9 @@ Reference semantics (cache.js:99-119 ``getCheckpoint``):
 
 The checkpoint is a driver-side scalar (one row), persisted in a tiny JSON
 file per table — at 100 TB this stays O(1); only the aggregate is
-distributed.
+distributed. A run does not pay a job for it: :func:`observe_scan` attaches
+the max and the row count to the scan, and the run's first action over the
+scan computes them on the way (:func:`observed_max_ts_and_count`).
 """
 
 from __future__ import annotations
@@ -21,7 +23,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 DEFAULT_CHECKPOINT_MS = 1  # reference cache.js:18
@@ -50,10 +52,11 @@ def _ts_native_expr(df: DataFrame, ts_field: str):
 
 
 def max_ts_and_count(df: DataFrame, ts_field: str) -> tuple[int | None, int]:
-    """Fused max(ts) + row count in ONE aggregate job.
+    """Fused max(ts) + row count in ONE aggregate (two jobs).
 
-    run_incremental needs both numbers from the same scan; separate
-    ``max_ts`` and ``count()`` actions would read the input twice."""
+    Separate ``max_ts`` and ``count()`` actions would read the input twice.
+    run_incremental observes both on its scan instead and calls this only
+    when that observation was lost (:func:`observed_max_ts_and_count`)."""
     if ts_field not in df.columns:
         return None, df.count()
     row = df.agg(
@@ -62,6 +65,43 @@ def max_ts_and_count(df: DataFrame, ts_field: str) -> tuple[int | None, int]:
     ).first()
     mx = None if row is None or row["m"] is None else int(row["m"])
     return mx, 0 if row is None else int(row["n"])
+
+
+def observe_scan(df: DataFrame, ts_field: str) -> tuple[DataFrame, Observation]:
+    """``df`` with max(ts) and the row count attached as an Observation.
+
+    The first action whose plan runs the returned frame fills the
+    Observation; read it with :func:`observed_max_ts_and_count` once that
+    action has returned. Requires ``ts_field`` in ``df``."""
+    obs = Observation()
+    observed = df.observe(
+        obs,
+        F.max(_ts_native_expr(df, ts_field)).alias("m"),
+        F.count(F.lit(1)).alias("n"),
+    )
+    return observed, obs
+
+
+def observed_max_ts_and_count(
+    obs: Observation, df: DataFrame, ts_field: str
+) -> tuple[int | None, int]:
+    """The (max ts, row count) an :func:`observe_scan` Observation saw.
+
+    Call after the first action over the observed frame has returned. The
+    metrics are delivered when that action ends. When the optimizer drops
+    the observed node (it folds a filter over an in-memory source into an
+    empty relation before anything runs), the action delivers an empty
+    row instead; then the exact :func:`max_ts_and_count` over ``df`` —
+    the same rows — runs, so a lost Observation costs jobs, never a wrong
+    checkpoint."""
+    # read the JVM-side row directly: Observation.get cannot tell an
+    # empty (dropped) observation from a failure
+    fut = obs._jo.future()
+    row = fut.value().get().get() if fut.isCompleted() else None
+    if row is None or row.length() == 0:
+        return max_ts_and_count(df, ts_field)
+    mx = row.get(0)
+    return (None if mx is None else int(mx)), int(row.getLong(1))
 
 
 # Backwards-compatible name for epoch-ms (long) columns.

@@ -55,6 +55,18 @@ def with_content_hash(
     return df.withColumn(hash_col, content_hash(df.columns, exclude))
 
 
+def ensure_content_hash(df: DataFrame, exclude: Sequence[str] = ()) -> DataFrame:
+    """``df`` with :data:`HASH_COL`, reusing a hash already on the frame.
+
+    The pipeline hashes each page once (pipeline.run_incremental) and the
+    keep-latest, changed-rows and state-merge steps all read that column;
+    a present ``HASH_COL`` is taken to be the hash over the same
+    ``exclude`` set."""
+    if HASH_COL in df.columns:
+        return df
+    return with_content_hash(df, exclude=exclude)
+
+
 def changed_rows(
     incoming: DataFrame,
     state: DataFrame | None,
@@ -69,12 +81,13 @@ def changed_rows(
 
     The new-id half of the predicate is a left-anti join and the changed half
     a hash inequality, fused into one left join + filter so state is scanned
-    once.
+    once. A ``HASH_COL`` already on ``incoming`` is reused (see
+    :func:`ensure_content_hash`) and dropped from the output.
     """
     incoming = incoming.filter(F.col(id_field).isNotNull())
     if state is None:
-        return incoming
-    hashed = with_content_hash(incoming, exclude=ignore)
+        return incoming.drop(HASH_COL)
+    hashed = ensure_content_hash(incoming, exclude=ignore)
     st = state.select(
         F.col(id_field).alias("__state_id"), F.col(HASH_COL).alias("__state_hash")
     )

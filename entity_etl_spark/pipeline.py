@@ -3,14 +3,24 @@ loop (app.js:13-60) re-expressed around DataFrames.
 
 Per table, one incremental run is:
 
-    incoming   = incremental_scan(source, ts, checkpoint)        # O1/O3
-    latest     = keep_latest_per_key(incoming, id, ts)           # O15
-    delta      = changed_rows(latest, state, id, ignore=[ts])    # O5
-    shaped     = apply_mapping(delta, projection_spec)           # O6-O9
+    page       = content_hash(incremental_scan(source, ts, checkpoint))
+                 + observe(max ts, rows), cached                # O1/O3, O5
+    latest     = keep_latest_per_key(page, id, ts)              # O15
+    delta      = changed_rows(latest, state, id)                # O5
+    shaped     = apply_mapping(delta, projection_spec)          # O6-O9
     bodies     = assemble_bodies(assign_batches(to_json(shaped)))# O9/O10
-    sink(bodies)                                                 # O11
-    state'     = merge_state(state, latest, id, ...)             # O12/O13
-    checkpoint'= next_checkpoint(max_ts(incoming), prev, partial)# O14
+    sink(bodies)                                                # O11
+    state'     = merge_state(state, page, id, ...)              # O12/O13/O15
+    checkpoint'= next_checkpoint(observed max ts, prev, partial)# O14
+
+The page is hashed once and cached; the delta and the next state both read
+it. The checkpoint's max ts and the input row count are observed on the
+page while the bodies are computed, so they cost no job of their own. A
+warm run executes: the bodies and their counts (one action: the page
+cache, the state broadcast, the keep-latest and body shuffles, and the
+count), the sink's own actions, and the state write (one shuffle and the
+write). The state is read with its known schema, so loading it runs no
+job.
 
 State/checkpoint are saved after the sink succeeds, preserving the
 reference's at-least-once contract (app.js:55-58): a crash between send and
@@ -28,7 +38,7 @@ from pyspark.sql import functions as F
 from . import batch as batch_mod
 from . import checkpoint as ckpt_mod
 from . import state as state_mod
-from .delta import changed_rows
+from .delta import HASH_COL, changed_rows, ensure_content_hash, with_content_hash
 from .log import log
 from .mapping import apply_mapping, to_json_rows
 from .model import EngineConfig, TableSpec
@@ -37,11 +47,16 @@ from .model import EngineConfig, TableSpec
 def keep_latest_per_key(df: DataFrame, id_field: str, ts_field: str) -> DataFrame:
     """Latest row per key (O15): the distributed equivalent of the
     reference's Map.set last-write-wins within a page (cache.js:55-57).
-    Deterministic tiebreak on the full content hash would be overkill; ties
-    on (id, ts) keep an arbitrary-but-single row via row_number."""
-    w = Window.partitionBy(id_field).orderBy(F.desc(ts_field))
+
+    Ties on (id, ts) go to the greater content hash (computed here unless
+    the frame already carries it; the output keeps it), so every plan that
+    evaluates this window picks the same row — the emitted body and the
+    hash the state stores come from one version. Rows that tie on the hash
+    too have the same content."""
+    hashed = ensure_content_hash(df, exclude=(ts_field,))
+    w = Window.partitionBy(id_field).orderBy(F.desc(ts_field), F.desc(HASH_COL))
     return (
-        df.filter(F.col(id_field).isNotNull())
+        hashed.filter(F.col(id_field).isNotNull())
         .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
@@ -107,6 +122,48 @@ def run_incremental(
         )
 
 
+def _transition(
+    page: DataFrame,
+    state: DataFrame | None,
+    spec: TableSpec,
+    projection,
+    config: EngineConfig,
+    now_epoch_ms: int | None,
+    *,
+    bucketed: bool = False,
+) -> tuple[DataFrame, DataFrame]:
+    """One state transition over a page of fetched rows, as two lazy
+    frames: the request bodies (keep-latest → changed-rows → projection →
+    batch bodies) and the next state (purge expired keys, upsert every
+    seen key with a fresh TTL). Both read ``page``; a page that already
+    carries ``HASH_COL`` is not hashed again.
+
+    The delta compares against the full stored state, expired keys
+    included; only the next state drops them. The next state is planned
+    here, so without ``now_epoch_ms`` its TTL clock is read now."""
+    latest = keep_latest_per_key(page, spec.id_field, spec.ts_field)
+    delta = changed_rows(latest, state, spec.id_field, ignore=(spec.ts_field,))
+    jsons = _project_to_json(delta, projection)
+    batched = batch_mod.assign_batches_distributed(jsons, config.max_batch_size)
+    bodies = batch_mod.assemble_bodies(batched)
+    merge_kw = dict(
+        ignore=(spec.ts_field,),
+        ttl_hours=config.state_ttl_hours,
+        now_epoch_ms=now_epoch_ms,
+    )
+    if bucketed:
+        # the join-based MERGE needs one row per key; with the state table
+        # bucketed by id only the page side shuffles
+        next_state = state_mod.merge_state_join(state, latest, spec.id_field, **merge_kw)
+    else:
+        # one window keeps the latest row per key and merges it (same
+        # order as keep_latest_per_key), so the page is not reduced twice
+        next_state = state_mod.merge_state(
+            state, page, spec.id_field, ts_field=spec.ts_field, **merge_kw
+        )
+    return bodies, next_state
+
+
 def _run_incremental_impl(
     spark: SparkSession,
     spec: TableSpec,
@@ -122,7 +179,18 @@ def _run_incremental_impl(
     if bucketed:
         state = state_mod.load_state_bucketed(spark, config.state_dir, spec.name)
     else:
-        state = state_mod.load_state(spark, config.state_dir, spec.name)
+        # the state's id column has the source's id type (it was merged from
+        # earlier pages), so a known schema spares the inference job
+        state = state_mod.load_state(
+            spark,
+            config.state_dir,
+            spec.name,
+            schema=state_mod.state_schema(
+                spec.id_field, source.schema[spec.id_field].dataType
+            )
+            if spec.id_field in source.columns
+            else None,
+        )
 
     def persist_state(df: DataFrame) -> None:
         if bucketed:
@@ -156,53 +224,37 @@ def _run_incremental_impl(
             checkpoint_ms=checkpoint,
         )
 
-    incoming = ckpt_mod.incremental_scan(source, spec.ts_field, checkpoint)
-    incoming = incoming.cache()  # reused by delta, state merge, and max-ts
-    latest = keep_latest_per_key(incoming, spec.id_field, spec.ts_field)
-    delta = changed_rows(latest, state, spec.id_field, ignore=(spec.ts_field,))
-
-    jsons = _project_to_json(delta, projection)
-    batched = batch_mod.assign_batches_distributed(jsons, config.max_batch_size)
-    bodies = batch_mod.assemble_bodies(batched).cache()
-
-    # metrics derive from the cached bodies in ONE aggregate — emitted rows
-    # = sum of per-batch item counts (delta is one row per emitted item), so
-    # no separate delta.count()/bodies.count() recomputation jobs
-    stats = bodies.agg(
-        F.count(F.lit(1)).alias("n_batches"),
-        F.coalesce(F.sum("n_items"), F.lit(0)).alias("emitted"),
-    ).first()
-    n_batches, emitted = int(stats["n_batches"]), int(stats["emitted"])
-    sink(bodies)
-
-    # state + checkpoint persist AFTER the sink (at-least-once, app.js:55-58).
-    # merge over `latest` (all seen keys), not `delta`, reproduces
-    # TTL refresh-on-read for unchanged keys (cache.js:79).
-    if bucketed:
-        # `latest` is one-row-per-key here, so the join-based MERGE is exact;
-        # with the state table bucketed by id only the delta shuffles
-        next_state = state_mod.merge_state_join(
-            state,
-            latest,
-            spec.id_field,
-            ignore=(spec.ts_field,),
-            ttl_hours=config.state_ttl_hours,
-            now_epoch_ms=now_epoch_ms,
+    scan = ckpt_mod.incremental_scan(source, spec.ts_field, checkpoint)
+    scan, scan_stats = ckpt_mod.observe_scan(scan, spec.ts_field)
+    # hashed once and cached: the bodies action fills the cache (and the
+    # scan observation), the state merge reads it again
+    page = with_content_hash(scan, exclude=(spec.ts_field,)).cache()
+    bodies, next_state = _transition(
+        page, state, spec, projection, config, now_epoch_ms, bucketed=bucketed
+    )
+    bodies = bodies.cache()
+    try:
+        # metrics derive from the cached bodies in ONE aggregate — emitted
+        # rows = sum of per-batch item counts (delta is one row per emitted
+        # item), so no separate delta.count()/bodies.count() jobs
+        stats = bodies.agg(
+            F.count(F.lit(1)).alias("n_batches"),
+            F.coalesce(F.sum("n_items"), F.lit(0)).alias("emitted"),
+        ).first()
+        n_batches, emitted = int(stats["n_batches"]), int(stats["emitted"])
+        mx, n_input = ckpt_mod.observed_max_ts_and_count(
+            scan_stats, page, spec.ts_field
         )
-    else:
-        next_state = state_mod.merge_state(
-            state,
-            latest,
-            spec.id_field,
-            ignore=(spec.ts_field,),
-            ts_field=spec.ts_field,
-            ttl_hours=config.state_ttl_hours,
-            now_epoch_ms=now_epoch_ms,
-        )
-    persist_state(next_state)
-    # one fused job gives both the checkpoint high-water mark and the
-    # input-row metric from the cached incoming scan
-    mx, n_input = ckpt_mod.max_ts_and_count(incoming, spec.ts_field)
+        sink(bodies)
+
+        # state + checkpoint persist AFTER the sink (at-least-once,
+        # app.js:55-58). The merge reads the whole page (all seen keys), not
+        # the delta, which reproduces TTL refresh-on-read for unchanged keys
+        # (cache.js:79).
+        persist_state(next_state)
+    finally:
+        page.unpersist()
+        bodies.unpersist()
     new_ckpt = ckpt_mod.next_checkpoint(mx, checkpoint, partial_results)
     ckpt_mod.save_checkpoint(config.state_dir, spec.name, new_ckpt)
 
@@ -218,8 +270,6 @@ def _run_incremental_impl(
         "%s: input=%d emitted=%d batches=%d checkpoint=%d",
         spec.name, n_input, emitted, n_batches, new_ckpt,
     )
-    incoming.unpersist()
-    bodies.unpersist()
     return result
 
 
@@ -309,25 +359,14 @@ def run_streaming(
                     spec.name,
                 )
             return
-        latest = keep_latest_per_key(batch_df, spec.id_field, spec.ts_field)
         state = state_mod.load_state(spark, config.state_dir, spec.name)
-        delta = changed_rows(latest, state, spec.id_field, ignore=(spec.ts_field,))
-        jsons = _project_to_json(delta, projection)
-        batched = batch_mod.assign_batches_distributed(jsons, config.max_batch_size)
-        bodies = batch_mod.assemble_bodies(batched)
+        bodies, next_state = _transition(
+            batch_df, state, spec, projection, config, now_b
+        )
         if sink_takes_batch_id:
             sink(bodies, batch_id)
         else:
             sink(bodies)
-        next_state = state_mod.merge_state(
-            state,
-            latest,
-            spec.id_field,
-            ignore=(spec.ts_field,),
-            ts_field=spec.ts_field,
-            ttl_hours=config.state_ttl_hours,
-            now_epoch_ms=now_b,
-        )
         state_mod.save_state(next_state, config.state_dir, spec.name)
 
     run_available_now(stream, checkpoint_dir, process, timeout_sec=timeout_sec)

@@ -317,13 +317,8 @@ def q_batch_assembly(spark: SparkSession, sf: str) -> DataFrame:
     tags=("core",),
 )
 def q_batch_assembly_hbs(spark: SparkSession, sf: str) -> DataFrame:
-    from ..batch import assemble_bodies_hbs
+    from ..batch import TARGET_BODY_HBS, assemble_bodies_hbs
 
-    # templates/targetBody.hbs, byte-verbatim (no trailing newline)
-    tpl = (
-        "[\n{{#each entities}}{{{.}}}"
-        "{{#unless @last}},{{/unless}}{{/each}}\n]"
-    )
     ev = read_sf_table(spark, sf, "events")
     w = Window.orderBy("event_id")
     batched = ev.select(
@@ -334,7 +329,7 @@ def q_batch_assembly_hbs(spark: SparkSession, sf: str) -> DataFrame:
             "__batch_id"
         ),
     )
-    return assemble_bodies_hbs(batched, tpl)
+    return assemble_bodies_hbs(batched, TARGET_BODY_HBS)
 
 
 @register(

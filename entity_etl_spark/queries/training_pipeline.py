@@ -2326,8 +2326,9 @@ def q_streaming_neardup_prep(spark: SparkSession, sf: str) -> DataFrame:
       FROM events
     ),
     -- (b, user, ts) collapsed to max-event_id BEFORE keep-latest: the
-    -- engine's keep_latest_per_key is tie-arbitrary on equal ts, so the
-    -- staged stream is de-tied upstream (same dedup both sides)
+    -- engine's keep_latest_per_key breaks equal-ts ties by its content
+    -- hash, which this oracle does not restate, so the staged stream is
+    -- de-tied upstream (same dedup both sides)
     ded AS (
       SELECT b, user_id, ts, event_type FROM (
         SELECT *, row_number() OVER (PARTITION BY b, user_id, ts
@@ -2391,8 +2392,9 @@ def q_streaming_state_pipeline(spark: SparkSession, sf: str) -> DataFrame:
         .alias("__b"),
     )
     # de-tie (batch, user, ts) on max event_id before staging: the
-    # engine's keep-latest is tie-arbitrary on equal ts, and both this
-    # staging and the oracle apply the identical collapse
+    # engine's keep-latest breaks equal-ts ties by content hash, which the
+    # oracle does not restate, and both this staging and the oracle apply
+    # the identical collapse
     dw = W.partitionBy("__b", "user_id", "ts").orderBy(
         F.col("event_id").desc()
     )

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .delta import HASH_COL, with_content_hash
+from .delta import HASH_COL, ensure_content_hash
 
 TTL_COL = "__ttl_ms"
 
@@ -43,29 +43,43 @@ def now_ms() -> int:
     return int(time.time() * 1000)
 
 
-def empty_state(spark: SparkSession, id_type: T.DataType, id_field: str) -> DataFrame:
-    schema = T.StructType(
+def state_schema(id_field: str, id_type: T.DataType) -> T.StructType:
+    """The state table's schema: ``(id, __content_hash, __ttl_ms)``."""
+    return T.StructType(
         [
             T.StructField(id_field, id_type),
             T.StructField(HASH_COL, T.StringType()),
             T.StructField(TTL_COL, T.LongType()),
         ]
     )
-    return spark.createDataFrame([], schema)
+
+
+def empty_state(spark: SparkSession, id_type: T.DataType, id_field: str) -> DataFrame:
+    return spark.createDataFrame([], state_schema(id_field, id_type))
 
 
 def state_path(state_dir: str, table: str) -> str:
     return os.path.join(state_dir, f"{table}.state.parquet")
 
 
-def load_state(spark: SparkSession, state_dir: str, table: str) -> DataFrame | None:
+def load_state(
+    spark: SparkSession,
+    state_dir: str,
+    table: str,
+    schema: T.StructType | None = None,
+) -> DataFrame | None:
     """Load persisted state; None on first run (reference loadCache default,
-    cache.js:20-35)."""
+    cache.js:20-35).
+
+    Without ``schema`` the reader infers it from the files, which costs one
+    Spark job per load; a caller that knows the layout passes it
+    (:func:`state_schema`) and the load runs no job."""
     path = state_path(state_dir, table)
     if not os.path.exists(path):
         return None
+    reader = spark.read if schema is None else spark.read.schema(schema)
     try:
-        return spark.read.parquet(path)
+        return reader.parquet(path)
     except Exception:
         return None
 
@@ -303,7 +317,7 @@ def merge_state_join(
     now_epoch_ms = now_ms() if now_epoch_ms is None else now_epoch_ms
     ttl_ms = now_epoch_ms + int(ttl_hours * 3600 * 1000)
     updates = (
-        with_content_hash(incoming.filter(F.col(id_field).isNotNull()), exclude=ignore)
+        ensure_content_hash(incoming.filter(F.col(id_field).isNotNull()), exclude=ignore)
         .select(
             F.col(id_field),
             F.col(HASH_COL).alias("__u_hash"),
@@ -349,22 +363,27 @@ def merge_state(
        here because the engine upserts all seen rows, not only changed ones,
        which reproduces refresh-on-read (cache.js:79) exactly: unchanged rows
        rewrite an identical hash with a fresh TTL.
+
+    ``incoming`` may hold several rows per key: the one window that merges
+    it into the state also keeps the latest row per key, ordered by
+    ``ts_field`` and then by content hash — the order of
+    pipeline.keep_latest_per_key, so the stored hash is the hash of the
+    row the run emitted. A ``HASH_COL`` already on ``incoming`` is reused.
     """
     now_epoch_ms = now_ms() if now_epoch_ms is None else now_epoch_ms
     ttl_ms = now_epoch_ms + int(ttl_hours * 3600 * 1000)
 
     # Intra-batch duplicates of a key: the reference's Map.set keeps the last
     # row in array order (cache.js:55-57); distributed equivalent = keep the
-    # row with the greatest event time when one is available.
-    from .tsutil import epoch_micros_any
-
-    order_col = (
-        epoch_micros_any(incoming, ts_field)
-        if ts_field is not None and ts_field in incoming.columns
-        else F.lit(0)
-    )
+    # row with the greatest event time when one is available. State rows
+    # rank below every update (__prio), so their __ord is never compared.
+    if ts_field is not None and ts_field in incoming.columns:
+        order_col = F.col(ts_field)
+        state_ord = F.lit(None).cast(incoming.schema[ts_field].dataType)
+    else:
+        order_col = state_ord = F.lit(0)
     updates = (
-        with_content_hash(
+        ensure_content_hash(
             incoming.filter(F.col(id_field).isNotNull()), exclude=ignore
         )
         .withColumn("__ord", order_col)
@@ -378,11 +397,13 @@ def merge_state(
         live = (
             state.filter(F.col(TTL_COL) >= F.lit(now_epoch_ms))
             .withColumn("__prio", F.lit(0))
-            .withColumn("__ord", F.lit(0))
+            .withColumn("__ord", state_ord)
         )
         base = live.select(*updates.columns).unionByName(updates)
 
-    w = Window.partitionBy(id_field).orderBy(F.desc("__prio"), F.desc("__ord"))
+    w = Window.partitionBy(id_field).orderBy(
+        F.desc("__prio"), F.desc("__ord"), F.desc(HASH_COL)
+    )
     return (
         base.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)

@@ -477,32 +477,6 @@ def planned_batch_rows(checkpoint_dir: str, batch_id: int) -> int | None:
     return total
 
 
-def source_batch_is_empty(
-    batch_df: DataFrame,
-    checkpoint_dir: str | None = None,
-    batch_id: int | None = None,
-) -> bool:
-    """Empty-batch probe for per-batch frames of SOURCE-SHAPED streams —
-    the ``isEmpty()`` pre-check folded into a driver-side read of the
-    file-source checkpoint log (guide §1: the take(1) job cost ~0.1 s per
-    micro-batch across every slot/prep stream, pure overhead on the
-    non-empty common case).
-
-    Exact when frame emptiness equals source emptiness: the frame is the
-    source, or row-preserving transforms of it (0 planned rows => empty
-    under ANY per-row transform). A caller that pre-filters its stream
-    may see a planned-rows>0 batch that is empty after the filter; every
-    slot family tolerates that (an empty partial merges as identity and
-    a sequential fold of nothing re-writes the prior state), it just
-    pays one redundant slot write. Falls back to ``isEmpty()`` whenever
-    the planned rows are unknowable."""
-    if checkpoint_dir is not None and batch_id is not None:
-        n = planned_batch_rows(checkpoint_dir, batch_id)
-        if n is not None:
-            return n == 0
-    return batch_df.isEmpty()
-
-
 # Rows per partition when spreading a landed micro-batch: small enough
 # that test-scale batches (thousands of docs) still parallelize the
 # per-doc heavy work, large enough that a task amortizes its ~5-15 ms

@@ -342,13 +342,13 @@ def test_hbs_dialect_fuzz_against_independent_renderer(spark):
 # ------------------------------------------------- body templates (r7)
 def test_compile_hbs_body_renders_reference_targetbody(spark):
     """The reference's actual request-body template
-    (templates/targetBody.hbs:1-3) renders byte-for-byte through the
-    distributed body path, compared against an independent Python
-    render of Handlebars {{#each}}/{{#unless @last}} semantics."""
-    from entity_etl_spark.batch import assemble_bodies_hbs
+    (templates/targetBody.hbs:1-3, kept verbatim as batch.TARGET_BODY_HBS)
+    renders byte-for-byte through the distributed body path, compared
+    against an independent Python render of Handlebars
+    {{#each}}/{{#unless @last}} semantics."""
+    from entity_etl_spark.batch import TARGET_BODY_HBS, assemble_bodies_hbs
 
-    with open("/root/reference/templates/targetBody.hbs") as f:
-        tpl = f.read()
+    tpl = TARGET_BODY_HBS
 
     rows = [(0, '{"a":1}'), (0, '{"b":2}'), (0, '{"c":3}'), (1, '{"d":4}')]
     df = spark.createDataFrame(rows, "__batch_id long, json string")
