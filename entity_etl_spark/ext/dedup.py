@@ -26,10 +26,14 @@ entirely and keeps the signature computation embarrassingly parallel.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from .. import state as state_mod
 
 
 # --------------------------------------------------------------------- E1
@@ -123,10 +127,13 @@ def _spread_input(df: DataFrame) -> DataFrame:
 def _shingle_rows_with_size(
     df: DataFrame, id_col: str, text_col: str, k: int
 ) -> DataFrame:
-    """``(doc, sh, n)`` rows: one row per distinct k-shingle per doc,
-    each carrying the doc's distinct-shingle-set size ``n`` computed
+    """``(doc, sh, n, __pos)`` rows: one row per distinct k-shingle per
+    doc, each carrying the doc's distinct-shingle-set size ``n`` computed
     map-side from the UN-exploded array (``F.size``) — no per-doc
-    aggregation ever re-counts it downstream.
+    aggregation ever re-counts it downstream. ``__pos`` is the shingle's
+    position in that array, so the ``__pos == 0`` rows are one
+    ``(doc, n)`` row per doc, selected map-side instead of by a per-doc
+    dedup shuffle.
 
     Shape matters (measured, r11): materializing the shingle array in
     its own Project before the Generate — the natural two-select form —
@@ -145,11 +152,12 @@ def _shingle_rows_with_size(
     shs = shingles(text_col, k)
     z = F.arrays_zip(shs, F.array_repeat(F.size(shs), F.size(shs)))
     return df.select(
-        F.col(id_col).alias("doc"), F.explode(z).alias("__z")
+        F.col(id_col).alias("doc"), F.posexplode(z).alias("__pos", "__z")
     ).select(
         "doc",
         F.col("__z")["0"].alias("sh"),
         F.col("__z")["1"].alias("n"),
+        "__pos",
     )
 
 
@@ -1219,18 +1227,98 @@ def minhash_dedup_incremental(
     return kept, corpus_sigs.unionByName(kept_sigs)
 
 
+# ---------------------------------------- exact near-dup state (two tables)
+# The persisted state of :func:`exact_neardup_dedup_incremental`: narrow
+# (doc, sh) shingle rows plus one (doc, n) row per doc, ``n`` the doc's
+# distinct-shingle-set size. Both tables only ever grow by appends.
+NEARDUP_SHINGLES = "doc_shingles"
+NEARDUP_SIZES = "doc_sizes"
+
+
+def neardup_state_schemas(
+    id_type: T.DataType,
+) -> tuple[T.StructType, T.StructType]:
+    """The ``(doc, sh)`` and ``(doc, n)`` schemas; ``id_type`` is the
+    batch's id column type."""
+    return (
+        T.StructType(
+            [T.StructField("doc", id_type), T.StructField("sh", T.StringType())]
+        ),
+        T.StructType(
+            [T.StructField("doc", id_type), T.StructField("n", T.IntegerType())]
+        ),
+    )
+
+
+def check_neardup_state(state_dir: str) -> None:
+    """Raise ``ValueError`` when ``state_dir`` holds a pre-two-table
+    layout. Sizes are appended before shingles, so shingles without a
+    sizes table cannot come from a crashed append of this layout."""
+    if os.path.exists(
+        state_mod.state_path(state_dir, NEARDUP_SHINGLES)
+    ) and not os.path.exists(state_mod.state_path(state_dir, NEARDUP_SIZES)):
+        raise ValueError(
+            f"{state_dir!r} holds a {NEARDUP_SHINGLES} table without "
+            f"{NEARDUP_SIZES}: an old near-dup state layout. Convert it once "
+            "with ext.dedup.migrate_neardup_state(spark, state_dir)."
+        )
+
+
+def load_neardup_state(
+    spark, state_dir: str, id_type: T.DataType
+) -> tuple[DataFrame, DataFrame]:
+    """``(shingles, sizes)`` read with their known schemas, so loading runs
+    no Spark job; empty frames when nothing was persisted yet. An old
+    3-column ``(doc, sh, n)`` shingles file reads narrow."""
+    check_neardup_state(state_dir)
+
+    def load(table: str, schema: T.StructType) -> DataFrame:
+        df = state_mod.load_state(spark, state_dir, table, schema)
+        return spark.createDataFrame([], schema) if df is None else df
+
+    sh_schema, n_schema = neardup_state_schemas(id_type)
+    return load(NEARDUP_SHINGLES, sh_schema), load(NEARDUP_SIZES, n_schema)
+
+
+def append_neardup_state(
+    state_dir: str, shingles_delta: DataFrame, sizes_delta: DataFrame
+) -> None:
+    """Append one increment's deltas, sizes FIRST: every persisted shingle
+    row then has its doc's size row even if the second append crashes (a
+    shingle row without a size would drop its pairs from the scoring
+    join, silently keeping a near-dup), and a sizes-only remnant is
+    harmless — the replayed batch's ids are excluded from both tables."""
+    state_mod.append_state(sizes_delta, state_dir, NEARDUP_SIZES)
+    state_mod.append_state(shingles_delta, state_dir, NEARDUP_SHINGLES)
+
+
+def migrate_neardup_state(spark, state_dir: str) -> None:
+    """One-shot conversion of an old near-dup state dir — single-table
+    ``(doc, sh, n)``, legacy ``(doc, sh)``, or a mix of both — to the two
+    tables: ``n`` is recounted over the deduplicated ``(doc, sh)`` rows,
+    which is the right size whatever layout (or replay duplication)
+    each row came from, and ``doc_sizes`` is written through
+    :func:`state.save_state`. The shingle files stay as they are (they
+    read narrow)."""
+    rows = spark.read.parquet(
+        state_mod.state_path(state_dir, NEARDUP_SHINGLES)
+    )
+    sizes = rows.groupBy("doc").agg(
+        F.count_distinct("sh").cast("int").alias("n")
+    )
+    state_mod.save_state(sizes, state_dir, NEARDUP_SIZES)
+
+
 def exact_neardup_dedup_incremental(
-    corpus: DataFrame,
     batch: DataFrame,
+    corpus_shingles: DataFrame,
+    corpus_sizes: DataFrame,
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
-    corpus_shingles: DataFrame | None = None,
-    corpus_sizes: DataFrame | None = None,
     k: int = 3,
     threshold: float = 0.5,
-    new_shingles_only: bool = False,
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Incremental near-dup dedup with EXACT recall: drop batch docs whose
     n-gram Jaccard with the accumulated corpus (or a smaller-id batch
     sibling) reaches ``threshold`` — same keep-min-id policy as
@@ -1240,18 +1328,14 @@ def exact_neardup_dedup_incremental(
     contract at any corpus size (the r5 sf1 rehearsal showed LSH
     signatures silently keep extra near-threshold docs).
 
-    State layouts, newest preferred:
-
-    - TWO-TABLE (r12): ``corpus_shingles`` = narrow ``(doc, sh)`` rows
-      plus ``corpus_sizes`` = one ``(doc, n)`` row per doc (``n`` the
-      doc's distinct-shingle-set size, immutable per doc). The pair
-      join's fan-out frame then carries only the two ids and the
-      aggregation keeps one count buffer; sizes attach on the
-      (candidate-bounded) aggregated pair set.
-    - single-table (r11): ``(doc, sh, n)`` rows, sizes riding every row.
-    - legacy (pre-r11): bare ``(doc, sh)``; sizes re-derived on load,
-      including the mixed-dir case (a doc with rows in BOTH layouts is
-      recounted over all its deduped rows).
+    State is one layout of two tables (:func:`load_neardup_state`):
+    ``corpus_shingles`` = narrow ``(doc, sh)`` rows and ``corpus_sizes`` =
+    one ``(doc, n)`` row per doc. The pair join's fan-out frame — the one
+    giant frame here — carries only the two ids, the aggregation keeps
+    one count buffer, and sizes attach on the (candidate-bounded)
+    aggregated pair set. A first increment passes the empty frames. Old
+    single-table / legacy dirs are converted once by
+    :func:`migrate_neardup_state`; loading one raises until then.
 
     Both sides of the candidate equi-join carry complete shingle sets, so
     the per-pair match count IS the exact intersection — no verification
@@ -1260,186 +1344,76 @@ def exact_neardup_dedup_incremental(
     right side is restricted to batch docs (corpus-corpus pairs settled
     in earlier increments), keeping fan-out at O(shared-shingle x batch).
 
-    Returns ``(kept_batch, next_shingles)``; with ``new_shingles_only``
-    the second value is only the state delta (batch survivors' shingles,
-    plus first-run corpus shingles — see minhash_dedup_incremental's
-    note), pairing with state.append_state for O(batch) state growth.
-    The loaded state is deduped on (doc, sh) first: at-least-once replay
-    of a crashed append may duplicate rows, and duplicated shingles would
-    corrupt the intersection counts. At 100 TB bucket the state by ``sh``
-    (sinks.write_bucketed) so the candidate join is shuffle-free, and
-    store ``xxhash64(sh)`` instead of the shingle text to cut state bytes
-    ~3x (in-doc collisions are ~2^-64-improbable but make the operator
-    no-longer-bitwise-exact; the text form here keeps the contract
-    airtight)."""
-    computed = None
+    Returns ``(kept_batch, shingles_delta, sizes_delta)``: the survivors
+    and their rows for each table, both read from ONE pinned delta, for
+    :func:`append_neardup_state` (O(batch) state growth; sizes go first,
+    see there). Loaded state is sanitized for at-least-once replay before
+    it can touch the intersection counts: each table is deduplicated (a
+    crashed append may have persisted its rows twice), and the batch's
+    own ids are excluded from both (a REPLAYED batch's docs may already
+    sit in the state; keeping both copies would double their shingles,
+    shifting every affected Jaccard). At 100 TB bucket the shingles by
+    ``sh`` (sinks.write_bucketed) so the candidate join is shuffle-free,
+    and store ``xxhash64(sh)`` instead of the shingle text to cut state
+    bytes ~3x (in-doc collisions are ~2^-64-improbable but make the
+    operator no-longer-bitwise-exact; the text form here keeps the
+    contract airtight)."""
     batch_ids = F.broadcast(
         batch.select(F.col(id_col).alias("doc")).distinct()
     )
-    sizes_state = None
-    if corpus_shingles is None:
-        corpus_shingles = (
-            _shingle_rows_with_size(
-                _spread_input(corpus), id_col, text_col, k
-            )
-            .localCheckpoint(eager=True)
-        )
-        computed = corpus_shingles
-    elif corpus_sizes is not None:
-        # TWO-TABLE state (r12): narrow (doc, sh) shingle rows plus a
-        # tiny (doc, n) sizes table. The pair join's fan-out frame —
-        # the one giant frame in this op — then carries ONLY
-        # (doc_a, doc_b), and the per-pair aggregation keeps a single
-        # count buffer; sizes re-attach on the aggregated pair set
-        # (candidate-pair-bounded), the same narrow-through-the-fan-out
-        # correction r11 measured on the batch pair family. Replay
-        # sanitation (see the single-table branch's comment) applies to
-        # BOTH tables: dedup each, then exclude the batch's own ids —
-        # a crashed append of either table is repaired wholesale by the
-        # replayed batch re-appending both.
-        corpus_shingles = (
-            corpus_shingles.select("doc", "sh")
-            .dropDuplicates(["doc", "sh"])
-            .join(batch_ids, "doc", "left_anti")
-        )
-        sizes_state = (
-            corpus_sizes.dropDuplicates(["doc"])
-            .join(batch_ids, "doc", "left_anti")
-        )
-    else:
-        # SINGLE-TABLE state (r11 layout, and pre-r11 (doc, sh) dirs).
-        # Loaded state is sanitized for at-least-once replay BEFORE it can
-        # touch the intersection counts, which are plain row counts here
-        # (unlike the MinHash twin, whose verify recomputes Jaccard from
-        # bodies per-row and merely dedups candidate pairs):
-        # - dropDuplicates: a crashed append may have persisted duplicate
-        #   (doc, sh) rows;
-        # - anti-join on batch ids: a REPLAYED batch's docs may already be
-        #   in the state wholesale — keeping both copies would double those
-        #   docs' shingles in all_sh, doubling sizes AND intersections and
-        #   shifting every affected Jaccard (2i/(2na+nb-2i) != i/(na+nb-i)),
-        #   i.e. wrong drops/keeps. Excluding the state copy re-evaluates
-        #   the doc as a batch doc; the batch-ids side is tiny → broadcast.
-        # sanitize BEFORE any size derivation: a crashed append may have
-        # duplicated (doc, sh) rows, and sizes counted off the raw rows
-        # would inflate n for exactly those docs (wrong Jaccards)
-        corpus_shingles = corpus_shingles.dropDuplicates(["doc", "sh"])
-        if "n" not in corpus_shingles.columns:
-            # legacy (doc, sh) state: attach the per-doc set size once
-            # (the pre-r11 per-batch sizes aggregation, now paid only
-            # when reading an old-layout state)
-            legacy_sizes = corpus_shingles.groupBy("doc").agg(
-                F.count(F.lit(1)).alias("n")
-            )
-            corpus_shingles = corpus_shingles.join(legacy_sizes, "doc")
-        else:
-            # MIXED dir: (doc, sh, n) deltas appended into a pre-r11
-            # (doc, sh) directory load as 3-col with n NULL on the
-            # legacy files' rows (plain schema inference) — re-derive
-            # those docs' sizes. A doc caught mid-upgrade can hold rows
-            # in BOTH layouts (a batch replayed across the layout
-            # change), and dropDuplicates keeps an arbitrary null/
-            # non-null mix per (doc, sh) — so for any doc with at least
-            # one null-n row, n is recounted over ALL of that doc's
-            # deduped rows, not just the null subset (counting only the
-            # nulls understated n and overstated Jaccard). Parquet
-            # null-count stats prune the isNull scan to ~zero when the
-            # state is homogeneous, the common case.
-            null_docs = (
-                corpus_shingles.filter(F.col("n").isNull())
-                .select("doc")
-                .distinct()
-            )
-            if not null_docs.isEmpty():
-                affected = corpus_shingles.join(
-                    F.broadcast(null_docs), "doc", "left_semi"
-                )
-                resized = affected.drop("n").join(
-                    affected.groupBy("doc").agg(
-                        F.count(F.lit(1)).alias("n")
-                    ),
-                    "doc",
-                )
-                corpus_shingles = (
-                    corpus_shingles.join(
-                        F.broadcast(null_docs), "doc", "left_anti"
-                    ).unionByName(resized)
-                )
-        corpus_shingles = corpus_shingles.join(batch_ids, "doc", "left_anti")
+    corpus_shingles = (
+        corpus_shingles.select("doc", "sh")
+        .dropDuplicates(["doc", "sh"])
+        .join(batch_ids, "doc", "left_anti")
+    )
+    corpus_sizes = (
+        corpus_sizes.select("doc", "n")
+        .dropDuplicates(["doc"])
+        .join(batch_ids, "doc", "left_anti")
+    )
     # pinned: consumed by the join's right side, the union'd left side,
-    # and the survivors' state delta. Rows carry the per-doc distinct
-    # shingle-set size ``n`` (immutable per doc, computed map-side at
-    # shingling time — never a per-batch O(state) aggregation).
+    # the batch sizes and the survivors' delta. Rows carry the per-doc
+    # distinct shingle-set size ``n`` (computed map-side at shingling
+    # time — never a per-batch O(state) aggregation).
     batch_sh = (
         _shingle_rows_with_size(_spread_input(batch), id_col, text_col, k)
         .localCheckpoint(eager=True)
     )
-    if sizes_state is not None:
-        # narrow fan-out: (doc_a, doc_b) only through the giant join
-        # frame, one count buffer in the aggregation; na/nb attach on
-        # the aggregated pair set. batch sizes are batch-bounded
-        # (broadcast); corpus sizes never shuffle — the pair set is the
-        # (small) build side against their scan.
-        all_sh = corpus_shingles.unionByName(batch_sh.select("doc", "sh"))
-        left = all_sh.select(F.col("doc").alias("doc_a"), "sh")
-        right = batch_sh.select(
-            F.col("doc").alias("doc_b"), F.col("sh").alias("__shb")
+    all_sh = corpus_shingles.unionByName(batch_sh.select("doc", "sh"))
+    left = all_sh.select(F.col("doc").alias("doc_a"), "sh")
+    right = batch_sh.select(
+        F.col("doc").alias("doc_b"), F.col("sh").alias("__shb")
+    )
+    pair_counts = (
+        left.join(
+            right,
+            (left["sh"] == right["__shb"]) & (left["doc_a"] < right["doc_b"]),
         )
-        pair_counts = (
-            left.join(
-                right,
-                (left["sh"] == right["__shb"])
-                & (left["doc_a"] < right["doc_b"]),
-            )
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count(F.lit(1)).alias("__ni"))
-        )
-        # batch sizes from the PINNED batch_sh (one row per doc via a
-        # tiny dedup): the map-only size(shingles()) alternative was
-        # tried and costs a full re-shingling pass of the batch per
-        # consumer (the expression recomputes; nothing is pinned),
-        # where this is a scan of already-materialized blocks.
-        batch_sizes = batch_sh.select("doc", "n").dropDuplicates(["doc"])
-        sizes_a = sizes_state.unionByName(batch_sizes).select(
-            F.col("doc").alias("doc_a"), F.col("n").alias("__na")
-        )
-        sizes_b = batch_sizes.select(
-            F.col("doc").alias("doc_b"), F.col("n").alias("__nb")
-        )
-        # nb attaches via a broadcast of the truly batch-bounded sizes_b;
-        # the na join is left to the planner — the PAIR set is candidate-
-        # bounded, not batch-bounded (a shared-vocabulary corpus emits
-        # millions of candidate pairs per batch at sf1), and force-
-        # broadcasting it measured 140 s vs 44 s at sf1. Locally AQE
-        # broadcasts the doc-count-sized sizes_a side at runtime; at
-        # state scales past the broadcast cap both sides shuffle slim
-        # (id, int) rows.
-        scored = pair_counts.join(F.broadcast(sizes_b), "doc_b").join(
-            sizes_a, "doc_a"
-        )
-    else:
-        all_sh = corpus_shingles.unionByName(batch_sh)
-        left = all_sh.select(
-            F.col("doc").alias("doc_a"), "sh", F.col("n").alias("__na")
-        )
-        right = batch_sh.select(
-            F.col("doc").alias("doc_b"),
-            F.col("sh").alias("__shb"),
-            F.col("n").alias("__nb"),
-        )
-        scored = (
-            left.join(
-                right,
-                (left["sh"] == right["__shb"])
-                & (left["doc_a"] < right["doc_b"]),
-            )
-            .groupBy("doc_a", "doc_b")
-            .agg(
-                F.count(F.lit(1)).alias("__ni"),
-                F.min("__na").alias("__na"),
-                F.min("__nb").alias("__nb"),
-            )
-        )
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("__ni"))
+    )
+    # batch sizes from the PINNED batch_sh (its one __pos == 0 row per
+    # doc): the size(shingles()) alternative was tried and costs a full
+    # re-shingling pass of the batch per consumer (the expression
+    # recomputes; nothing is pinned), where this is a filtered scan of
+    # already-materialized blocks.
+    batch_sizes = batch_sh.filter(F.col("__pos") == 0).select("doc", "n")
+    sizes_a = corpus_sizes.unionByName(batch_sizes).select(
+        F.col("doc").alias("doc_a"), F.col("n").alias("__na")
+    )
+    sizes_b = batch_sizes.select(
+        F.col("doc").alias("doc_b"), F.col("n").alias("__nb")
+    )
+    # nb attaches via a broadcast of the truly batch-bounded sizes_b; the
+    # na join is left to the planner — the PAIR set is candidate-bounded,
+    # not batch-bounded (a shared-vocabulary corpus emits millions of
+    # candidate pairs per batch at sf1), and force-broadcasting it
+    # measured 140 s vs 44 s at sf1. Locally AQE broadcasts the
+    # doc-count-sized sizes_a side at runtime; at state scales past the
+    # broadcast cap both sides shuffle slim (id, int) rows.
+    scored = pair_counts.join(F.broadcast(sizes_b), "doc_b").join(
+        sizes_a, "doc_a"
+    )
     losers = (
         scored.filter(
             F.col("__ni") / (F.col("__na") + F.col("__nb") - F.col("__ni"))
@@ -1450,19 +1424,16 @@ def exact_neardup_dedup_incremental(
         .localCheckpoint(eager=True)
     )
     kept = batch.join(losers, batch[id_col] == losers["__loser"], "left_anti")
-    kept_sh = batch_sh.join(
-        kept.select(F.col(id_col).alias("doc")), "doc", "left_semi"
+    # pinned once for both appends; without it each append re-runs the
+    # survivors plan. Neither delta shuffles: sizes are the __pos == 0 rows.
+    delta = batch_sh.join(
+        F.broadcast(losers), batch_sh["doc"] == losers["__loser"], "left_anti"
+    ).localCheckpoint(eager=True)
+    return (
+        kept,
+        delta.select("doc", "sh"),
+        delta.filter(F.col("__pos") == 0).select("doc", "n"),
     )
-    if new_shingles_only:
-        if computed is not None:
-            return kept, computed.unionByName(kept_sh)
-        return kept, kept_sh
-    if sizes_state is not None:
-        # the full-state return re-attaches n to the narrow state rows
-        # so the returned frame keeps the documented (doc, sh, n) shape
-        # regardless of which layout was loaded
-        corpus_shingles = corpus_shingles.join(sizes_state, "doc")
-    return kept, corpus_shingles.unionByName(kept_sh)
 
 
 def repeated_substring_spans(

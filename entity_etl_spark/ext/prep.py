@@ -154,16 +154,12 @@ def run_streaming_prep(
     table (sinks.write_bucketed) keeps the anti-join shuffle-free.
     """
     from ..state import append_state, load_state
-    from ..streaming import (
-        planned_batch_rows,
-        run_available_now,
-        spread_batch,
-    )
+    from ..streaming import probe_batch_rows, run_available_now, spread_batch
     from .dedup import exact_dedup_incremental
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        rows = planned_batch_rows(checkpoint_dir, batch_id)
-        if rows == 0 or (rows is None and batch_df.isEmpty()):
+        rows = probe_batch_rows(batch_df, checkpoint_dir, batch_id)
+        if rows == 0:
             return
         # a micro-batch often arrives as ONE input partition (one landed
         # file / one page); fan out before the per-doc heavy work or all
@@ -212,7 +208,6 @@ def run_streaming_neardup_prep(
     min_tokens: int = 20,
     min_quality: float = 0.15,
     verify_threshold: float = 0.5,
-    method: str = "exact",
     timeout_sec: float = 120.0,
 ) -> None:
     """Continuous ingest with NEAR-dup suppression: like
@@ -220,43 +215,41 @@ def run_streaming_neardup_prep(
     CONTENT structure, so a paraphrased/near-duplicate re-send of any
     earlier document is dropped, not just byte-identical ones.
 
-    Per micro-batch: clean → quality gate → incremental near-dup dedup
-    against the persistent state → leakage-safe split → append. Same
+    Per micro-batch: clean → quality gate → incremental exact near-dup
+    dedup (:func:`...dedup.exact_neardup_dedup_incremental`) against the
+    persistent shingle inverted index → leakage-safe split → append. Same
     two-layer idempotence as run_streaming_prep (source offsets +
-    content state).
+    content state). The drop decision uses the exact pair set at any
+    scale, and the corpus contributes only a columnar scan of the state
+    per batch (document bodies are never re-read).
 
-    ``method='exact'`` (default): state = the corpus shingle inverted
-    index (:func:`...dedup.exact_neardup_dedup_incremental`) — the drop
-    decision uses the exact pair set at any scale, and the corpus
-    contributes only a columnar (doc, sh) state scan per batch (document
-    bodies are never re-read). ``method='minhash'``: state = MinHash
-    signatures (:func:`...dedup.minhash_dedup_incremental` — signatures
-    map-side, LSH band join, bodies fetched candidate-only from the
-    written output) — smaller state and cheaper joins at a measured
-    recall trade near the threshold. Both grow state by exactly the
-    survivors' rows (append, never rewrite)."""
-    from ..state import append_state, load_state
-    from ..streaming import (
-        planned_batch_rows,
-        run_available_now,
-        spread_batch,
+    State is the operator's two tables, ``doc_shingles`` ``(doc, sh)`` and
+    ``doc_sizes`` ``(doc, n)``, loaded with their known schemas (no Spark
+    job) and grown by exactly the survivors' rows (append, sizes first;
+    never a rewrite). A ``state_dir`` written in an older layout raises
+    ``ValueError`` before the stream starts; convert it once with
+    :func:`...dedup.migrate_neardup_state`."""
+    from ..streaming import probe_batch_rows, run_available_now, spread_batch
+    from .dedup import (
+        append_neardup_state,
+        check_neardup_state,
+        exact_neardup_dedup_incremental,
+        load_neardup_state,
     )
-    from .dedup import exact_neardup_dedup_incremental, minhash_dedup_incremental
 
-    if method not in ("exact", "minhash"):
-        raise ValueError(f"unknown near-dup method: {method!r}")
+    check_neardup_state(state_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        rows = planned_batch_rows(checkpoint_dir, batch_id)
-        if rows == 0 or (rows is None and batch_df.isEmpty()):
+        rows = probe_batch_rows(batch_df, checkpoint_dir, batch_id)
+        if rows == 0:
             return
         # one landed file = one input partition; fan out before the
-        # per-doc heavy work (clean/quality/signature fold) — width
-        # scaled to the batch's size
+        # per-doc heavy work (clean/quality/shingle fold) — width scaled
+        # to the batch's size
         batch_df = spread_batch(spark, batch_df, rows)
         cleaned = batch_df.withColumn(text_col, clean_text(text_col))
-        # pinned: consumed by the shingle/signature fold, the verify body
-        # union, and the kept anti-join — one clean+quality scan, not three
+        # pinned: consumed by the shingle fold, the kept anti-join and
+        # the split + write — one clean+quality scan, not three
         gated = (
             quality_features(cleaned, text_col)
             # barrier BELOW the gate: FilterExec applies no
@@ -271,69 +264,20 @@ def run_streaming_neardup_prep(
                 & (F.col("quality_score") >= min_quality)
             )
         )
-        if method == "exact":
-            state = load_state(spark, state_dir, "doc_shingles")
-            sizes = load_state(spark, state_dir, "doc_sizes")
-            # two-table layout (r12): narrow (doc, sh) shingle rows plus
-            # a tiny (doc, n) sizes table, so the per-batch pair join
-            # stays narrow and its aggregation keeps one count buffer. A
-            # fresh dir starts two-table; a dir that already holds a
-            # single-table state but no sizes table KEEPS the
-            # single-table layout (appending narrow rows would leave
-            # NULL-n rows the sizes table doesn't cover) — migrate old
-            # dirs offline if the narrow layout matters.
-            two_table = state is None or sizes is not None
-            empty = spark.createDataFrame(
-                [], f"{id_col} long, {text_col} string"
-            )
-            kept, new_sh = exact_neardup_dedup_incremental(
-                empty,
-                gated,
-                id_col=id_col,
-                text_col=text_col,
-                corpus_shingles=state,
-                corpus_sizes=sizes if state is not None else None,
-                threshold=verify_threshold,
-                new_shingles_only=True,
-            )
-            out = grouped_split(kept, group_col)
-            out.write.mode("append").partitionBy("split").parquet(out_dir)
-            # append exactly the survivors' rows: O(batch) state growth
-            if two_table:
-                append_state(
-                    new_sh.select("doc", "sh"), state_dir, "doc_shingles"
-                )
-                # one (doc, n) row per survivor, deduped from the delta
-                # rows (which read pinned shingle blocks — recomputing
-                # sizes from text here would re-shingle the batch)
-                append_state(
-                    new_sh.select("doc", "n").dropDuplicates(["doc"]),
-                    state_dir,
-                    "doc_sizes",
-                )
-            else:
-                append_state(new_sh, state_dir, "doc_shingles")
-            return
-        sigs = load_state(spark, state_dir, "doc_sigs")
-        try:
-            corpus = spark.read.parquet(out_dir).select(id_col, text_col)
-        except Exception:  # first batch: nothing written yet
-            corpus = spark.createDataFrame(
-                [], f"{id_col} long, {text_col} string"
-            )
-        kept, new_sigs = minhash_dedup_incremental(
-            corpus,
+        shingles, sizes = load_neardup_state(
+            spark, state_dir, gated.schema[id_col].dataType
+        )
+        kept, shingles_delta, sizes_delta = exact_neardup_dedup_incremental(
             gated,
+            shingles,
+            sizes,
             id_col=id_col,
             text_col=text_col,
-            corpus_sigs=sigs,
-            verify_threshold=verify_threshold,
-            new_sigs_only=True,
+            threshold=verify_threshold,
         )
         out = grouped_split(kept, group_col)
         out.write.mode("append").partitionBy("split").parquet(out_dir)
-        # append exactly the survivors' signatures: O(batch) state
-        # growth, never an O(corpus) rewrite of the signature table
-        append_state(new_sigs, state_dir, "doc_sigs")
+        # exactly the survivors' rows: O(batch) state growth
+        append_neardup_state(state_dir, shingles_delta, sizes_delta)
 
     run_available_now(stream, checkpoint_dir, process, timeout_sec=timeout_sec)

@@ -323,7 +323,7 @@ def run_streaming(
     """
     import inspect
 
-    from .streaming import planned_batch_rows, run_available_now
+    from .streaming import probe_batch_rows, run_available_now
 
     try:
         sink_takes_batch_id = (
@@ -348,8 +348,7 @@ def run_streaming(
         # emptied by caller-side transforms would run the main branch on
         # an empty frame — same resulting state (merge_state filters
         # expired rows itself), plus one empty sink append.
-        rows = planned_batch_rows(checkpoint_dir, batch_id)
-        if rows == 0 or (rows is None and batch_df.isEmpty()):
+        if probe_batch_rows(batch_df, checkpoint_dir, batch_id) == 0:
             state = state_mod.load_state(spark, config.state_dir, spec.name)
             if state is not None:
                 now = state_mod.now_ms() if now_b is None else now_b

@@ -2242,7 +2242,7 @@ def q_training_data_prep(spark: SparkSession, sf: str) -> DataFrame:
     FROM batched d JOIN kept k ON k.doc_id = d.doc_id
     """,
     doc="Continuous near-dup training-data ingest, end to end "
-    "(ext/prep.run_streaming_neardup_prep, method='exact'): the corpus "
+    "(ext/prep.run_streaming_neardup_prep, exact shingle state): the corpus "
     "arrives as 3 file-source micro-batches; each batch cleans, "
     "quality-gates, and near-dup-dedups against the PERSISTENT shingle "
     "inverted-index state (cross-batch — a paraphrased re-send of any "

@@ -477,6 +477,22 @@ def planned_batch_rows(checkpoint_dir: str, batch_id: int) -> int | None:
     return total
 
 
+def probe_batch_rows(
+    batch_df: DataFrame, checkpoint_dir: str, batch_id: int
+) -> int | None:
+    """The empty-batch probe every ``foreachBatch`` callback runs first:
+    0 when the batch is empty (the callback returns), else its planned
+    row count for :func:`spread_batch`, or None when the count is
+    unknowable. :func:`planned_batch_rows` answers with zero jobs; when
+    it cannot, ``isEmpty()`` decides (one job). It is looked up as this
+    module's global at call time, so patching
+    ``streaming.planned_batch_rows`` reaches every callback."""
+    rows = planned_batch_rows(checkpoint_dir, batch_id)
+    if rows is None and batch_df.isEmpty():
+        return 0
+    return rows
+
+
 # Rows per partition when spreading a landed micro-batch: small enough
 # that test-scale batches (thousands of docs) still parallelize the
 # per-doc heavy work, large enough that a task amortizes its ~5-15 ms
@@ -545,8 +561,8 @@ def run_slot_stream(
     reset_state_slots_if_fresh_checkpoint(checkpoint_dir, state_dir)
 
     def process(batch_df, batch_id: int) -> None:
-        rows = planned_batch_rows(checkpoint_dir, batch_id)
-        if rows == 0 or (rows is None and batch_df.isEmpty()):
+        rows = probe_batch_rows(batch_df, checkpoint_dir, batch_id)
+        if rows == 0:
             return
         # a landed file / page arrives as ONE input partition; spread the
         # per-row heavy work (tokenize / signature fold / scoring) or all

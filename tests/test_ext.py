@@ -451,6 +451,41 @@ def test_prefix_filter_pairs_sf_corpus_equality(spark):
 
 
 # ------------------------------------- exact incremental near-dup (r6)
+def neardup_empty_state(spark):
+    """The empty ``(doc_shingles, doc_sizes)`` frames of a first increment
+    (long doc ids)."""
+    from pyspark.sql import types as T
+
+    from entity_etl_spark.ext.dedup import neardup_state_schemas
+
+    return tuple(
+        spark.createDataFrame([], schema)
+        for schema in neardup_state_schemas(T.LongType())
+    )
+
+
+def neardup_seed(spark, corpus):
+    """The two state tables after running ``corpus`` as the first
+    increment."""
+    from entity_etl_spark.ext.dedup import exact_neardup_dedup_incremental
+
+    _, shingles, sizes = exact_neardup_dedup_incremental(
+        corpus, *neardup_empty_state(spark)
+    )
+    return shingles, sizes
+
+
+def py_shingles(text, k=3):
+    """Distinct k-word shingles, computed in plain Python (the reference
+    for the operator's deltas)."""
+    toks = text.lower().split()
+    return {" ".join(toks[i:i + k]) for i in range(len(toks) - k + 1)}
+
+
+def kept_ids(kept):
+    return sorted(r["doc_id"] for r in kept.collect())
+
+
 def test_exact_neardup_incremental_policy_and_state(spark):
     from entity_etl_spark.ext.dedup import exact_neardup_dedup_incremental
 
@@ -458,6 +493,7 @@ def test_exact_neardup_incremental_policy_and_state(spark):
         [(1, "the quick brown fox jumps over the lazy dog near the bank")],
         ["doc_id", "text"],
     )
+    shingles, sizes = neardup_seed(spark, corpus)
     batch = spark.createDataFrame(
         [
             # near-dup of corpus doc 1 -> dropped
@@ -469,18 +505,21 @@ def test_exact_neardup_incremental_policy_and_state(spark):
         ],
         ["doc_id", "text"],
     )
-    kept, state = exact_neardup_dedup_incremental(corpus, batch)
-    assert sorted(r["doc_id"] for r in kept.collect()) == [11]
-    # state = corpus shingles + survivors' shingles only
-    state_docs = sorted(
-        r["doc"] for r in state.select("doc").distinct().collect()
+    kept, sh_delta, n_delta = exact_neardup_dedup_incremental(
+        batch, shingles, sizes
     )
-    assert state_docs == [1, 11]
+    assert kept_ids(kept) == [11]
+    # the deltas are the survivors' rows only
+    assert sorted(r["doc"] for r in sh_delta.select("doc").distinct().collect()) == [11]
+    assert [tuple(r) for r in n_delta.collect()] == [(11, 6)]
+    shingles = shingles.unionByName(sh_delta)
+    sizes = sizes.unionByName(n_delta)
+    assert sorted(r["doc"] for r in sizes.collect()) == [1, 11]
 
-    # increment 2 against the PERSISTED state, duplicated rows simulating
-    # an at-least-once replayed append — dedup on load must keep counts
-    # exact (duplicated shingles would corrupt the intersection math)
-    state2 = state.unionByName(state)  # worst-case full duplication
+    # increment 2 against the accumulated state, every row of BOTH tables
+    # duplicated as an at-least-once replayed append leaves them — dedup
+    # on load must keep counts exact (duplicated shingles would corrupt
+    # the intersection math)
     batch2 = spark.createDataFrame(
         [
             # near-dup of KEPT doc 11 -> dropped via state, not bodies
@@ -489,14 +528,12 @@ def test_exact_neardup_incremental_policy_and_state(spark):
         ],
         ["doc_id", "text"],
     )
-    empty = spark.createDataFrame([], "doc_id long, text string")
-    kept2, state3 = exact_neardup_dedup_incremental(
-        empty, batch2, corpus_shingles=state2, new_shingles_only=True
+    kept2, sh_delta2, n_delta2 = exact_neardup_dedup_incremental(
+        batch2, shingles.unionByName(shingles), sizes.unionByName(sizes)
     )
-    assert sorted(r["doc_id"] for r in kept2.collect()) == [21]
-    assert sorted(
-        r["doc"] for r in state3.select("doc").distinct().collect()
-    ) == [21]
+    assert kept_ids(kept2) == [21]
+    assert sorted(r["doc"] for r in sh_delta2.select("doc").distinct().collect()) == [21]
+    assert [tuple(r) for r in n_delta2.collect()] == [(21, 8)]
 
 
 def test_exact_neardup_incremental_matches_batch_policy_on_sf(spark):
@@ -513,17 +550,18 @@ def test_exact_neardup_incremental_matches_batch_policy_on_sf(spark):
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     n = docs.count()
-    empty = docs.limit(0).select("doc_id", "text")
-    state = None
+    shingles, sizes = neardup_empty_state(spark)
     kept_all = []
     for b in range(3):
         batch = docs.filter(
             (F.col("doc_id") * 3 / n >= b) & (F.col("doc_id") * 3 / n < b + 1)
         ).select("doc_id", "text")
-        kept, state = exact_neardup_dedup_incremental(
-            empty, batch, corpus_shingles=state
+        kept, sh_delta, n_delta = exact_neardup_dedup_incremental(
+            batch, shingles, sizes
         )
         kept_all += [r["doc_id"] for r in kept.collect()]
+        shingles = shingles.unionByName(sh_delta)
+        sizes = sizes.unionByName(n_delta)
     batch_kept = [
         r["doc_id"]
         for r in drop_near_dups(docs, "doc_id", "text").select("doc_id").collect()
@@ -661,162 +699,205 @@ def test_exact_neardup_incremental_replayed_batch_docs_in_state(spark):
     # is why this fixture pins the asymmetric case.
     from entity_etl_spark.ext.dedup import exact_neardup_dedup_incremental
 
-    empty = spark.createDataFrame([], "doc_id long, text string")
     doc5 = (5, "a b c d e f g h")       # shingles: abc bcd cde def efg fgh
     doc6 = (6, "d e f g h p q r")       # shares exactly {def, efg, fgh}
     inc1 = spark.createDataFrame([doc5], ["doc_id", "text"])
-    kept1, state = exact_neardup_dedup_incremental(empty, inc1)
-    assert [r["doc_id"] for r in kept1.collect()] == [5]
+    kept1, shingles, sizes = exact_neardup_dedup_incremental(
+        inc1, *neardup_empty_state(spark)
+    )
+    assert kept_ids(kept1) == [5]
 
     inc2 = spark.createDataFrame([doc5, doc6], ["doc_id", "text"])
-    kept2, _ = exact_neardup_dedup_incremental(
-        empty, inc2, corpus_shingles=state
-    )
+    kept2, _, _ = exact_neardup_dedup_incremental(inc2, shingles, sizes)
     # doc 6 is NOT a near-dup of doc 5 (J = 0.333 < 0.5): it must be
     # kept, redelivery of doc 5 notwithstanding
-    assert sorted(r["doc_id"] for r in kept2.collect()) == [5, 6]
+    assert kept_ids(kept2) == [5, 6]
 
 
-def test_exact_neardup_incremental_mixed_schema_state_dir(spark):
-    """A pre-r11 (doc, sh) state dir that later received (doc, sh, n)
-    appends loads as 3-col with n NULL on the legacy rows (plain schema
-    inference picks one footer). The op must re-derive those docs'
-    sizes — a NULL n makes the Jaccard predicate NULL and silently KEEPS
-    every near-dup of a legacy corpus doc (r11 review finding)."""
-    from entity_etl_spark.ext.dedup import (
-        _shingle_rows_with_size,
-        exact_neardup_dedup_incremental,
-    )
-
-    corpus = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog near the bank"),
-            (2, "completely different content about spark query engines ok"),
-        ],
-        ["doc_id", "text"],
-    )
-    state = _shingle_rows_with_size(corpus, "doc_id", "text", 3)
-    # doc 1 = legacy rows (n NULL, as a mixed-dir load yields); doc 2 =
-    # post-upgrade rows (n present)
-    mixed = state.withColumn(
-        "n", F.when(F.col("doc") == 1, F.lit(None)).otherwise(F.col("n"))
-    )
-    batch = spark.createDataFrame(
-        [
-            # near-dup of LEGACY doc 1 -> must drop (NULL-n bug kept it)
-            (10, "the quick brown fox jumps over the lazy dog near the bend"),
-            # near-dup of upgraded doc 2 -> drops either way
-            (11, "completely different content about spark query engines no"),
-            (12, "a wholly novel sentence with nothing shared at all here"),
-        ],
-        ["doc_id", "text"],
-    )
-    empty = spark.createDataFrame([], "doc_id long, text string")
-    kept, _ = exact_neardup_dedup_incremental(
-        empty, batch, corpus_shingles=mixed, new_shingles_only=True
-    )
-    assert sorted(r["doc_id"] for r in kept.collect()) == [12]
-
-    # legacy (no n column at all) + replay-duplicated rows: sizes must
-    # come from the DEDUPED rows (duplicated counts would halve every
-    # Jaccard and wrongly keep near-dups)
-    legacy = state.drop("n")
-    dup = legacy.unionByName(legacy)
-    kept2, _ = exact_neardup_dedup_incremental(
-        empty, batch, corpus_shingles=dup, new_shingles_only=True
-    )
-    assert sorted(r["doc_id"] for r in kept2.collect()) == [12]
+NEARDUP_CORPUS = [
+    (1, "the quick brown fox jumps over the lazy dog near the bank"),
+    (2, "completely different content about spark query engines ok"),
+]
+NEARDUP_BATCH = [
+    # near-dup of corpus doc 1 -> drops
+    (10, "the quick brown fox jumps over the lazy dog near the bend"),
+    # near-dup of corpus doc 2 -> drops
+    (11, "completely different content about spark query engines no"),
+    (12, "a wholly novel sentence with nothing shared at all here"),
+]
 
 
 def test_exact_neardup_incremental_two_table_state(spark):
-    """r12 two-table state: narrow (doc, sh) + (doc, n) sizes must give
-    the same kept set and delta as the single-table (doc, sh, n) layout,
-    including under replay-duplicated rows in EITHER table and a
-    replayed batch whose docs already sit in both tables."""
+    """Replay cases of the two-table state, against fixed expected kept
+    sets and deltas: rows duplicated in either table or both (a crashed
+    append persisted twice) and a batch doc (2) that already sits in
+    both tables (a redelivered batch)."""
     from entity_etl_spark.ext.dedup import exact_neardup_dedup_incremental
 
-    empty = spark.createDataFrame([], "doc_id long, text string")
-    corpus = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog near the bank"),
-            (2, "completely different content about spark query engines ok"),
-        ],
-        ["doc_id", "text"],
+    # 5 and 13 share 3 of their 6 shingles: J = 3/9, kept — but 6/6 once
+    # 5's shingles count twice
+    doc5, doc13 = (5, "a b c d e f g h"), (13, "d e f g h p q r")
+    corpus = NEARDUP_CORPUS + [doc5]
+    texts = dict(corpus + NEARDUP_BATCH + [doc13])
+    shingles, sizes = neardup_seed(
+        spark, spark.createDataFrame(corpus, ["doc_id", "text"])
     )
-    _, state = exact_neardup_dedup_incremental(empty, corpus)
     batch = spark.createDataFrame(
-        [
-            (2, "completely different content about spark query engines ok"),
-            (10, "the quick brown fox jumps over the lazy dog near the bend"),
-            (11, "completely different content about spark query engines no"),
-            (12, "a wholly novel sentence with nothing shared at all here"),
-        ],
-        ["doc_id", "text"],
+        [NEARDUP_CORPUS[1]] + NEARDUP_BATCH + [doc13], ["doc_id", "text"]
     )
-    kept_single, delta_single = exact_neardup_dedup_incremental(
-        empty, batch, corpus_shingles=state, new_shingles_only=True
-    )
-    # two-table: same state split into narrow shingles + sizes, each
-    # with worst-case full replay duplication
-    narrow = state.select("doc", "sh")
-    sizes = state.select("doc", "n").dropDuplicates(["doc"])
-    kept_two, delta_two = exact_neardup_dedup_incremental(
-        empty,
-        batch,
-        corpus_shingles=narrow.unionByName(narrow),
-        corpus_sizes=sizes.unionByName(sizes),
-        new_shingles_only=True,
-    )
-    assert sorted(r["doc_id"] for r in kept_two.collect()) == sorted(
-        r["doc_id"] for r in kept_single.collect()
-    )
-    assert sorted(
-        (r["doc"], r["sh"], r["n"]) for r in delta_two.collect()
-    ) == sorted((r["doc"], r["sh"], r["n"]) for r in delta_single.collect())
-    # full-state return keeps the (doc, sh, n) shape in two-table mode
-    _, full = exact_neardup_dedup_incremental(
-        empty, batch, corpus_shingles=narrow, corpus_sizes=sizes
-    )
-    assert set(full.columns) == {"doc", "sh", "n"}
+    for dup_sh, dup_n in ((True, False), (False, True), (True, True)):
+        kept, sh_delta, n_delta = exact_neardup_dedup_incremental(
+            batch,
+            shingles.unionByName(shingles) if dup_sh else shingles,
+            sizes.unionByName(sizes) if dup_n else sizes,
+        )
+        # 2 is re-evaluated as a batch doc (kept: nothing older matches
+        # it); 11 is now its smaller-id batch sibling's near-dup
+        assert kept_ids(kept) == [2, 12, 13]
+        assert sorted(tuple(r) for r in sh_delta.collect()) == sorted(
+            (d, sh) for d in (2, 12, 13) for sh in py_shingles(texts[d])
+        )
+        assert sorted(tuple(r) for r in n_delta.collect()) == [
+            (2, 6), (12, 8), (13, 6)
+        ]
 
 
-def test_exact_neardup_incremental_heterogeneous_mixed_doc(spark):
-    """A doc with state rows in BOTH layouts (a batch replayed across
-    the layout upgrade): after dedup its rows are an arbitrary
-    null/non-null n mix. Counting only the null subset understates n and
-    OVERSTATES Jaccard (the r11 repair's blind spot, r11 ADVICE) — the
-    repair must recount over ALL of the doc's deduped rows."""
-    from pyspark.sql import functions as F
+LEGACY = "doc long, sh string"
+SINGLE_TABLE = "doc long, sh string, n int"
+
+
+def write_old_layout(spark, state_dir, parts):
+    """Write a pre-two-table ``doc_shingles`` table: each part is one
+    append of ``(rows, schema)``, in order."""
+    from entity_etl_spark.state import append_state
+
+    for rows, schema in parts:
+        append_state(
+            spark.createDataFrame(rows, schema), state_dir, "doc_shingles"
+        )
+
+
+def shingle_rows(docs):
+    return [(d, sh) for d, text in docs for sh in sorted(py_shingles(text))]
+
+
+def migrate_and_dedup(spark, state_dir, batch_rows):
+    """Loading the old layout raises the error naming the migration; after
+    it, the op runs on the migrated state. Returns (kept ids, sizes)."""
+    from pyspark.sql import types as T
 
     from entity_etl_spark.ext.dedup import (
-        _shingle_rows_with_size,
         exact_neardup_dedup_incremental,
+        load_neardup_state,
+        migrate_neardup_state,
     )
 
-    corpus = spark.createDataFrame(
-        [(5, "a b c d e f g h")], ["doc_id", "text"]  # 6 distinct shingles
+    with pytest.raises(ValueError, match=r"migrate_neardup_state\(spark, state_dir\)"):
+        load_neardup_state(spark, state_dir, T.LongType())
+    migrate_neardup_state(spark, state_dir)
+    shingles, sizes = load_neardup_state(spark, state_dir, T.LongType())
+    kept, _, _ = exact_neardup_dedup_incremental(
+        spark.createDataFrame(batch_rows, ["doc_id", "text"]), shingles, sizes
     )
-    rows = _shingle_rows_with_size(corpus, "doc_id", "text", 3)
-    # exactly the 3 SHARED shingles carry NULL n (the pre-upgrade rows
-    # the (doc, sh) dedup kept), the other 3 carry n=6: the null-subset
-    # recount then reads n=3, and every pair row that matters carries
-    # the undercounted value — J = 3/(3 + 6 - 3) = 0.5 >= 0.5, the
-    # wrong drop (doc 6's true J is 3/9). Pinned deterministic so the
-    # broken repair ALWAYS fails, not only when a hash cooperates.
-    shared = ("d e f", "e f g", "f g h")
-    mixed = rows.withColumn(
-        "n",
-        F.when(
-            F.col("sh").isin(*shared),
-            F.lit(None).cast(rows.schema["n"].dataType),
-        ).otherwise(F.col("n")),
+    return kept_ids(kept), sorted(tuple(r) for r in sizes.collect())
+
+
+def test_exact_neardup_incremental_mixed_schema_state_dir(spark, tmp_path):
+    """Every pre-two-table layout refuses to load, then migrates to sizes
+    recounted over the deduplicated (doc, sh) rows: the single-table
+    (doc, sh, n) layout; the legacy (doc, sh) layout with
+    replay-duplicated rows (a count over the raw rows would double n and
+    wrongly keep near-dups); and a mixed dir, legacy files for doc 1
+    with (doc, sh, n) appends for doc 2 (it loaded with n NULL on doc
+    1's rows, whose NULL Jaccard silently KEPT every near-dup of doc
+    1)."""
+    rows = shingle_rows(NEARDUP_CORPUS)
+    n = {d: len(py_shingles(t)) for d, t in NEARDUP_CORPUS}
+    wide = [(d, sh, n[d]) for d, sh in rows]
+    layouts = {
+        "single_table": [(wide, SINGLE_TABLE)],
+        "legacy_replayed": [(rows, LEGACY), (rows, LEGACY)],
+        "mixed": [
+            ([r for r in rows if r[0] == 1], LEGACY),
+            ([r for r in wide if r[0] == 2], SINGLE_TABLE),
+        ],
+    }
+    for layout, parts in layouts.items():
+        state_dir = str(tmp_path / layout)
+        write_old_layout(spark, state_dir, parts)
+        kept, sizes = migrate_and_dedup(spark, state_dir, NEARDUP_BATCH)
+        assert kept == [12], layout
+        assert sizes == [(1, 10), (2, 6)], layout
+
+
+def test_exact_neardup_incremental_heterogeneous_mixed_doc(spark, tmp_path):
+    """A doc with state rows in BOTH old layouts (a batch replayed across
+    the layout upgrade): counting only its legacy rows understates n and
+    OVERSTATES Jaccard (the r11 repair's blind spot) — the migration
+    must count ALL of the doc's deduplicated rows."""
+    doc5 = (5, "a b c d e f g h")  # 6 distinct shingles
+    rows = shingle_rows([doc5])
+    shared = {"d e f", "e f g", "f g h"}
+    # the 3 SHARED shingles in a legacy file, all 6 rows in a (doc, sh,
+    # n) append: a legacy-subset recount reads n=3, and J(5, 6) =
+    # 3/(3 + 6 - 3) = 0.5, the wrong drop (doc 6's true J is 3/9)
+    parts = [
+        ([r for r in rows if r[1] in shared], LEGACY),
+        ([(d, sh, 6) for d, sh in rows], SINGLE_TABLE),
+    ]
+    state_dir = str(tmp_path / "state")
+    write_old_layout(spark, state_dir, parts)
+    kept, sizes = migrate_and_dedup(spark, state_dir, [(6, "d e f g h p q r")])
+    assert kept == [6]
+    assert sizes == [(5, 6)]
+
+
+def test_streaming_neardup_prep_refuses_old_layout(spark, tmp_path):
+    """The streaming runner checks the layout before its stream starts."""
+    from entity_etl_spark.ext.prep import run_streaming_neardup_prep
+
+    state_dir = str(tmp_path / "state")
+    write_old_layout(spark, state_dir, [(shingle_rows(NEARDUP_CORPUS), LEGACY)])
+    (tmp_path / "src").mkdir()
+    stream = spark.readStream.schema(
+        "doc_id long, text string, source string"
+    ).parquet(str(tmp_path / "src"))
+    with pytest.raises(ValueError, match="migrate_neardup_state"):
+        run_streaming_neardup_prep(
+            spark, stream, str(tmp_path / "out"), state_dir, str(tmp_path / "ckpt")
+        )
+    assert not (tmp_path / "ckpt").exists()
+
+
+def test_append_neardup_state_writes_sizes_first(spark, tmp_path, monkeypatch):
+    """Sizes are appended before shingles, so a crash between the two
+    appends can never leave shingle rows without their size row (whose
+    pairs the scoring join would silently drop); a fresh dir that holds
+    only sizes then still loads."""
+    from pyspark.sql import types as T
+
+    from entity_etl_spark import state as state_mod
+    from entity_etl_spark.ext.dedup import (
+        append_neardup_state,
+        load_neardup_state,
     )
-    assert mixed.filter(F.col("n").isNull()).count() == 3
-    batch = spark.createDataFrame(
-        [(6, "d e f g h p q r")], ["doc_id", "text"]
+
+    shingles, sizes = neardup_seed(
+        spark, spark.createDataFrame(NEARDUP_CORPUS, ["doc_id", "text"])
     )
-    empty = spark.createDataFrame([], "doc_id long, text string")
-    kept, _ = exact_neardup_dedup_incremental(
-        empty, batch, corpus_shingles=mixed, new_shingles_only=True
-    )
-    assert sorted(r["doc_id"] for r in kept.collect()) == [6]
+    state_dir = str(tmp_path / "state")
+    written = []
+    append = state_mod.append_state
+
+    def crash_after_first(rows, d, table):
+        if written:
+            raise RuntimeError("crash between the appends")
+        written.append(table)
+        append(rows, d, table)
+
+    monkeypatch.setattr(state_mod, "append_state", crash_after_first)
+    with pytest.raises(RuntimeError):
+        append_neardup_state(state_dir, shingles, sizes)
+    assert written == ["doc_sizes"]
+    loaded_sh, loaded_n = load_neardup_state(spark, state_dir, T.LongType())
+    assert loaded_sh.count() == 0 and loaded_n.count() == 2

@@ -270,8 +270,8 @@ def test_stream_static_broadcast_enrichment(spark, tmp_path):
 def test_run_streaming_neardup_prep_drops_paraphrased_resend(spark, tmp_path):
     """Near-dup streaming ingest: batch 2 re-sends batch 1's surviving
     content with a small tail edit — byte-UNidentical, so fingerprint
-    state would admit it; the MinHash signature state drops it. A
-    genuinely new doc still lands."""
+    state would admit it; the exact shingle state drops it. A genuinely
+    new doc still lands."""
     from entity_etl_spark.ext.prep import run_streaming_neardup_prep
     from entity_etl_spark.streaming import stream_source
 
@@ -311,7 +311,80 @@ def test_run_streaming_neardup_prep_drops_paraphrased_resend(spark, tmp_path):
     write_docs([(10, good + "extra tail words", "sa"), (11, fresh, "sb")], 2)
     run()
     got = {r.doc_id for r in spark.read.parquet(out).collect()}
-    assert got == {1, 11}  # 10 suppressed by SIGNATURE state, not bytes
+    assert got == {1, 11}  # 10 suppressed by SHINGLE state, not bytes
+
+
+# Spark jobs of one warm run_streaming_neardup_prep micro-batch (a
+# one-file batch over a non-empty state, some survivors) on the fixture
+# below: the clean + quality-gate pin 2, the shingle pin 1, the losers
+# pin 10 (pair join, aggregation, size joins and distinct), the
+# survivors' delta pin 2 (losers broadcast, checkpoint), the split
+# output write 4, and one write per state append (sizes, shingles) 2.
+# Loading the state and probing the batch run none.
+WARM_NEARDUP_BATCH_JOBS = 21
+
+
+def test_warm_neardup_batch_runs_the_job_budget(spark, tmp_path):
+    """Counted with the DAG scheduler's job counter: the micro-batch runs
+    on the stream's own thread, which a job group set here misses."""
+    import random
+
+    from entity_etl_spark.ext.prep import run_streaming_neardup_prep
+
+    src = str(tmp_path / "src")
+    schema = "doc_id long, text string, source string"
+    words = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
+             "lambda mu nu xi omicron pi rho sigma tau upsilon").split()
+
+    def doc(seed, edit):
+        r = random.Random(seed)
+        toks = [r.choice(words) if t % 3 else "the" for t in range(40)]
+        toks[-1 - edit] = "edit"
+        return " ".join(toks)
+
+    def land(n, ids):
+        rows = [(i, doc(i % 40, i % 7), f"s{i % 4}") for i in ids]
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
+            f"{src}/f{n}"
+        )
+
+    sc = spark.sparkContext._jsc.sc()
+
+    def drain():
+        j0 = sc.dagScheduler().numTotalJobs()
+        run_streaming_neardup_prep(
+            spark,
+            spark.readStream.schema(schema).parquet(f"{src}/f*"),
+            str(tmp_path / "out"),
+            str(tmp_path / "state"),
+            str(tmp_path / "ckpt"),
+        )
+        return sc.dagScheduler().numTotalJobs() - j0
+
+    land(1, range(1, 30))
+    drain()
+    # 30-40 are new docs, 41-69 one-word edits of batch 1's 1-29
+    land(2, range(30, 70))
+    assert drain() == WARM_NEARDUP_BATCH_JOBS
+    kept = {r.doc_id for r in spark.read.parquet(str(tmp_path / "out")).collect()}
+    assert kept == set(range(1, 41))
+
+
+def test_probe_batch_rows(spark, tmp_path, monkeypatch):
+    """One empty-batch probe: 0 means skip the batch. The planned count
+    comes from the module-level planned_batch_rows (so a patched probe
+    applies); when it cannot tell, isEmpty() decides."""
+    from entity_etl_spark import streaming
+
+    df = spark.createDataFrame([(1,)], "id long")
+    ckpt = str(tmp_path / "no_ckpt")
+    # no checkpoint layout: the planned count is unknowable
+    assert streaming.probe_batch_rows(df, ckpt, 0) is None
+    assert streaming.probe_batch_rows(df.limit(0), ckpt, 0) == 0
+    monkeypatch.setattr(streaming, "planned_batch_rows", lambda c, b: 0)
+    assert streaming.probe_batch_rows(df, ckpt, 0) == 0
+    monkeypatch.setattr(streaming, "planned_batch_rows", lambda c, b: 7)
+    assert streaming.probe_batch_rows(df.limit(0), ckpt, 0) == 7
 
 
 def test_drop_duplicates_within_watermark(spark, tmp_path):
