@@ -85,21 +85,36 @@ def nonempty_tokens(text_col: str | Column) -> Column:
 
 
 def shingles(text_col: str | Column, k: int = 3) -> Column:
-    """Distinct k-word shingles of a text column, as array<string>.
-    Whole-stage-codegen'd (transform over split); no UDF."""
-    toks = tokens(text_col)
-    n = F.size(toks)
-    # guard: sequence(1, 0) would generate a DESCENDING [1, 0] and slice()
-    # rejects start index 0 — short texts get an empty shingle set instead
-    return F.when(
-        n >= k,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), n - (k - 1)),
-                lambda i: F.array_join(F.slice(toks, i, k), " "),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    """Distinct k-word shingles of a text column, as array<string>, in
+    first-occurrence order; texts with fewer than ``k`` tokens get [].
+
+    Higher-order functions run interpreted, and a lambda re-evaluates
+    every non-lambda expression it captures once per element. So no
+    lambda here captures the tokenization: the token array is bound to
+    the outer lambda's variable (a one-element ``transform``), split runs
+    once per row, and the shingles come from zipping the ``k`` shifted
+    views of that variable, which is linear in the document's length."""
+
+    def from_tokens(toks: Column) -> Column:
+        n = F.size(toks)
+        # view j holds the tokens at j, j+1, ..., j+n-k; the length is
+        # clamped because slice() rejects a negative one (short texts take
+        # the otherwise() branch)
+        views = [
+            F.slice(toks, j + 1, F.greatest(n - (k - 1), F.lit(1)))
+            for j in range(k)
+        ]
+        return F.when(
+            n >= k,
+            F.array_distinct(
+                F.transform(
+                    F.arrays_zip(*views),
+                    lambda s: F.concat_ws(" ", *(s[str(j)] for j in range(k))),
+                )
+            ),
+        ).otherwise(F.array().cast("array<string>"))
+
+    return F.transform(F.array(tokens(text_col)), from_tokens)[0]
 
 
 def _spread_input(df: DataFrame) -> DataFrame:
@@ -135,29 +150,32 @@ def _shingle_rows_with_size(
     ``(doc, n)`` row per doc, selected map-side instead of by a per-doc
     dedup shuffle.
 
-    Shape matters (measured, r11): materializing the shingle array in
-    its own Project before the Generate — the natural two-select form —
-    ran ~10x slower at sf0.1 than explode-with-the-expression-inside-
-    the-Generate (the higher-order ``transform`` expression is
-    codegen-incompatible, and an interpreted Project materializing the
-    array across a codegen boundary is far costlier than the Generate
-    evaluating the same expression in place). So both the element and
-    the size ride ONE generator expression:
-    ``arrays_zip(shs, array_repeat(size(shs), size(shs)))`` — the
-    per-ROW triple evaluation of ``shingles()`` is noise next to the
-    per-ELEMENT work (and next to the 10x Project penalty), and no
-    expensive expression ever sits beside the generator in a select
-    (the kmeans_lloyd ~17x per-element trap, pinned in
-    tests/test_plans.py)."""
-    shs = shingles(text_col, k)
+    Shape: ``shingles()`` is evaluated once per row, in its own Project
+    below the Generate, and both the element and the size ride ONE
+    generator expression over that column,
+    ``arrays_zip(__shs, array_repeat(size(__shs), size(__shs)))``. The
+    generator's input must stay an expression: over a bare column the
+    optimizer infers ``size(__shs) > 0 AND isnotnull(__shs)`` and pushes
+    that filter below the Project, inlining ``shingles()`` twice more per
+    row, as does the form with the whole ``shingles()`` expression inside
+    the generator. On 800 docs of 60 tokens (k=3, 4 cores) this shape
+    takes ~115 ms of executor CPU against ~270 ms for the inline one, and
+    sf0.1 ``streaming_neardup_prep`` ran 10.7 s against 12.3 s. No
+    expensive expression sits beside the generator in a select (the
+    kmeans_lloyd ~17x per-element trap, pinned in tests/test_plans.py)."""
+    shs = F.col("__shs")
     z = F.arrays_zip(shs, F.array_repeat(F.size(shs), F.size(shs)))
-    return df.select(
-        F.col(id_col).alias("doc"), F.posexplode(z).alias("__pos", "__z")
-    ).select(
-        "doc",
-        F.col("__z")["0"].alias("sh"),
-        F.col("__z")["1"].alias("n"),
-        "__pos",
+    return (
+        df.select(
+            F.col(id_col).alias("doc"), shingles(text_col, k).alias("__shs")
+        )
+        .select("doc", F.posexplode(z).alias("__pos", "__z"))
+        .select(
+            "doc",
+            F.col("__z")["__shs"].alias("sh"),
+            F.col("__z")["1"].alias("n"),
+            "__pos",
+        )
     )
 
 

@@ -418,60 +418,88 @@ def require_local_state_paths(*paths: str) -> None:
             )
 
 
+def _file_source_log_offset(checkpoint_dir: str, batch_id: int) -> int | None:
+    """The ``logOffset`` that ``offsets/<batch_id>`` records for a
+    single file source, or None when the entry is missing or its one
+    source offset is not a file source's ``{"logOffset": N}`` (Kafka,
+    Python DataSources and several sources all record something else).
+    The offset log is ``v1``, one metadata line, then one line per
+    source."""
+    import json
+    import os
+
+    try:
+        with open(os.path.join(checkpoint_dir, "offsets", str(batch_id)),
+                  encoding="utf-8") as fh:
+            lines = [ln.strip() for ln in fh if ln.strip()]
+        offsets = [json.loads(ln) for ln in lines[2:]]
+    except (OSError, ValueError):
+        return None
+    if len(offsets) != 1 or not isinstance(offsets[0], dict):
+        return None
+    if set(offsets[0]) != {"logOffset"}:
+        return None
+    n = offsets[0]["logOffset"]
+    return n if isinstance(n, int) else None
+
+
 def planned_batch_rows(checkpoint_dir: str, batch_id: int) -> int | None:
     """Exact planned input-row count of micro-batch ``batch_id`` of a
-    SINGLE-file-source stream, read from the checkpoint's file-source log
-    plus the listed files' parquet footers — ZERO Spark jobs (the
-    foreachBatch frame itself is a ``LogicalRDD`` and exposes nothing).
+    SINGLE-file-source stream, read from the checkpoint's offset and
+    file-source logs plus the listed files' parquet footers — ZERO Spark
+    jobs (the foreachBatch frame itself is a ``LogicalRDD`` and exposes
+    nothing).
 
-    The file source writes ``checkpoint/sources/0/<batch_id>`` (JSON
-    lines of the files planned into that batch) BEFORE the batch runs,
-    so during ``foreachBatch`` the entry is authoritative; every
-    ``compactInterval``-th batch the entry is ``<batch_id>.compact``
-    carrying all prior entries tagged with their batchId. A batch with
-    neither entry planned no new files (a timer-only / zero-input
-    batch): 0 rows. Returns None — callers fall back to ``isEmpty()`` —
-    when the checkpoint is not a local single-file-source layout or a
-    listed file is not locally readable parquet."""
-    import json as _json
+    The file source's log is indexed by its own ``logOffset``, not by
+    the batch id: it advances only when a batch plans new files, while
+    batch ids also advance on no-data batches. Both logs are written
+    BEFORE the batch runs, so during ``foreachBatch`` they are
+    authoritative: the batch read the log entries after the previous
+    batch's ``logOffset`` up to its own (``offsets/<batch_id>``), and
+    every ``compactInterval``-th entry is ``<log_id>.compact``, carrying
+    all prior entries tagged with their batchId. The count is 0 only
+    when the previous batch recorded the same ``logOffset`` (a
+    timer-only / zero-input batch). Anything unproven returns None —
+    callers fall back to ``isEmpty()``: a source that is not a file
+    source (Kafka, the rest_entities DataSource), several sources, a
+    missing offset or log entry, or a listed file that is not locally
+    readable parquet."""
+    import json
     import os
     from urllib.parse import unquote, urlparse
 
-    src_root = os.path.join(checkpoint_dir, "sources")
-    try:
-        subs = [d for d in os.listdir(src_root) if not d.startswith(".")]
-    except OSError:
+    end = _file_source_log_offset(checkpoint_dir, batch_id)
+    start = -1 if batch_id == 0 else _file_source_log_offset(
+        checkpoint_dir, batch_id - 1
+    )
+    if end is None or start is None or start > end:
         return None
-    if subs != ["0"]:
-        return None  # zero or several sources: rows not attributable
-    sdir = os.path.join(src_root, "0")
-    entry = os.path.join(sdir, str(batch_id))
-    compact = entry + ".compact"
-    if os.path.exists(entry):
-        path, only_batch = entry, None
-    elif os.path.exists(compact):
-        path, only_batch = compact, int(batch_id)
-    else:
-        return 0  # no entry = the batch planned no new files
+    sdir = os.path.join(checkpoint_dir, "sources", "0")
     total = 0
     try:
         import pyarrow.parquet as _pq
 
-        with open(path, encoding="utf-8") as fh:
-            for line in fh:
-                line = line.strip()
-                if not line or not line.startswith("{"):
-                    continue  # version header
-                rec = _json.loads(line)
-                if only_batch is not None and rec.get("batchId") != only_batch:
-                    continue
-                p = rec["path"]
-                if "://" in p:
-                    u = urlparse(p)
-                    if u.scheme != "file":
-                        return None
-                    p = unquote(u.path)
-                total += _pq.ParquetFile(p).metadata.num_rows
+        for log_id in range(start + 1, end + 1):
+            entry = os.path.join(sdir, str(log_id))
+            if os.path.exists(entry):
+                path, only_batch = entry, None
+            else:
+                path, only_batch = entry + ".compact", log_id
+            with open(path, encoding="utf-8") as fh:
+                for line in fh:
+                    line = line.strip()
+                    if not line or not line.startswith("{"):
+                        continue  # version header
+                    rec = json.loads(line)
+                    if only_batch is not None and rec.get("batchId") != only_batch:
+                        continue
+                    p = rec["path"]
+                    if "://" in p:
+                        u = urlparse(p)
+                        if u.scheme != "file":
+                            return None
+                        p = unquote(u.path)
+                    total += _pq.ParquetFile(p).metadata.num_rows
     except Exception:
         return None
     return total

@@ -1,6 +1,7 @@
 """Extension-operator tests (E1-E5): dedup, similarity, text, multimodal."""
 
 import math
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -43,6 +44,48 @@ def test_shingles(spark, docs):
 def test_shingles_short_text_empty(spark):
     df = spark.createDataFrame([(1, "two words")], ["doc_id", "text"])
     assert df.select(shingles("text", 3).alias("s")).first()["s"] == []
+
+
+def spark_semantics_shingles(text, k):
+    """Plain-Python transcription of ``shingles()``: Spark's ``trim``
+    strips spaces only, then ``lower``, then a split on Java's ``\\s+``
+    that keeps empty tokens (leading, trailing), then distinct k-joins in
+    first-occurrence order; null and short texts give []."""
+    if text is None:
+        return []
+    toks = re.split(r"[ \t\n\x0b\f\r]+", text.strip(" ").lower())
+    joined = [" ".join(toks[i:i + k]) for i in range(len(toks) - k + 1)]
+    return list(dict.fromkeys(joined))
+
+
+SHINGLE_EDGE_TEXTS = [
+    None,
+    "",
+    "one",
+    "two words",
+    "four words right here",
+    "five tokens make a doc",
+    "   leading spaces then words",
+    "trailing spaces after words   ",
+    "inner   space    runs  between words",
+    "\ttab led text with words",
+    "words then a tab\tand\nnewline\n",
+    "Mixed CASE Words mixed case words",
+    "a b a b a b a b c a b",
+]
+
+
+def test_shingles_match_plain_python_semantics(spark):
+    """Ordered arrays, not sets: the kernel's rewrite must keep every
+    token rule and the first-occurrence order of array_distinct."""
+    df = spark.createDataFrame(list(enumerate(SHINGLE_EDGE_TEXTS)), "i int, text string")
+    for k in (1, 2, 3, 5):
+        got = {
+            r["i"]: r["s"]
+            for r in df.select("i", shingles("text", k).alias("s")).collect()
+        }
+        for i, text in enumerate(SHINGLE_EDGE_TEXTS):
+            assert got[i] == spark_semantics_shingles(text, k), (k, text)
 
 
 def test_jaccard_pairs_finds_near_and_exact_dups(spark, docs):

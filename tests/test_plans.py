@@ -446,3 +446,44 @@ def test_round4_wave_plan_claims(spark):
     tri = plan_of(REGISTRY["triangle_count_copurchase"].fn(spark, sf))
     assert tri.count("BroadcastNestedLoopJoin") <= 2
     assert "CartesianProduct" not in tri
+
+
+def test_shingles_split_runs_outside_every_lambda(spark):
+    """Higher-order functions run interpreted, and a lambda re-evaluates
+    each non-lambda expression it captures once per element: a
+    tokenization (StringSplit) inside a LambdaFunction re-splits the
+    whole text for every shingle, quadratic per document. The analysed
+    expression of shingles() must keep the split outside every lambda."""
+    from entity_etl_spark.ext.dedup import shingles
+
+    df = spark.createDataFrame([(1, "a b c d")], "id int, text string")
+    expr = (
+        df.select(shingles("text", 3).alias("s"))
+        ._jdf.queryExecution().analyzed().projectList().apply(0)
+    )
+
+    def kinds(e, under_lambda=False):
+        name = e.getClass().getSimpleName()
+        under_lambda = under_lambda or name == "LambdaFunction"
+        yield name, under_lambda
+        kids = e.children()
+        for i in range(kids.size()):
+            yield from kinds(kids.apply(i), under_lambda)
+
+    seen = list(kinds(expr))
+    assert ("StringSplit", False) in seen
+    assert ("StringSplit", True) not in seen
+
+
+def test_shingle_rows_split_each_doc_once(spark):
+    """_shingle_rows_with_size evaluates shingles() once per row: one
+    tokenization in the optimized plan, none of it re-inlined into the
+    generator or into a filter the optimizer infers from it."""
+    from entity_etl_spark.ext.dedup import _shingle_rows_with_size
+
+    df = spark.createDataFrame([(1, "a b c d")], "id int, text string")
+    plan = (
+        _shingle_rows_with_size(df, "id", "text", 3)
+        ._jdf.queryExecution().optimizedPlan().toString()
+    )
+    assert plan.count("split(") == 1, plan

@@ -185,6 +185,51 @@ def test_streaming_pipeline_end_to_end(registered, tmp_path):
     assert got == []
 
 
+def test_probe_keeps_rest_batches_beside_a_file_source(registered, tmp_path):
+    """A file stream unioned with a rest_entities stream: the file source
+    owns sources/0, the REST source adds a second offset. A batch where
+    only the REST pages moved has no sources/0/<batch_id> entry, yet it
+    carries data, and the empty-batch probe must not skip it."""
+    from entity_etl_spark.streaming import probe_batch_rows
+
+    files, pages = tmp_path / "files", tmp_path / "pages"
+    pages.mkdir()
+    ckpt = str(tmp_path / "ckpt")
+    registered.createDataFrame([_entity(1, 10)], SCHEMA).coalesce(1).write.parquet(
+        str(files / "f0")
+    )
+    _write_page(pages / "p0.json", [_entity(2, 20)])
+    got = []
+
+    def sink(df, batch_id):
+        if probe_batch_rows(df, ckpt, batch_id) != 0:
+            got.extend(r.id for r in df.collect())
+
+    def drain():
+        stream = registered.readStream.schema(SCHEMA).parquet(
+            str(files / "f*")
+        ).unionByName(
+            registered.readStream.format("rest_entities")
+            .schema(SCHEMA)
+            .option("path", str(pages))
+            .load()
+        )
+        q = (
+            stream.writeStream.foreachBatch(sink)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        q.processAllAvailable()
+        q.stop()
+
+    drain()
+    assert sorted(got) == ["e1", "e2"]
+    got.clear()
+    _write_page(pages / "p1.json", [_entity(3, 30)])
+    drain()
+    assert got == ["e3"]
+
+
 def test_max_pages_per_trigger_backpressure(registered, tmp_path):
     """maxPagesPerTrigger=2 over 4 pages: the drain takes two micro-batches
     of exactly 2 pages' rows each; the time high-water mark stays FIXED

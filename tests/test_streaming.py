@@ -387,6 +387,80 @@ def test_probe_batch_rows(spark, tmp_path, monkeypatch):
     assert streaming.probe_batch_rows(df.limit(0), ckpt, 0) == 7
 
 
+def _write_checkpoint(ckpt, offsets, source_log):
+    """A checkpoint layout by hand: ``offsets`` maps batch id -> the one
+    source offset, ``source_log`` maps a ``sources/0`` entry name -> its
+    JSON records (the metadata line is not read by the probe)."""
+    import json
+    import os
+
+    os.makedirs(os.path.join(ckpt, "offsets"))
+    os.makedirs(os.path.join(ckpt, "sources", "0"))
+    for bid, off in offsets.items():
+        with open(os.path.join(ckpt, "offsets", str(bid)), "w") as fh:
+            fh.write('v1\n{"batchWatermarkMs":0,"batchTimestampMs":0,"conf":{}}\n')
+            fh.write(json.dumps(off) + "\n")
+    for name, recs in source_log.items():
+        with open(os.path.join(ckpt, "sources", "0", name), "w") as fh:
+            fh.write("v1\n" + "".join(json.dumps(r) + "\n" for r in recs))
+
+
+def _parquet(path, rows):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table({"id": list(range(rows))}), path)
+    return {"path": "file://" + path, "timestamp": 0, "action": "add"}
+
+
+def test_planned_batch_rows_follows_the_file_source_log_offset(tmp_path):
+    """The file-source log is indexed by its own logOffset, which stays
+    put on no-data batches while batch ids advance. Batch 2 reads log
+    entry 1 (5 rows), batch 3 reads log entries 2 and 3 (the latter from
+    a compact file); a missing sources/0/<batch_id> is not an empty
+    batch."""
+    from entity_etl_spark.streaming import planned_batch_rows
+
+    ckpt = str(tmp_path / "ckpt")
+    a, b, c, d = (_parquet(str(tmp_path / f"{n}.parquet"), rows)
+                  for n, rows in (("a", 3), ("b", 5), ("c", 2), ("d", 4)))
+    _write_checkpoint(
+        ckpt,
+        {0: {"logOffset": 0}, 1: {"logOffset": 0}, 2: {"logOffset": 1},
+         3: {"logOffset": 3}, 5: {"logOffset": 3}},
+        {"0": [a], "1": [b], "2": [c],
+         "3.compact": [dict(a, batchId=0), dict(b, batchId=1),
+                       dict(c, batchId=2), dict(d, batchId=3)]},
+    )
+    assert [planned_batch_rows(ckpt, i) for i in range(4)] == [3, 0, 5, 6]
+    # batch 4's offsets entry is missing: neither batch 4 nor batch 5
+    # can be proven empty
+    assert planned_batch_rows(ckpt, 4) is None
+    assert planned_batch_rows(ckpt, 5) is None
+
+
+def test_planned_batch_rows_never_reads_a_kafka_checkpoint_as_empty(
+    spark, tmp_path
+):
+    """Kafka writes its initial offsets to sources/0/0 and nothing else
+    there, so batches 1 and 2 have no sources/0/<batch_id> entry. Their
+    offsets are not a file source's logOffset: the count is unknown, and
+    the probe asks isEmpty() instead of skipping the batch."""
+    from entity_etl_spark import streaming
+
+    ckpt = str(tmp_path / "ckpt")
+    _write_checkpoint(
+        ckpt,
+        {i: {"events": {"0": 10 * (i + 1)}} for i in range(3)},
+        {"0": [{"events": {"0": 0}}]},
+    )
+    assert [streaming.planned_batch_rows(ckpt, i) for i in range(3)] == [
+        None, None, None]
+    df = spark.createDataFrame([(1,)], "id long")
+    assert streaming.probe_batch_rows(df, ckpt, 2) is None
+    assert streaming.probe_batch_rows(df.limit(0), ckpt, 2) == 0
+
+
 def test_drop_duplicates_within_watermark(spark, tmp_path):
     """dropDuplicatesWithinWatermark: the built-in twin of the
     applyInPandasWithState TTL dedup (stateful_ttl_dedup) — dedup state
