@@ -26,7 +26,11 @@ entirely and keeps the signature computation embarrassingly parallel.
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
+import re
+import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -1248,9 +1252,27 @@ def minhash_dedup_incremental(
 # ---------------------------------------- exact near-dup state (two tables)
 # The persisted state of :func:`exact_neardup_dedup_incremental`: narrow
 # (doc, sh) shingle rows plus one (doc, n) row per doc, ``n`` the doc's
-# distinct-shingle-set size. Both tables only ever grow by appends.
+# distinct-shingle-set size. Each table is a set of dirs under its
+# state_path: an increment writes one dir per table, named by its key, and
+# a key is COMMITTED once both tables hold its dir. Each doc id enters the
+# state at most once (the operator leaves stored docs out of its deltas)
+# and a dir is written under a ``_tmp-`` name and renamed over its key, so
+# the state is duplicate-free by construction and loads with no dedup.
 NEARDUP_SHINGLES = "doc_shingles"
 NEARDUP_SIZES = "doc_sizes"
+# Size-tiered merge: when FANOUT dirs share a tier they are unioned into one
+# dir of the next tier, so a table holds at most FANOUT - 1 dirs per tier
+# (plus the newest increment's own, which its writer never merges, so that
+# a replay of it still finds and replaces its dir by key): 31 dirs up to
+# 4^10 increments, each row rewritten about log4(increments) times. The
+# bound matters because Spark lists more than 32 paths
+# (spark.sql.sources.parallelPartitionDiscovery.threshold) with a Spark
+# job, which cost 2 jobs and ~100 tasks per batch once a load passed 32.
+_NEARDUP_FANOUT = 4
+# A merged dir is ``merge<tier>-<hash of its members>``; its ``_members``
+# file (ignored by Spark's reader) lists the dirs it replaces.
+_NEARDUP_MERGED = re.compile(r"merge(\d+)-[0-9a-f]{12}$")
+_NEARDUP_MEMBERS = "_members"
 
 
 def neardup_state_schemas(
@@ -1268,63 +1290,165 @@ def neardup_state_schemas(
     )
 
 
+def _neardup_entries(state_dir: str, table: str) -> tuple[set[str], bool]:
+    """``(dirs, flat)``: the finished dir names of ``table`` and whether
+    parquet files sit at its root (an old flat layout)."""
+    root = state_mod.state_path(state_dir, table)
+    if not os.path.isdir(root):
+        return set(), False
+    dirs, flat = set(), False
+    for name in os.listdir(root):
+        if os.path.isdir(os.path.join(root, name)):
+            if not name.startswith(("_", ".")):
+                dirs.add(name)
+        elif name.endswith(".parquet"):
+            flat = True
+    return dirs, flat
+
+
 def check_neardup_state(state_dir: str) -> None:
-    """Raise ``ValueError`` when ``state_dir`` holds a pre-two-table
-    layout. Sizes are appended before shingles, so shingles without a
-    sizes table cannot come from a crashed append of this layout."""
-    if os.path.exists(
-        state_mod.state_path(state_dir, NEARDUP_SHINGLES)
-    ) and not os.path.exists(state_mod.state_path(state_dir, NEARDUP_SIZES)):
-        raise ValueError(
-            f"{state_dir!r} holds a {NEARDUP_SHINGLES} table without "
-            f"{NEARDUP_SIZES}: an old near-dup state layout. Convert it once "
-            "with ext.dedup.migrate_neardup_state(spark, state_dir)."
-        )
+    """Raise ``ValueError`` when ``state_dir`` holds an old flat layout:
+    parquet files at a table's root (the single-table, legacy and
+    append-only two-table layouts, which may hold replay duplicates)."""
+    for table in (NEARDUP_SHINGLES, NEARDUP_SIZES):
+        if _neardup_entries(state_dir, table)[1]:
+            raise ValueError(
+                f"{state_dir!r} holds a flat {table} table: an old near-dup "
+                "state layout. Convert it once with "
+                "ext.dedup.migrate_neardup_state(spark, state_dir)."
+            )
+
+
+def _neardup_live(state_dir: str) -> tuple[list[str], set[str]]:
+    """``(live, superseded)``: the committed dirs that no committed merged
+    dir lists as a member, and the dirs some committed merged dir lists
+    (their rows sit in it)."""
+    sh_dirs, _ = _neardup_entries(state_dir, NEARDUP_SHINGLES)
+    committed = sh_dirs & _neardup_entries(state_dir, NEARDUP_SIZES)[0]
+    superseded = set()
+    root = state_mod.state_path(state_dir, NEARDUP_SHINGLES)
+    for name in committed:
+        if _NEARDUP_MERGED.match(name):
+            with open(os.path.join(root, name, _NEARDUP_MEMBERS)) as fh:
+                superseded.update(json.load(fh))
+    return sorted(committed - superseded), superseded
+
+
+def _drop_neardup_dirs(state_dir: str, names) -> None:
+    for table in (NEARDUP_SHINGLES, NEARDUP_SIZES):
+        root = state_mod.state_path(state_dir, table)
+        for name in names:
+            shutil.rmtree(os.path.join(root, name), ignore_errors=True)
 
 
 def load_neardup_state(
-    spark, state_dir: str, id_type: T.DataType
+    spark, state_dir: str, id_type: T.DataType, exclude: str | None = None
 ) -> tuple[DataFrame, DataFrame]:
-    """``(shingles, sizes)`` read with their known schemas, so loading runs
-    no Spark job; empty frames when nothing was persisted yet. An old
-    3-column ``(doc, sh, n)`` shingles file reads narrow."""
+    """``(shingles, sizes)`` over every committed key but ``exclude`` (the
+    current increment's own key, so a replayed increment never sees its
+    first attempt), read with their known schemas: loading runs no Spark
+    job and no dedup. Empty frames when nothing is committed yet. Dirs a
+    committed merge replaced are skipped and deleted here, so a crash
+    between a merge's rename and its member deletion still loads
+    duplicate-free."""
     check_neardup_state(state_dir)
+    live, superseded = _neardup_live(state_dir)
+    _drop_neardup_dirs(state_dir, superseded)
+    names = [name for name in live if name != exclude]
 
     def load(table: str, schema: T.StructType) -> DataFrame:
-        df = state_mod.load_state(spark, state_dir, table, schema)
-        return spark.createDataFrame([], schema) if df is None else df
+        if not names:
+            return spark.createDataFrame([], schema)
+        root = state_mod.state_path(state_dir, table)
+        return spark.read.schema(schema).parquet(
+            *(os.path.join(root, name) for name in names)
+        )
 
     sh_schema, n_schema = neardup_state_schemas(id_type)
     return load(NEARDUP_SHINGLES, sh_schema), load(NEARDUP_SIZES, n_schema)
 
 
-def append_neardup_state(
-    state_dir: str, shingles_delta: DataFrame, sizes_delta: DataFrame
+def _write_neardup_dir(
+    df: DataFrame, state_dir: str, table: str, name: str, members=()
 ) -> None:
-    """Append one increment's deltas, sizes FIRST: every persisted shingle
-    row then has its doc's size row even if the second append crashes (a
-    shingle row without a size would drop its pairs from the scoring
-    join, silently keeping a near-dup), and a sizes-only remnant is
-    harmless — the replayed batch's ids are excluded from both tables."""
-    state_mod.append_state(sizes_delta, state_dir, NEARDUP_SIZES)
-    state_mod.append_state(shingles_delta, state_dir, NEARDUP_SHINGLES)
+    """Write ``df`` as dir ``name`` of ``table``: under ``_tmp-<name>``,
+    then renamed over ``name``, so a rewrite replaces it whole."""
+    root = state_mod.state_path(state_dir, table)
+    tmp, final = os.path.join(root, "_tmp-" + name), os.path.join(root, name)
+    df.write.mode("overwrite").parquet(tmp)
+    if members:
+        with open(os.path.join(tmp, _NEARDUP_MEMBERS), "w") as fh:
+            json.dump(list(members), fh)
+    if os.path.exists(final):
+        shutil.rmtree(final)
+    os.replace(tmp, final)
+
+
+def append_neardup_state(
+    state_dir: str, shingles_delta: DataFrame, sizes_delta: DataFrame, key: str
+) -> None:
+    """Commit one increment's deltas as the dirs of ``key`` (the streaming
+    runner's ``<query id>-<batch id>``): writing a key again replaces its
+    dirs, and a crash between the two tables leaves a key that does not
+    load. Then merge the other live dirs (see ``_NEARDUP_FANOUT``)."""
+    if key.startswith(("_", ".")) or _NEARDUP_MERGED.match(key):
+        raise ValueError(f"{key!r} is a reserved near-dup state dir name")
+    _write_neardup_dir(shingles_delta, state_dir, NEARDUP_SHINGLES, key)
+    _write_neardup_dir(sizes_delta, state_dir, NEARDUP_SIZES, key)
+    spark = sizes_delta.sparkSession
+    tiers: dict[int, list[str]] = {}
+    for name in _neardup_live(state_dir)[0]:
+        if name != key:
+            m = _NEARDUP_MERGED.match(name)
+            tiers.setdefault(int(m.group(1)) if m else 0, []).append(name)
+    tier = 0
+    while tier <= max(tiers, default=-1):
+        group = sorted(tiers.get(tier, ()))
+        if len(group) < _NEARDUP_FANOUT:
+            tier += 1
+            continue
+        members = group[:_NEARDUP_FANOUT]
+        digest = hashlib.md5(",".join(members).encode()).hexdigest()[:12]
+        merged = f"merge{tier + 1}-{digest}"
+        for table, delta in (
+            (NEARDUP_SHINGLES, shingles_delta),
+            (NEARDUP_SIZES, sizes_delta),
+        ):
+            root = state_mod.state_path(state_dir, table)
+            rows = spark.read.schema(delta.schema).parquet(
+                *(os.path.join(root, name) for name in members)
+            )
+            _write_neardup_dir(rows, state_dir, table, merged, members)
+        _drop_neardup_dirs(state_dir, members)
+        tiers[tier] = group[_NEARDUP_FANOUT:]
+        tiers.setdefault(tier + 1, []).append(merged)
 
 
 def migrate_neardup_state(spark, state_dir: str) -> None:
-    """One-shot conversion of an old near-dup state dir — single-table
-    ``(doc, sh, n)``, legacy ``(doc, sh)``, or a mix of both — to the two
-    tables: ``n`` is recounted over the deduplicated ``(doc, sh)`` rows,
-    which is the right size whatever layout (or replay duplication)
-    each row came from, and ``doc_sizes`` is written through
-    :func:`state.save_state`. The shingle files stay as they are (they
-    read narrow)."""
-    rows = spark.read.parquet(
-        state_mod.state_path(state_dir, NEARDUP_SHINGLES)
-    )
-    sizes = rows.groupBy("doc").agg(
-        F.count_distinct("sh").cast("int").alias("n")
-    )
-    state_mod.save_state(sizes, state_dir, NEARDUP_SIZES)
+    """One-shot conversion of an old flat near-dup state dir — single-table
+    ``(doc, sh, n)``, legacy ``(doc, sh)``, the append-only two tables, or
+    a mix — to one committed dir. Its rows are the deduplicated ``(doc,
+    sh)`` rows, and ``n`` is recounted over them, which is the right size
+    whatever layout (or replay duplication) each row came from. The flat
+    files are deleted last, so a crashed migration reruns."""
+    root = state_mod.state_path(state_dir, NEARDUP_SHINGLES)
+    flat = [
+        os.path.join(root, name)
+        for name in (os.listdir(root) if os.path.isdir(root) else ())
+        if name.endswith(".parquet")
+    ]
+    if flat:
+        rows = spark.read.parquet(*flat).select("doc", "sh").distinct()
+        sizes = rows.groupBy("doc").agg(
+            F.count(F.lit(1)).cast("int").alias("n")
+        )
+        _write_neardup_dir(rows, state_dir, NEARDUP_SHINGLES, "migrated")
+        _write_neardup_dir(sizes, state_dir, NEARDUP_SIZES, "migrated")
+    for table in (NEARDUP_SHINGLES, NEARDUP_SIZES):
+        root = state_mod.state_path(state_dir, table)
+        for name in os.listdir(root) if os.path.isdir(root) else ():
+            if os.path.isfile(os.path.join(root, name)):
+                os.remove(os.path.join(root, name))
 
 
 def exact_neardup_dedup_incremental(
@@ -1349,11 +1473,12 @@ def exact_neardup_dedup_incremental(
     State is one layout of two tables (:func:`load_neardup_state`):
     ``corpus_shingles`` = narrow ``(doc, sh)`` rows and ``corpus_sizes`` =
     one ``(doc, n)`` row per doc. The pair join's fan-out frame — the one
-    giant frame here — carries only the two ids, the aggregation keeps
-    one count buffer, and sizes attach on the (candidate-bounded)
-    aggregated pair set. A first increment passes the empty frames. Old
-    single-table / legacy dirs are converted once by
-    :func:`migrate_neardup_state`; loading one raises until then.
+    giant frame here — carries the two ids and the sizes the batch rows
+    already hold, the aggregation keeps one count buffer, and the corpus
+    sizes attach on the (candidate-bounded) aggregated pair set. A first
+    increment passes the empty frames. Old
+    flat dirs are converted once by :func:`migrate_neardup_state`;
+    loading one raises until then.
 
     Both sides of the candidate equi-join carry complete shingle sets, so
     the per-pair match count IS the exact intersection — no verification
@@ -1362,90 +1487,104 @@ def exact_neardup_dedup_incremental(
     right side is restricted to batch docs (corpus-corpus pairs settled
     in earlier increments), keeping fan-out at O(shared-shingle x batch).
 
-    Returns ``(kept_batch, shingles_delta, sizes_delta)``: the survivors
-    and their rows for each table, both read from ONE pinned delta, for
-    :func:`append_neardup_state` (O(batch) state growth; sizes go first,
-    see there). Loaded state is sanitized for at-least-once replay before
-    it can touch the intersection counts: each table is deduplicated (a
-    crashed append may have persisted its rows twice), and the batch's
-    own ids are excluded from both (a REPLAYED batch's docs may already
-    sit in the state; keeping both copies would double their shingles,
-    shifting every affected Jaccard). At 100 TB bucket the shingles by
-    ``sh`` (sinks.write_bucketed) so the candidate join is shuffle-free,
-    and store ``xxhash64(sh)`` instead of the shingle text to cut state
-    bytes ~3x (in-doc collisions are ~2^-64-improbable but make the
-    operator no-longer-bitwise-exact; the text form here keeps the
-    contract airtight)."""
-    batch_ids = F.broadcast(
-        batch.select(F.col(id_col).alias("doc")).distinct()
+    Precondition: both state frames are duplicate-free (what
+    :func:`load_neardup_state` returns; a duplicated row would double its
+    shingles in the intersection counts) and doc ids are unique within
+    the batch. While the sizes fit the broadcast threshold no state row
+    crosses a shuffle: the batch ids are broadcast, the state side drops
+    batch docs map-side (a batch may resend a doc an earlier increment
+    stored), and the same scan of the sizes finds those ``stored`` docs.
+
+    Returns ``(kept_batch, shingles_delta, sizes_delta)``: the survivors,
+    and the rows of the survivors not already stored for each table, both
+    read from ONE pinned delta, for :func:`append_neardup_state` — so a
+    doc enters the state at most once, and a resent doc is still judged
+    and emitted. At 100 TB bucket the shingles by ``sh``
+    (sinks.write_bucketed) so the candidate join is shuffle-free, and
+    store ``xxhash64(sh)`` instead of the shingle text to cut state bytes
+    ~3x (in-doc collisions are ~2^-64-improbable but make the operator
+    no-longer-bitwise-exact; the text form here keeps the contract
+    airtight)."""
+    batch_ids = F.broadcast(batch.select(F.col(id_col).alias("doc")))
+    corpus_shingles = corpus_shingles.select("doc", "sh").join(
+        batch_ids, "doc", "left_anti"
     )
-    corpus_shingles = (
-        corpus_shingles.select("doc", "sh")
-        .dropDuplicates(["doc", "sh"])
-        .join(batch_ids, "doc", "left_anti")
+    stored = corpus_sizes.select("doc").join(batch_ids, "doc", "left_semi")
+    corpus_sizes = corpus_sizes.select("doc", "n").join(
+        batch_ids, "doc", "left_anti"
     )
-    corpus_sizes = (
-        corpus_sizes.select("doc", "n")
-        .dropDuplicates(["doc"])
-        .join(batch_ids, "doc", "left_anti")
-    )
-    # pinned: consumed by the join's right side, the union'd left side,
-    # the batch sizes and the survivors' delta. Rows carry the per-doc
+    # pinned: consumed by the join's right side, the union'd left side
+    # and the survivors' delta. Rows carry the per-doc
     # distinct shingle-set size ``n`` (computed map-side at shingling
     # time — never a per-batch O(state) aggregation).
     batch_sh = (
         _shingle_rows_with_size(_spread_input(batch), id_col, text_col, k)
         .localCheckpoint(eager=True)
     )
-    all_sh = corpus_shingles.unionByName(batch_sh.select("doc", "sh"))
-    left = all_sh.select(F.col("doc").alias("doc_a"), "sh")
+    # The batch rows already carry their doc's size, so nb and a batch
+    # doc_a's na ride the pair join's fan-out rows (a corpus doc_a's row
+    # carries NULL) and the aggregation keeps them as group keys, which
+    # the doc ids determine: no per-batch join attaches them.
+    all_sh = corpus_shingles.withColumn(
+        "n", F.lit(None).cast("int")
+    ).unionByName(batch_sh.select("doc", "sh", "n"))
+    left = all_sh.select(
+        F.col("doc").alias("doc_a"), "sh", F.col("n").alias("__nba")
+    )
     right = batch_sh.select(
-        F.col("doc").alias("doc_b"), F.col("sh").alias("__shb")
+        F.col("doc").alias("doc_b"),
+        F.col("sh").alias("__shb"),
+        F.col("n").alias("__nb"),
     )
     pair_counts = (
         left.join(
             right,
             (left["sh"] == right["__shb"]) & (left["doc_a"] < right["doc_b"]),
         )
-        .groupBy("doc_a", "doc_b")
+        .groupBy("doc_a", "doc_b", "__nba", "__nb")
         .agg(F.count(F.lit(1)).alias("__ni"))
     )
-    # batch sizes from the PINNED batch_sh (its one __pos == 0 row per
-    # doc): the size(shingles()) alternative was tried and costs a full
-    # re-shingling pass of the batch per consumer (the expression
-    # recomputes; nothing is pinned), where this is a filtered scan of
-    # already-materialized blocks.
-    batch_sizes = batch_sh.filter(F.col("__pos") == 0).select("doc", "n")
-    sizes_a = corpus_sizes.unionByName(batch_sizes).select(
-        F.col("doc").alias("doc_a"), F.col("n").alias("__na")
+    # A corpus doc_a's na attaches on the candidate-bounded pair set by a
+    # join left to the planner, which sizes it from the state files: a
+    # broadcast of the doc-count-sized table while it fits the broadcast
+    # threshold, both sides shuffled as slim (id, int) rows past it.
+    # Force-broadcasting the PAIR side measured 140 s vs 44 s at sf1 (a
+    # shared-vocabulary corpus emits millions of candidate pairs per
+    # batch). Not one join over corpus ∪ batch sizes: that frame carries
+    # the pinned batch's unknown size estimate, and the planner would
+    # shuffle the whole sizes table every batch.
+    corpus_na = corpus_sizes.select(
+        F.col("doc").alias("doc_a"), F.col("n").alias("__nca")
     )
-    sizes_b = batch_sizes.select(
-        F.col("doc").alias("doc_b"), F.col("n").alias("__nb")
+    scored = pair_counts.join(corpus_na, "doc_a", "left").withColumn(
+        "__na", F.coalesce("__nca", "__nba")
     )
-    # nb attaches via a broadcast of the truly batch-bounded sizes_b; the
-    # na join is left to the planner — the PAIR set is candidate-bounded,
-    # not batch-bounded (a shared-vocabulary corpus emits millions of
-    # candidate pairs per batch at sf1), and force-broadcasting it
-    # measured 140 s vs 44 s at sf1. Locally AQE broadcasts the
-    # doc-count-sized sizes_a side at runtime; at state scales past the
-    # broadcast cap both sides shuffle slim (id, int) rows.
-    scored = pair_counts.join(F.broadcast(sizes_b), "doc_b").join(
-        sizes_a, "doc_a"
-    )
-    losers = (
+    # pinned: the batch docs left out of the deltas — the losers, and
+    # (flagged) the stored docs, found on a scan of the sizes with the
+    # same broadcast of batch ids. Both are anti-join build sides, so
+    # duplicates are harmless and broadcasting them keeps the batch from
+    # shuffling.
+    dropped = (
         scored.filter(
             F.col("__ni") / (F.col("__na") + F.col("__nb") - F.col("__ni"))
             >= threshold
         )
-        .select(F.col("doc_b").alias("__loser"))
-        .distinct()
+        .select(F.col("doc_b").alias("__drop"), F.lit(False).alias("__stored"))
+        .unionByName(
+            stored.select(
+                F.col("doc").alias("__drop"), F.lit(True).alias("__stored")
+            )
+        )
         .localCheckpoint(eager=True)
     )
-    kept = batch.join(losers, batch[id_col] == losers["__loser"], "left_anti")
+    losers = dropped.filter(~F.col("__stored"))
+    kept = batch.join(
+        F.broadcast(losers), batch[id_col] == losers["__drop"], "left_anti"
+    )
     # pinned once for both appends; without it each append re-runs the
     # survivors plan. Neither delta shuffles: sizes are the __pos == 0 rows.
     delta = batch_sh.join(
-        F.broadcast(losers), batch_sh["doc"] == losers["__loser"], "left_anti"
+        F.broadcast(dropped), batch_sh["doc"] == dropped["__drop"], "left_anti"
     ).localCheckpoint(eager=True)
     return (
         kept,

@@ -224,12 +224,23 @@ def run_streaming_neardup_prep(
     per batch (document bodies are never re-read).
 
     State is the operator's two tables, ``doc_shingles`` ``(doc, sh)`` and
-    ``doc_sizes`` ``(doc, n)``, loaded with their known schemas (no Spark
-    job) and grown by exactly the survivors' rows (append, sizes first;
-    never a rewrite). A ``state_dir`` written in an older layout raises
-    ``ValueError`` before the stream starts; convert it once with
+    ``doc_sizes`` ``(doc, n)`` (:func:`...dedup.load_neardup_state`). Each
+    micro-batch loads every committed batch but its own, with known
+    schemas (no Spark job), and commits exactly its new survivors' rows
+    as one dir per table keyed ``<query id>-<batch id>`` (the query id
+    from ``<checkpoint>/metadata``, so a new checkpoint never overwrites
+    an old one's dirs). A replayed batch therefore replaces its own dirs
+    and never sees its first attempt, and no exchange moves the
+    accumulated state (it is still scanned map-side each batch). A
+    ``state_dir`` written in an older layout raises ``ValueError`` before
+    the stream starts; convert it once with
     :func:`...dedup.migrate_neardup_state`."""
-    from ..streaming import probe_batch_rows, run_available_now, spread_batch
+    from ..streaming import (
+        checkpoint_query_id,
+        probe_batch_rows,
+        run_available_now,
+        spread_batch,
+    )
     from .dedup import (
         append_neardup_state,
         check_neardup_state,
@@ -264,8 +275,9 @@ def run_streaming_neardup_prep(
                 & (F.col("quality_score") >= min_quality)
             )
         )
+        key = f"{checkpoint_query_id(checkpoint_dir)}-{batch_id}"
         shingles, sizes = load_neardup_state(
-            spark, state_dir, gated.schema[id_col].dataType
+            spark, state_dir, gated.schema[id_col].dataType, exclude=key
         )
         kept, shingles_delta, sizes_delta = exact_neardup_dedup_incremental(
             gated,
@@ -277,7 +289,7 @@ def run_streaming_neardup_prep(
         )
         out = grouped_split(kept, group_col)
         out.write.mode("append").partitionBy("split").parquet(out_dir)
-        # exactly the survivors' rows: O(batch) state growth
-        append_neardup_state(state_dir, shingles_delta, sizes_delta)
+        # exactly the new survivors' rows: O(batch) state growth
+        append_neardup_state(state_dir, shingles_delta, sizes_delta, key)
 
     run_available_now(stream, checkpoint_dir, process, timeout_sec=timeout_sec)

@@ -114,11 +114,16 @@ def append_state(new_rows: DataFrame, state_dir: str, table: str) -> None:
     swap exists for, because append never deletes or replaces an existing
     file — a plan that lazily reads the current state sees its planned-time
     file snapshot unchanged. Under foreachBatch at-least-once replay a
-    crashed append can leave duplicate state rows; both incremental dedup
-    consumers are duplicate-insensitive (fp anti-join; (doc, sig) band
-    buckets deduped by the pair distinct), the same idempotence contract
-    the output append already relies on. Compact generations offline with
-    sinks.compact_parquet if small state files accumulate."""
+    crashed append can leave duplicate state rows, so only a
+    duplicate-insensitive consumer may read an appended table: the
+    fingerprint anti-join (``exact_dedup_incremental``) and the MinHash
+    (doc, sig) band buckets, deduped by the pair distinct
+    (``minhash_dedup_incremental``) — the same idempotence contract the
+    output append already relies on. The exact near-dup state counts
+    shingles, so it is not appended here: ``ext.dedup.append_neardup_state``
+    commits one dir per batch key instead, replaced whole on replay.
+    Compact generations offline with sinks.compact_parquet if small
+    state files accumulate."""
     path = state_path(state_dir, table)
     new_rows.write.mode("append").parquet(path)
 

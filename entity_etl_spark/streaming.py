@@ -418,6 +418,17 @@ def require_local_state_paths(*paths: str) -> None:
             )
 
 
+def checkpoint_query_id(checkpoint_dir: str) -> str:
+    """The query id Spark records in ``<checkpoint>/metadata`` when a
+    query first starts on ``checkpoint_dir``: stable across restarts of
+    that checkpoint, new for a new one."""
+    import json
+    import os
+
+    with open(os.path.join(checkpoint_dir, "metadata"), encoding="utf-8") as fh:
+        return json.load(fh)["id"]
+
+
 def _file_source_log_offset(checkpoint_dir: str, batch_id: int) -> int | None:
     """The ``logOffset`` that ``offsets/<batch_id>`` records for a
     single file source, or None when the entry is missing or its one
@@ -542,13 +553,17 @@ def spread_batch(
     sf0.1 streaming family ran 19-75 jobs of 32 tasks each over ~200 KB
     batches — task scheduling, not compute). ``planned_rows`` comes from
     :func:`planned_batch_rows`; None (unknowable) applies the at-scale
-    default, full parallelism."""
+    default, full parallelism. A batch planned at one partition is
+    coalesced instead: repartitioning it would run an ``Exchange
+    SinglePartition`` job that moves at most 256 rows for nothing."""
     parallelism = spark.sparkContext.defaultParallelism
     if planned_rows is None:
         return batch_df.repartition(parallelism)
     parts = max(
         1, min(parallelism, -(-planned_rows // _SPREAD_ROWS_PER_PARTITION))
     )
+    if parts == 1:
+        return batch_df.coalesce(1)
     return batch_df.repartition(parts)
 
 

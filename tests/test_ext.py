@@ -1,6 +1,7 @@
 """Extension-operator tests (E1-E5): dedup, similarity, text, multimodal."""
 
 import math
+import os
 import re
 
 import pytest
@@ -507,17 +508,6 @@ def neardup_empty_state(spark):
     )
 
 
-def neardup_seed(spark, corpus):
-    """The two state tables after running ``corpus`` as the first
-    increment."""
-    from entity_etl_spark.ext.dedup import exact_neardup_dedup_incremental
-
-    _, shingles, sizes = exact_neardup_dedup_incremental(
-        corpus, *neardup_empty_state(spark)
-    )
-    return shingles, sizes
-
-
 def py_shingles(text, k=3):
     """Distinct k-word shingles, computed in plain Python (the reference
     for the operator's deltas)."""
@@ -529,54 +519,101 @@ def kept_ids(kept):
     return sorted(r["doc_id"] for r in kept.collect())
 
 
-def test_exact_neardup_incremental_policy_and_state(spark):
-    from entity_etl_spark.ext.dedup import exact_neardup_dedup_incremental
+def neardup_increment(spark, state_dir, key, rows):
+    """One increment through the state on disk: load every committed key
+    but ``key``, run the operator on ``rows``, commit its deltas as
+    ``key``. Returns (kept ids, shingle delta rows, size delta rows)."""
+    from pyspark.sql import types as T
 
-    corpus = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog near the bank")],
-        ["doc_id", "text"],
+    from entity_etl_spark.ext.dedup import (
+        append_neardup_state,
+        exact_neardup_dedup_incremental,
+        load_neardup_state,
     )
-    shingles, sizes = neardup_seed(spark, corpus)
-    batch = spark.createDataFrame(
-        [
-            # near-dup of corpus doc 1 -> dropped
-            (10, "the quick brown fox jumps over the lazy dog near the bend"),
-            # novel -> kept
-            (11, "completely different content about spark query engines ok"),
-            # in-batch near-dup of 11 (smaller id wins) -> dropped
-            (12, "completely different content about spark query engines no"),
-        ],
-        ["doc_id", "text"],
+
+    shingles, sizes = load_neardup_state(
+        spark, state_dir, T.LongType(), exclude=key
     )
     kept, sh_delta, n_delta = exact_neardup_dedup_incremental(
-        batch, shingles, sizes
+        spark.createDataFrame(rows, ["doc_id", "text"]), shingles, sizes
     )
-    assert kept_ids(kept) == [11]
-    # the deltas are the survivors' rows only
-    assert sorted(r["doc"] for r in sh_delta.select("doc").distinct().collect()) == [11]
-    assert [tuple(r) for r in n_delta.collect()] == [(11, 6)]
-    shingles = shingles.unionByName(sh_delta)
-    sizes = sizes.unionByName(n_delta)
-    assert sorted(r["doc"] for r in sizes.collect()) == [1, 11]
+    out = (
+        kept_ids(kept),
+        sorted(tuple(r) for r in sh_delta.collect()),
+        sorted(tuple(r) for r in n_delta.collect()),
+    )
+    append_neardup_state(state_dir, sh_delta, n_delta, key)
+    return out
 
-    # increment 2 against the accumulated state, every row of BOTH tables
-    # duplicated as an at-least-once replayed append leaves them — dedup
-    # on load must keep counts exact (duplicated shingles would corrupt
-    # the intersection math)
-    batch2 = spark.createDataFrame(
-        [
-            # near-dup of KEPT doc 11 -> dropped via state, not bodies
-            (20, "completely different content about spark query engines yes"),
-            (21, "a wholly novel sentence with nothing shared at all here"),
-        ],
-        ["doc_id", "text"],
+
+def loaded_state(spark, state_dir):
+    """The loaded ``(shingle rows, size rows)``, checked duplicate-free."""
+    from pyspark.sql import types as T
+
+    from entity_etl_spark.ext.dedup import load_neardup_state
+
+    shingles, sizes = load_neardup_state(spark, state_dir, T.LongType())
+    sh_rows = sorted(tuple(r) for r in shingles.collect())
+    n_rows = sorted(tuple(r) for r in sizes.collect())
+    assert len(set(sh_rows)) == len(sh_rows)
+    assert len({d for d, _ in n_rows}) == len(n_rows)
+    return sh_rows, n_rows
+
+
+def crash_after_dirs(mp, n):
+    """Make the ``n``-th state dir write from here on raise once its dir
+    has landed (a crash between, or after, an append's two tables)."""
+    from entity_etl_spark.ext import dedup
+
+    write, done = dedup._write_neardup_dir, []
+
+    def crashing(*args, **kwargs):
+        write(*args, **kwargs)
+        done.append(args[2])
+        if len(done) == n:
+            raise RuntimeError(f"crash after {done}")
+
+    mp.setattr(dedup, "_write_neardup_dir", crashing)
+
+
+def test_exact_neardup_incremental_policy_and_state(spark, tmp_path):
+    state_dir = str(tmp_path / "state")
+    corpus = [(1, "the quick brown fox jumps over the lazy dog near the bank")]
+    neardup_increment(spark, state_dir, "q-0", corpus)
+    batch = [
+        # near-dup of corpus doc 1 -> dropped
+        (10, "the quick brown fox jumps over the lazy dog near the bend"),
+        # novel -> kept
+        (11, "completely different content about spark query engines ok"),
+        # in-batch near-dup of 11 (smaller id wins) -> dropped
+        (12, "completely different content about spark query engines no"),
+    ]
+    kept, sh_delta, n_delta = neardup_increment(spark, state_dir, "q-1", batch)
+    assert kept == [11]
+    # the deltas are the survivors' rows only
+    assert {d for d, _ in sh_delta} == {11}
+    assert n_delta == [(11, 6)]
+
+    # increment 1 replayed at least once: the replay loads the state
+    # without its own first attempt and replaces that attempt's dirs, so
+    # the state keeps one copy of every row (duplicated shingles would
+    # corrupt the intersection math of increment 2)
+    assert neardup_increment(spark, state_dir, "q-1", batch) == (
+        kept, sh_delta, n_delta
     )
-    kept2, sh_delta2, n_delta2 = exact_neardup_dedup_incremental(
-        batch2, shingles.unionByName(shingles), sizes.unionByName(sizes)
+    _, sizes = loaded_state(spark, state_dir)
+    assert sizes == [(1, 10), (11, 6)]
+    batch2 = [
+        # near-dup of KEPT doc 11 -> dropped via state, not bodies
+        (20, "completely different content about spark query engines yes"),
+        (21, "a wholly novel sentence with nothing shared at all here"),
+    ]
+    kept2, sh_delta2, n_delta2 = neardup_increment(
+        spark, state_dir, "q-2", batch2
     )
-    assert kept_ids(kept2) == [21]
-    assert sorted(r["doc"] for r in sh_delta2.select("doc").distinct().collect()) == [21]
-    assert [tuple(r) for r in n_delta2.collect()] == [(21, 8)]
+    assert kept2 == [21]
+    assert {d for d, _ in sh_delta2} == {21}
+    assert n_delta2 == [(21, 8)]
 
 
 def test_exact_neardup_incremental_matches_batch_policy_on_sf(spark):
@@ -770,39 +807,39 @@ NEARDUP_BATCH = [
 ]
 
 
-def test_exact_neardup_incremental_two_table_state(spark):
-    """Replay cases of the two-table state, against fixed expected kept
-    sets and deltas: rows duplicated in either table or both (a crashed
-    append persisted twice) and a batch doc (2) that already sits in
-    both tables (a redelivered batch)."""
-    from entity_etl_spark.ext.dedup import exact_neardup_dedup_incremental
-
+def test_exact_neardup_incremental_two_table_state(spark, tmp_path):
+    """Replay cases of the state on disk, against fixed expected kept sets
+    and deltas: the corpus increment crashes after its first table's dir,
+    after both, or first one and then the other, before the replay that
+    completes it; then a batch redelivers doc 2, which the corpus
+    increment stored."""
     # 5 and 13 share 3 of their 6 shingles: J = 3/9, kept — but 6/6 once
     # 5's shingles count twice
     doc5, doc13 = (5, "a b c d e f g h"), (13, "d e f g h p q r")
     corpus = NEARDUP_CORPUS + [doc5]
     texts = dict(corpus + NEARDUP_BATCH + [doc13])
-    shingles, sizes = neardup_seed(
-        spark, spark.createDataFrame(corpus, ["doc_id", "text"])
-    )
-    batch = spark.createDataFrame(
-        [NEARDUP_CORPUS[1]] + NEARDUP_BATCH + [doc13], ["doc_id", "text"]
-    )
-    for dup_sh, dup_n in ((True, False), (False, True), (True, True)):
-        kept, sh_delta, n_delta = exact_neardup_dedup_incremental(
-            batch,
-            shingles.unionByName(shingles) if dup_sh else shingles,
-            sizes.unionByName(sizes) if dup_n else sizes,
+    batch = [NEARDUP_CORPUS[1]] + NEARDUP_BATCH + [doc13]
+    for crashes in ((1,), (2,), (1, 2)):
+        state_dir = str(tmp_path / "-".join(map(str, crashes)))
+        for n in crashes:
+            with pytest.MonkeyPatch.context() as mp:
+                crash_after_dirs(mp, n)
+                with pytest.raises(RuntimeError, match="crash after"):
+                    neardup_increment(spark, state_dir, "q-0", corpus)
+        neardup_increment(spark, state_dir, "q-0", corpus)
+        kept, sh_delta, n_delta = neardup_increment(
+            spark, state_dir, "q-1", batch
         )
         # 2 is re-evaluated as a batch doc (kept: nothing older matches
         # it); 11 is now its smaller-id batch sibling's near-dup
-        assert kept_ids(kept) == [2, 12, 13]
-        assert sorted(tuple(r) for r in sh_delta.collect()) == sorted(
-            (d, sh) for d in (2, 12, 13) for sh in py_shingles(texts[d])
-        )
-        assert sorted(tuple(r) for r in n_delta.collect()) == [
-            (2, 6), (12, 8), (13, 6)
-        ]
+        assert kept == [2, 12, 13], crashes
+        # 2 is already stored: emitted again, but it adds no state rows
+        assert sh_delta == sorted(
+            (d, sh) for d in (12, 13) for sh in py_shingles(texts[d])
+        ), crashes
+        assert n_delta == [(12, 8), (13, 6)], crashes
+        _, sizes = loaded_state(spark, state_dir)
+        assert sizes == [(1, 10), (2, 6), (5, 6), (12, 8), (13, 6)], crashes
 
 
 LEGACY = "doc long, sh string"
@@ -912,35 +949,213 @@ def test_streaming_neardup_prep_refuses_old_layout(spark, tmp_path):
     assert not (tmp_path / "ckpt").exists()
 
 
-def test_append_neardup_state_writes_sizes_first(spark, tmp_path, monkeypatch):
-    """Sizes are appended before shingles, so a crash between the two
-    appends can never leave shingle rows without their size row (whose
-    pairs the scoring join would silently drop); a fresh dir that holds
-    only sizes then still loads."""
+def test_neardup_state_loads_only_committed_keys(spark, tmp_path, monkeypatch):
+    """A key is committed once both tables hold its dir: a crash between
+    the two leaves a key that does not load, and no ``_tmp-`` dir is
+    ever read."""
+    from entity_etl_spark import state as state_mod
+
+    state_dir = str(tmp_path / "state")
+    neardup_increment(spark, state_dir, "q-0", NEARDUP_CORPUS[:1])
+    crash_after_dirs(monkeypatch, 1)
+    with pytest.raises(RuntimeError, match="crash after"):
+        neardup_increment(spark, state_dir, "q-1", NEARDUP_CORPUS[1:])
+    sh_dir = state_mod.state_path(state_dir, "doc_shingles")
+    n_dir = state_mod.state_path(state_dir, "doc_sizes")
+    assert sorted(os.listdir(sh_dir)) == ["q-0", "q-1"]
+    assert sorted(os.listdir(n_dir)) == ["q-0"]
+    shingles, sizes = loaded_state(spark, state_dir)
+    assert {d for d, _ in shingles} == {1} and sizes == [(1, 10)]
+
+
+def test_exact_neardup_incremental_resent_doc_adds_no_state_rows(
+    spark, tmp_path
+):
+    """A doc id an earlier increment stored, resent in a later batch, is
+    judged and emitted again but enters the state only once."""
+    state_dir = str(tmp_path / "state")
+    doc5, doc6 = (5, "a b c d e f g h"), (6, "d e f g h p q r")
+    neardup_increment(spark, state_dir, "q-0", [doc5])
+    kept, sh_delta, n_delta = neardup_increment(
+        spark, state_dir, "q-1", [doc5, doc6]
+    )
+    assert kept == [5, 6]
+    assert {d for d, _ in sh_delta} == {6} and n_delta == [(6, 6)]
+    shingles, sizes = loaded_state(spark, state_dir)
+    assert sizes == [(5, 6), (6, 6)] and len(shingles) == 12
+
+
+def test_exact_neardup_losers_plan_has_no_exchange_over_state(
+    spark, tmp_path, monkeypatch
+):
+    """The pinned losers frame of an increment over a state on disk: no
+    shuffle Exchange sits above a state FileScan in its executed plan
+    until the candidate join has cut the state rows down to the pairs
+    they share with the batch, so a micro-batch moves nothing O(state).
+    (A shuffle of the pairs, above that join, is batch-bounded.)"""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    state_dir = str(tmp_path / "state")
+    neardup_increment(spark, state_dir, "q-0", NEARDUP_CORPUS)
+    plans = []
+    pin = DataFrame.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        out = pin(self, *args, **kwargs)
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", recording)
+    neardup_increment(spark, state_dir, "q-1", NEARDUP_BATCH)
+    # the batch is in memory: the only file scans are of the state
+    state_plans = [
+        p.split("== Initial Plan ==")[0] for p in plans if "FileScan" in p
+    ]
+    assert len(state_plans) == 1
+    nodes = []  # (depth, operator) per plan line
+    for ln in state_plans[0].splitlines():
+        op = ln.lstrip(" :+-")
+        nodes.append((len(ln) - len(op), re.sub(r"^\*\(\d+\) ", "", op)))
+    scans = [i for i, (_, op) in enumerate(nodes) if op.startswith("FileScan")]
+    # the shingles, the sizes for na and the sizes for the stored docs
+    assert len(scans) == 3
+    for i in scans:
+        depth, pairs_only = nodes[i][0], False
+        for d, op in reversed(nodes[:i]):  # the scan's ancestors, upward
+            if d >= depth:
+                continue
+            depth = d
+            if op.startswith("BroadcastHashJoin") and ", Inner," in op:
+                pairs_only = True
+            assert pairs_only or not op.startswith(
+                ("Exchange", "ShuffleQueryStage", "AQEShuffleRead")
+            ), state_plans[0]
+
+
+def _shuffle_write_bytes(spark, fn):
+    """Shuffle bytes written by the jobs ``fn`` runs."""
+    sc = spark.sparkContext._jsc.sc()
+    j0 = sc.dagScheduler().numTotalJobs()
+    fn()
+    j1 = sc.dagScheduler().numTotalJobs()
+    sc.listenerBus().waitUntilEmpty()
+    store, stages = sc.statusStore(), set()
+    for j in range(j0, j1):
+        ids = store.job(j).stageIds()
+        stages.update(ids.apply(i) for i in range(ids.size()))
+    return sum(store.lastStageAttempt(s).shuffleWriteBytes() for s in stages)
+
+
+def test_exact_neardup_increment_shuffle_is_independent_of_state_size(
+    spark, tmp_path
+):
+    """The same increment writes the same shuffle bytes against a state of
+    2 committed batches and of 20: the 18 extra batches share no shingle
+    with it, so only an exchange over the state could tell them apart."""
+    def filler(b):
+        # fresh words in every doc: each is kept, sharing no shingle
+        return [
+            (1000 * b + i, " ".join(f"w{b}x{i}x{j}" for j in range(12)))
+            for i in range(20)
+        ]
+
+    probe = NEARDUP_BATCH + [(13, "a b c d e f g h"), (14, "d e f g h p q r")]
+    written = {}
+    for size in (2, 20):
+        state_dir = str(tmp_path / str(size))
+        neardup_increment(spark, state_dir, "q-0", NEARDUP_CORPUS)
+        for b in range(1, size):
+            neardup_increment(spark, state_dir, f"q-{b}", filler(b))
+        assert len(loaded_state(spark, state_dir)[1]) == 2 + 20 * (size - 1)
+        written[size] = _shuffle_write_bytes(
+            spark,
+            lambda: neardup_increment(spark, state_dir, f"q-{size}", probe),
+        )
+    assert written[2] == written[20]
+
+
+def test_neardup_state_merge_bounds_dirs_and_jobs(spark, tmp_path, monkeypatch):
+    """70 committed increments: the size-tiered merge keeps each table at
+    32 dirs or fewer, so a load never lists more paths than Spark lists
+    without a job (loads run no job at all), and a non-merging commit
+    costs its two writes at any state size. A crash between a merge's
+    rename and its member deletion still loads duplicate-free."""
     from pyspark.sql import types as T
 
     from entity_etl_spark import state as state_mod
-    from entity_etl_spark.ext.dedup import (
-        append_neardup_state,
-        load_neardup_state,
-    )
+    from entity_etl_spark.ext import dedup
 
-    shingles, sizes = neardup_seed(
-        spark, spark.createDataFrame(NEARDUP_CORPUS, ["doc_id", "text"])
-    )
+    sc = spark.sparkContext._jsc.sc()
     state_dir = str(tmp_path / "state")
-    written = []
-    append = state_mod.append_state
+    tables = [
+        state_mod.state_path(state_dir, t) for t in ("doc_shingles", "doc_sizes")
+    ]
 
-    def crash_after_first(rows, d, table):
-        if written:
-            raise RuntimeError("crash between the appends")
-        written.append(table)
-        append(rows, d, table)
+    def commit(b):
+        sh = spark.createDataFrame(
+            [(b, f"s{b}"), (b, f"t{b}")], "doc long, sh string"
+        )
+        n = spark.createDataFrame([(b, 2)], "doc long, n int")
+        j0 = sc.dagScheduler().numTotalJobs()
+        dedup.append_neardup_state(state_dir, sh, n, f"q-{b}")
+        return sc.dagScheduler().numTotalJobs() - j0
 
-    monkeypatch.setattr(state_mod, "append_state", crash_after_first)
-    with pytest.raises(RuntimeError):
-        append_neardup_state(state_dir, shingles, sizes)
-    assert written == ["doc_sizes"]
-    loaded_sh, loaded_n = load_neardup_state(spark, state_dir, T.LongType())
-    assert loaded_sh.count() == 0 and loaded_n.count() == 2
+    jobs = []
+    for b in range(70):
+        jobs.append(commit(b))
+        for t in tables:
+            assert len(os.listdir(t)) <= 32, b
+        j0 = sc.dagScheduler().numTotalJobs()
+        dedup.load_neardup_state(spark, state_dir, T.LongType())
+        assert sc.dagScheduler().numTotalJobs() == j0, b
+    # two writes per commit and two per merge: no listing job ever
+    assert set(jobs) <= {2, 4, 6, 8} and jobs[-1] == 2
+    # 64 commits cascade to one tier-3 dir
+    assert any(name.startswith("merge3-") for name in os.listdir(tables[0]))
+    shingles, sizes = loaded_state(spark, state_dir)
+    assert sizes == [(b, 2) for b in range(70)] and len(shingles) == 140
+
+    # the next merge renames its dirs, then crashes before deleting members
+    def crash(state_dir, names):
+        raise RuntimeError("crash before the member deletion")
+
+    monkeypatch.setattr(dedup, "_drop_neardup_dirs", crash)
+    for b in range(70, 80):
+        try:
+            commit(b)
+        except RuntimeError:
+            break
+    else:
+        raise AssertionError("no merge ran")
+    monkeypatch.undo()
+    members = len(os.listdir(tables[0]))
+    shingles, sizes = loaded_state(spark, state_dir)
+    assert sizes == [(d, 2) for d in range(b + 1)]
+    assert len(shingles) == 2 * (b + 1)
+    assert len(os.listdir(tables[0])) < members  # the loader deleted them
+
+
+def test_append_only_neardup_state_raises_then_migrates(spark, tmp_path):
+    """The append-only two-table layout (flat part files at each table's
+    root, one increment appended twice by a replay) refuses to load, then
+    migrates to one committed dir with each row once."""
+    from entity_etl_spark.ext.dedup import migrate_neardup_state
+    from entity_etl_spark.state import append_state
+
+    state_dir = str(tmp_path / "state")
+    rows = shingle_rows(NEARDUP_CORPUS)
+    sizes = [(d, len(py_shingles(t))) for d, t in NEARDUP_CORPUS]
+    for _ in range(2):
+        append_state(
+            spark.createDataFrame(sizes, "doc long, n int"), state_dir, "doc_sizes"
+        )
+        append_state(
+            spark.createDataFrame(rows, LEGACY), state_dir, "doc_shingles"
+        )
+    with pytest.raises(ValueError, match=r"migrate_neardup_state\(spark, state_dir\)"):
+        loaded_state(spark, state_dir)
+    migrate_neardup_state(spark, state_dir)
+    sh_rows, n_rows = loaded_state(spark, state_dir)
+    assert sh_rows == sorted(rows) and n_rows == [(1, 10), (2, 6)]
+    kept, _, _ = neardup_increment(spark, state_dir, "q-0", NEARDUP_BATCH)
+    assert kept == [12]

@@ -315,59 +315,123 @@ def test_run_streaming_neardup_prep_drops_paraphrased_resend(spark, tmp_path):
 
 
 # Spark jobs of one warm run_streaming_neardup_prep micro-batch (a
-# one-file batch over a non-empty state, some survivors) on the fixture
-# below: the clean + quality-gate pin 2, the shingle pin 1, the losers
-# pin 10 (pair join, aggregation, size joins and distinct), the
-# survivors' delta pin 2 (losers broadcast, checkpoint), the split
-# output write 4, and one write per state append (sizes, shingles) 2.
+# one-file batch over a non-empty state, some survivors, no merge) on the
+# fixture below: the clean + quality-gate pin 1 (a one-partition batch is
+# coalesced, not shuffled), the shingle pin 1, the dropped-docs pin 5
+# (batch-ids broadcast, pair-join broadcast, pair aggregation, corpus
+# sizes broadcast, checkpoint), the survivors' delta pin 2
+# (dropped-docs broadcast, checkpoint), the split output write 2 (losers
+# broadcast, write), and one write per state dir (shingles, sizes) 2.
 # Loading the state and probing the batch run none.
-WARM_NEARDUP_BATCH_JOBS = 21
+WARM_NEARDUP_BATCH_JOBS = 13
+# The first micro-batch, over an empty state, runs as many.
+COLD_NEARDUP_BATCH_JOBS = 13
+
+
+NEARDUP_SCHEMA = "doc_id long, text string, source string"
+NEARDUP_WORDS = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
+                 "lambda mu nu xi omicron pi rho sigma tau upsilon").split()
+
+
+def land_neardup_docs(spark, src, n, ids):
+    """Land file ``f<n>``: doc ``i`` is one of 40 seeded texts, with one
+    word edited by ``i % 7`` (so ids 40 apart are one-word edits)."""
+    import random
+
+    def doc(seed, edit):
+        r = random.Random(seed)
+        toks = [r.choice(NEARDUP_WORDS) if t % 3 else "the" for t in range(40)]
+        toks[-1 - edit] = "edit"
+        return " ".join(toks)
+
+    rows = [(i, doc(i % 40, i % 7), f"s{i % 4}") for i in ids]
+    spark.createDataFrame(rows, NEARDUP_SCHEMA).coalesce(1).write.parquet(
+        f"{src}/f{n}"
+    )
 
 
 def test_warm_neardup_batch_runs_the_job_budget(spark, tmp_path):
     """Counted with the DAG scheduler's job counter: the micro-batch runs
     on the stream's own thread, which a job group set here misses."""
-    import random
-
     from entity_etl_spark.ext.prep import run_streaming_neardup_prep
 
     src = str(tmp_path / "src")
-    schema = "doc_id long, text string, source string"
-    words = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
-             "lambda mu nu xi omicron pi rho sigma tau upsilon").split()
-
-    def doc(seed, edit):
-        r = random.Random(seed)
-        toks = [r.choice(words) if t % 3 else "the" for t in range(40)]
-        toks[-1 - edit] = "edit"
-        return " ".join(toks)
-
-    def land(n, ids):
-        rows = [(i, doc(i % 40, i % 7), f"s{i % 4}") for i in ids]
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            f"{src}/f{n}"
-        )
-
     sc = spark.sparkContext._jsc.sc()
 
     def drain():
         j0 = sc.dagScheduler().numTotalJobs()
         run_streaming_neardup_prep(
             spark,
-            spark.readStream.schema(schema).parquet(f"{src}/f*"),
+            spark.readStream.schema(NEARDUP_SCHEMA).parquet(f"{src}/f*"),
             str(tmp_path / "out"),
             str(tmp_path / "state"),
             str(tmp_path / "ckpt"),
         )
         return sc.dagScheduler().numTotalJobs() - j0
 
-    land(1, range(1, 30))
-    drain()
+    land_neardup_docs(spark, src, 1, range(1, 30))
+    assert drain() == COLD_NEARDUP_BATCH_JOBS
     # 30-40 are new docs, 41-69 one-word edits of batch 1's 1-29
-    land(2, range(30, 70))
+    land_neardup_docs(spark, src, 2, range(30, 70))
     assert drain() == WARM_NEARDUP_BATCH_JOBS
     kept = {r.doc_id for r in spark.read.parquet(str(tmp_path / "out")).collect()}
     assert kept == set(range(1, 41))
+
+
+def test_neardup_prep_crash_replay_matches_a_clean_run(spark, tmp_path):
+    """Micro-batch 1 crashes after its first state dir, its replay crashes
+    after both, and a third drain completes it: the kept ids and the
+    loaded state equal a run without crashes, the state holds every row
+    once, and batch 1's key has one dir per table, replaced, not added."""
+    import os
+
+    from pyspark.sql import types as T
+
+    from entity_etl_spark import state as state_mod
+    from entity_etl_spark.ext import dedup
+    from entity_etl_spark.ext.prep import run_streaming_neardup_prep
+    from entity_etl_spark.streaming import checkpoint_query_id
+
+    src = str(tmp_path / "src")
+    land_neardup_docs(spark, src, 1, range(1, 30))
+    land_neardup_docs(spark, src, 2, range(30, 70))
+    land_neardup_docs(spark, src, 3, range(70, 100))
+
+    def run(root):
+        run_streaming_neardup_prep(
+            spark,
+            spark.readStream.schema(NEARDUP_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(f"{src}/f*"),
+            f"{root}/out", f"{root}/state", f"{root}/ckpt",
+        )
+        kept = {r.doc_id for r in spark.read.parquet(f"{root}/out").collect()}
+        sh, n = dedup.load_neardup_state(spark, f"{root}/state", T.LongType())
+        rows = [sorted(map(tuple, df.collect())) for df in (sh, n)]
+        return kept, *rows
+
+    clean = run(str(tmp_path / "clean"))
+    root = str(tmp_path / "crashed")
+    write = dedup._write_neardup_dir
+    for crash_table in ("doc_shingles", "doc_sizes"):
+
+        def crashing(df, state_dir, table, name, *args):
+            write(df, state_dir, table, name, *args)
+            if table == crash_table and name.endswith("-1"):
+                raise RuntimeError(f"crash after {table}")
+
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(dedup, "_write_neardup_dir", crashing)
+            with pytest.raises(Exception, match=f"crash after {crash_table}"):
+                run(root)
+    kept, sh_rows, n_rows = run(root)
+    assert (kept, sh_rows, n_rows) == clean
+    assert len(set(sh_rows)) == len(sh_rows)
+    assert len({d for d, _ in n_rows}) == len(n_rows)
+    qid = checkpoint_query_id(f"{root}/ckpt")
+    for table in ("doc_shingles", "doc_sizes"):
+        names = os.listdir(state_mod.state_path(f"{root}/state", table))
+        assert sorted(names) == [f"{qid}-{b}" for b in range(3)]
 
 
 def test_probe_batch_rows(spark, tmp_path, monkeypatch):
