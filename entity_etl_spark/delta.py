@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 HASH_COL = "__content_hash"
@@ -65,6 +65,35 @@ def ensure_content_hash(df: DataFrame, exclude: Sequence[str] = ()) -> DataFrame
     if HASH_COL in df.columns:
         return df
     return with_content_hash(df, exclude=exclude)
+
+
+def keep_latest_per_key(
+    df: DataFrame,
+    id_field: str,
+    ts_field: str | None,
+    exclude: Sequence[str] | None = None,
+) -> DataFrame:
+    """Latest row per key (O15): the distributed equivalent of the
+    reference's Map.set last-write-wins within a page (cache.js:55-57).
+
+    Rows with a null id are dropped (cache.js:70-74). Order: the greater
+    ``ts_field`` (skipped when None or absent), then the greater content
+    hash over the columns minus ``exclude`` (default: ``ts_field``),
+    computed here unless the frame already carries :data:`HASH_COL`; the
+    output keeps it. So every plan that evaluates this window picks the
+    same row — the emitted body and the hash the state stores come from
+    one version. Rows that tie on the hash too have the same content."""
+    if exclude is None:
+        exclude = () if ts_field is None else (ts_field,)
+    hashed = ensure_content_hash(df, exclude=exclude)
+    order = [F.desc(ts_field)] if ts_field in df.columns else []
+    w = Window.partitionBy(id_field).orderBy(*order, F.desc(HASH_COL))
+    return (
+        hashed.filter(F.col(id_field).isNotNull())
+        .withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
 
 
 def changed_rows(

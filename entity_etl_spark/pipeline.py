@@ -4,23 +4,27 @@ loop (app.js:13-60) re-expressed around DataFrames.
 Per table, one incremental run is:
 
     page       = content_hash(incremental_scan(source, ts, checkpoint))
-                 + observe(max ts, rows), cached                # O1/O3, O5
-    latest     = keep_latest_per_key(page, id, ts)              # O15
+                 + observe(max ts, rows)                        # O1/O3, O5
+    latest     = keep_latest_per_key(page, id, ts), cached      # O15
     delta      = changed_rows(latest, state, id)                # O5
     shaped     = apply_mapping(delta, projection_spec)          # O6-O9
     bodies     = assemble_bodies(assign_batches(to_json(shaped)))# O9/O10
     sink(bodies)                                                # O11
-    state'     = merge_state(state, page, id, ...)              # O12/O13/O15
+    state'     = upsert_state(state, latest, id, ...)           # O12/O13
     checkpoint'= next_checkpoint(observed max ts, prev, partial)# O14
 
-The page is hashed once and cached; the delta and the next state both read
-it. The checkpoint's max ts and the input row count are observed on the
-page while the bodies are computed, so they cost no job of their own. A
-warm run executes: the bodies and their counts (one action: the page
-cache, the state broadcast, the keep-latest and body shuffles, and the
-count), the sink's own actions, and the state write (one shuffle and the
-write). The state is read with its known schema, so loading it runs no
-job.
+The page is hashed once and reduced to its latest row per key once; that
+``latest`` is cached, and the delta and the next state both read it. The
+checkpoint's max ts and the input row count are observed on the scan under
+it while the bodies are computed, so they cost no job of their own. The
+next state is the live state rows whose id the page does not hold (an
+anti-join against the broadcast page ids) plus the page's rows: only
+page-sized data crosses an exchange, the state is scanned and rewritten but
+never shuffled. A warm run executes: the bodies and their counts (one
+action: the state broadcast, the keep-latest shuffle, the latest cache, the
+body shuffle, the bodies cache and the count), the sink's own actions, and
+the state write (the page ids broadcast and the write). The state is read
+with its known schema, so loading it runs no job.
 
 State/checkpoint are saved after the sink succeeds, preserving the
 reference's at-least-once contract (app.js:55-58): a crash between send and
@@ -30,37 +34,19 @@ save re-sends; the sink upserts by id so re-sends are idempotent.
 from __future__ import annotations
 
 from collections.abc import Callable, Mapping, Sequence
+from contextlib import contextmanager
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import batch as batch_mod
 from . import checkpoint as ckpt_mod
 from . import state as state_mod
-from .delta import HASH_COL, changed_rows, ensure_content_hash, with_content_hash
+from .delta import changed_rows, keep_latest_per_key, with_content_hash
 from .log import log
 from .mapping import apply_mapping, to_json_rows
 from .model import EngineConfig, TableSpec
-
-
-def keep_latest_per_key(df: DataFrame, id_field: str, ts_field: str) -> DataFrame:
-    """Latest row per key (O15): the distributed equivalent of the
-    reference's Map.set last-write-wins within a page (cache.js:55-57).
-
-    Ties on (id, ts) go to the greater content hash (computed here unless
-    the frame already carries it; the output keeps it), so every plan that
-    evaluates this window picks the same row — the emitted body and the
-    hash the state stores come from one version. Rows that tie on the hash
-    too have the same content."""
-    hashed = ensure_content_hash(df, exclude=(ts_field,))
-    w = Window.partitionBy(id_field).orderBy(F.desc(ts_field), F.desc(HASH_COL))
-    return (
-        hashed.filter(F.col(id_field).isNotNull())
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
 
 
 def _project_to_json(delta: DataFrame, projection) -> DataFrame:
@@ -122,6 +108,29 @@ def run_incremental(
         )
 
 
+@contextmanager
+def _cache_at_coalesced_width(spark: SparkSession):
+    """Frames cached inside keep the width AQE coalesces their last
+    shuffle to, as the same plan run uncached does.
+
+    By default a cached plan keeps its last shuffle's full partition
+    count. The cached ``latest`` ends in the keep-latest shuffle, and the
+    batch ids are assigned per partition of it, so without this the body
+    count would depend on the caching. The setting is read when
+    ``cache()`` is called and restored on exit, so it never outlives the
+    run."""
+    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "true")
+    try:
+        yield
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+
 def _transition(
     page: DataFrame,
     state: DataFrame | None,
@@ -131,37 +140,35 @@ def _transition(
     now_epoch_ms: int | None,
     *,
     bucketed: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    """One state transition over a page of fetched rows, as two lazy
-    frames: the request bodies (keep-latest → changed-rows → projection →
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """One state transition over a page of fetched rows: the cached
+    ``latest`` (one row per key, with its content hash) and two lazy
+    frames that read it, the request bodies (changed-rows → projection →
     batch bodies) and the next state (purge expired keys, upsert every
-    seen key with a fresh TTL). Both read ``page``; a page that already
-    carries ``HASH_COL`` is not hashed again.
+    seen key with a fresh TTL). The caller unpersists ``latest`` once both
+    have run. A page that already carries ``HASH_COL`` is not hashed
+    again.
 
     The delta compares against the full stored state, expired keys
     included; only the next state drops them. The next state is planned
     here, so without ``now_epoch_ms`` its TTL clock is read now."""
-    latest = keep_latest_per_key(page, spec.id_field, spec.ts_field)
+    with _cache_at_coalesced_width(page.sparkSession):
+        latest = keep_latest_per_key(page, spec.id_field, spec.ts_field).cache()
     delta = changed_rows(latest, state, spec.id_field, ignore=(spec.ts_field,))
     jsons = _project_to_json(delta, projection)
     batched = batch_mod.assign_batches_distributed(jsons, config.max_batch_size)
     bodies = batch_mod.assemble_bodies(batched)
-    merge_kw = dict(
-        ignore=(spec.ts_field,),
-        ttl_hours=config.state_ttl_hours,
-        now_epoch_ms=now_epoch_ms,
-    )
+    merge_kw = dict(ttl_hours=config.state_ttl_hours, now_epoch_ms=now_epoch_ms)
     if bucketed:
-        # the join-based MERGE needs one row per key; with the state table
-        # bucketed by id only the page side shuffles
-        next_state = state_mod.merge_state_join(state, latest, spec.id_field, **merge_kw)
-    else:
-        # one window keeps the latest row per key and merges it (same
-        # order as keep_latest_per_key), so the page is not reduced twice
-        next_state = state_mod.merge_state(
-            state, page, spec.id_field, ts_field=spec.ts_field, **merge_kw
+        # with the state table bucketed by id, the join-based MERGE moves
+        # only the page side
+        next_state = state_mod.merge_state_join(
+            state, latest, spec.id_field, ignore=(spec.ts_field,), **merge_kw
         )
-    return bodies, next_state
+    else:
+        # the page's ids are broadcast to an anti-join: no state row moves
+        next_state = state_mod.upsert_state(state, latest, spec.id_field, **merge_kw)
+    return latest, bodies, next_state
 
 
 def _run_incremental_impl(
@@ -226,13 +233,14 @@ def _run_incremental_impl(
 
     scan = ckpt_mod.incremental_scan(source, spec.ts_field, checkpoint)
     scan, scan_stats = ckpt_mod.observe_scan(scan, spec.ts_field)
-    # hashed once and cached: the bodies action fills the cache (and the
-    # scan observation), the state merge reads it again
-    page = with_content_hash(scan, exclude=(spec.ts_field,)).cache()
-    bodies, next_state = _transition(
+    # hashed once; the bodies action fills the cached latest (and the scan
+    # observation under it), the state write reads it again
+    page = with_content_hash(scan, exclude=(spec.ts_field,))
+    latest, bodies, next_state = _transition(
         page, state, spec, projection, config, now_epoch_ms, bucketed=bucketed
     )
-    bodies = bodies.cache()
+    with _cache_at_coalesced_width(spark):
+        bodies = bodies.cache()
     try:
         # metrics derive from the cached bodies in ONE aggregate — emitted
         # rows = sum of per-batch item counts (delta is one row per emitted
@@ -248,12 +256,12 @@ def _run_incremental_impl(
         sink(bodies)
 
         # state + checkpoint persist AFTER the sink (at-least-once,
-        # app.js:55-58). The merge reads the whole page (all seen keys), not
-        # the delta, which reproduces TTL refresh-on-read for unchanged keys
+        # app.js:55-58). The merge reads every seen key (latest), not the
+        # delta, which reproduces TTL refresh-on-read for unchanged keys
         # (cache.js:79).
         persist_state(next_state)
     finally:
-        page.unpersist()
+        latest.unpersist()
         bodies.unpersist()
     new_ckpt = ckpt_mod.next_checkpoint(mx, checkpoint, partial_results)
     ckpt_mod.save_checkpoint(config.state_dir, spec.name, new_ckpt)
@@ -343,13 +351,24 @@ def run_streaming(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         now_b = now_fn(batch_id) if now_fn is not None else now_epoch_ms
+        # the state's id column has the stream's id type, so a known schema
+        # spares the inference job
+        state = state_mod.load_state(
+            spark,
+            config.state_dir,
+            spec.name,
+            schema=state_mod.state_schema(
+                spec.id_field, batch_df.schema[spec.id_field].dataType
+            )
+            if spec.id_field in batch_df.columns
+            else None,
+        )
         # zero-job empty probe (file-source checkpoint log); non-file
         # sources fall back to the take(1) job. A planned-rows>0 batch
         # emptied by caller-side transforms would run the main branch on
-        # an empty frame — same resulting state (merge_state filters
+        # an empty frame — same resulting state (the upsert filters
         # expired rows itself), plus one empty sink append.
         if probe_batch_rows(batch_df, checkpoint_dir, batch_id) == 0:
-            state = state_mod.load_state(spark, config.state_dir, spec.name)
             if state is not None:
                 now = state_mod.now_ms() if now_b is None else now_b
                 state_mod.save_state(
@@ -358,15 +377,17 @@ def run_streaming(
                     spec.name,
                 )
             return
-        state = state_mod.load_state(spark, config.state_dir, spec.name)
-        bodies, next_state = _transition(
+        latest, bodies, next_state = _transition(
             batch_df, state, spec, projection, config, now_b
         )
-        if sink_takes_batch_id:
-            sink(bodies, batch_id)
-        else:
-            sink(bodies)
-        state_mod.save_state(next_state, config.state_dir, spec.name)
+        try:
+            if sink_takes_batch_id:
+                sink(bodies, batch_id)
+            else:
+                sink(bodies)
+            state_mod.save_state(next_state, config.state_dir, spec.name)
+        finally:
+            latest.unpersist()
 
     run_available_now(stream, checkpoint_dir, process, timeout_sec=timeout_sec)
 

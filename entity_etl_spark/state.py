@@ -18,10 +18,12 @@ Batch representation: a plain DataFrame/parquet table
 ``(id, __content_hash, __ttl_ms)``. Streaming representation: see
 streaming.py (state store with native TTL).
 
-Scale notes: the merge is union + keep-latest window partitioned by id — one
-shuffle on id, the same key the delta join uses, so a cluster deployment
-bucketing state by id makes both exchanges disappear. Expired rows are
-filtered before the shuffle.
+Scale notes: the merge keeps the latest row per key of the PAGE, then
+upserts it: live state rows whose id the page does not hold (a map-side
+anti-join against the broadcast page ids) union the page's rows with a
+fresh TTL. Only page-sized data crosses an exchange; the state is scanned
+and rewritten, never shuffled. The bucketed layout (``state_buckets``)
+merges with :func:`merge_state_join` instead.
 """
 
 from __future__ import annotations
@@ -34,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .delta import HASH_COL, ensure_content_hash
+from .delta import HASH_COL, ensure_content_hash, keep_latest_per_key
 
 TTL_COL = "__ttl_ms"
 
@@ -308,12 +310,12 @@ def merge_state_join(
     WHEN MATCHED take the update, WHEN NOT MATCHED keep the (live) state row.
 
     Semantically equal to :func:`merge_state` when ``incoming`` is already
-    one-row-per-key (pipeline.keep_latest_per_key runs first); the payoff is
-    physical: against a bucketed state table the join needs NO shuffle on the
-    state side — only the (much smaller) per-run delta moves, where the
-    union+window path re-shuffles the full state every run. At 100 TB of
-    accumulated state that is the difference between a bucket-local merge and
-    a nightly full-network pass.
+    one-row-per-key (delta.keep_latest_per_key runs first). It is the
+    bucketed layout's merge: against a state table bucketed by id the join
+    needs NO shuffle on the state side, and its output keeps the id
+    partitioning the bucketed write needs. :func:`upsert_state`, the plain
+    layout's merge, spares the state a shuffle by broadcasting the page's
+    ids instead.
 
     TTL semantics unchanged: expired rows filtered before the join
     (cache.js:60-67); every seen key gets a fresh TTL (cache.js:79
@@ -347,6 +349,69 @@ def merge_state_join(
     )
 
 
+def _split_count(df: DataFrame) -> int:
+    """How many splits Spark's file scan cuts one file of ``df``'s
+    estimated size into (its FilePartition split size: one split below the
+    per-file open cost, one per core above it, at most
+    ``spark.sql.files.maxPartitionBytes`` each). Read from the plan's
+    statistics, so it runs no job. An unknown size (a frame without
+    statistics reads as huge) caps at the largest int, which no
+    ``coalesce`` narrows to."""
+    spark = df.sparkSession
+    conf = spark._jsparkSession.sessionState().conf()
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    per_core = size // spark.sparkContext.defaultParallelism
+    split = min(
+        conf.filesMaxPartitionBytes(), max(conf.filesOpenCostInBytes(), per_core)
+    )
+    return min(max(1, -(-size // split)), 2**31 - 1)
+
+
+def upsert_state(
+    state: DataFrame | None,
+    latest: DataFrame,
+    id_field: str,
+    *,
+    ttl_hours: float = 8.0,
+    now_epoch_ms: int | None = None,
+) -> DataFrame:
+    """The next state from the current one and a page's ``latest`` rows:
+
+        live(state) ⋉̸ broadcast(latest ids)  ∪  latest(id, hash, fresh ttl)
+
+    ``latest`` holds one row per non-null key and carries ``HASH_COL``
+    (:func:`~entity_etl_spark.delta.keep_latest_per_key`'s output). Every
+    key it holds gets its hash and a fresh TTL; live state rows of other
+    keys keep theirs; expired rows are dropped (cache.js:44-67).
+
+    Precondition: ``state`` holds one row per key. :func:`save_state` of
+    this function's output keeps it so; the union cannot create a
+    duplicate, because the anti-join removed every key that ``latest``
+    re-adds.
+
+    Only page-sized data moves: the page's ids are broadcast to a
+    map-side anti-join, so no window and no shuffle touch the state. The
+    output has as many partitions as Spark's file scan would cut one file
+    of the state's size into (:func:`_split_count`)."""
+    now_epoch_ms = now_ms() if now_epoch_ms is None else now_epoch_ms
+    ttl_ms = now_epoch_ms + int(ttl_hours * 3600 * 1000)
+    fresh = latest.select(
+        F.col(id_field), F.col(HASH_COL), F.lit(ttl_ms).cast("long").alias(TTL_COL)
+    )
+    if state is None:
+        return fresh
+    live = state.filter(F.col(TTL_COL) >= F.lit(now_epoch_ms)).select(
+        id_field, HASH_COL, TTL_COL
+    )
+    unseen = live.join(
+        F.broadcast(latest.select(id_field)), [id_field], "left_anti"
+    )
+    # a narrow coalesce (no shuffle): the page's rows ride along with the
+    # state's, and the file count follows the state's size instead of
+    # gaining the page's partitions every tick
+    return unseen.unionByName(fresh).coalesce(_split_count(state))
+
+
 def merge_state(
     state: DataFrame | None,
     incoming: DataFrame,
@@ -369,50 +434,19 @@ def merge_state(
        which reproduces refresh-on-read (cache.js:79) exactly: unchanged rows
        rewrite an identical hash with a fresh TTL.
 
-    ``incoming`` may hold several rows per key: the one window that merges
-    it into the state also keeps the latest row per key, ordered by
-    ``ts_field`` and then by content hash — the order of
-    pipeline.keep_latest_per_key, so the stored hash is the hash of the
-    row the run emitted. A ``HASH_COL`` already on ``incoming`` is reused.
+    ``incoming`` may hold several rows per key: it is first reduced to the
+    latest row per key (:func:`~entity_etl_spark.delta.keep_latest_per_key`,
+    by ``ts_field`` and then by content hash over the columns minus
+    ``ignore``; a ``HASH_COL`` already on ``incoming`` is reused), then
+    upserted by :func:`upsert_state`. The pipeline runs the keep-latest
+    once per tick and calls :func:`upsert_state` on it directly.
+
+    Precondition: ``state`` holds one row per key, as every
+    :func:`save_state` of this function's output does.
     """
-    now_epoch_ms = now_ms() if now_epoch_ms is None else now_epoch_ms
-    ttl_ms = now_epoch_ms + int(ttl_hours * 3600 * 1000)
-
-    # Intra-batch duplicates of a key: the reference's Map.set keeps the last
-    # row in array order (cache.js:55-57); distributed equivalent = keep the
-    # row with the greatest event time when one is available. State rows
-    # rank below every update (__prio), so their __ord is never compared.
-    if ts_field is not None and ts_field in incoming.columns:
-        order_col = F.col(ts_field)
-        state_ord = F.lit(None).cast(incoming.schema[ts_field].dataType)
-    else:
-        order_col = state_ord = F.lit(0)
-    updates = (
-        ensure_content_hash(
-            incoming.filter(F.col(id_field).isNotNull()), exclude=ignore
-        )
-        .withColumn("__ord", order_col)
-        .select(id_field, HASH_COL, "__ord")
-        .withColumn(TTL_COL, F.lit(ttl_ms))
-        .withColumn("__prio", F.lit(1))
-    )
-    if state is None:
-        base = updates
-    else:
-        live = (
-            state.filter(F.col(TTL_COL) >= F.lit(now_epoch_ms))
-            .withColumn("__prio", F.lit(0))
-            .withColumn("__ord", state_ord)
-        )
-        base = live.select(*updates.columns).unionByName(updates)
-
-    w = Window.partitionBy(id_field).orderBy(
-        F.desc("__prio"), F.desc("__ord"), F.desc(HASH_COL)
-    )
-    return (
-        base.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__prio", "__ord")
+    latest = keep_latest_per_key(incoming, id_field, ts_field, exclude=ignore)
+    return upsert_state(
+        state, latest, id_field, ttl_hours=ttl_hours, now_epoch_ms=now_epoch_ms
     )
 
 

@@ -24,11 +24,12 @@ SCHEMA = "id long, x string, updatedOnMs long"
 NOW = 1_700_000_000_000
 
 # Spark jobs of one warm non-bucketed tick whose sink runs one action:
-# the bodies action runs 7 (page cache, state broadcast, keep-latest
-# shuffle, body shuffle, bodies cache, and the two-stage count), the sink
-# 1, and the state write 2 (merge shuffle, write). Loading the state and
-# the checkpoint run none.
-WARM_TICK_JOBS = 10
+# the bodies action runs 6 (state broadcast, keep-latest shuffle, latest
+# cache, body shuffle, bodies cache, and the count, one stage because the
+# cached bodies keep AQE's coalesced width), the sink 1, and the state
+# write 2 (page ids broadcast, write). Loading the state and the
+# checkpoint run none.
+WARM_TICK_JOBS = 9
 
 
 def page(spark, tmp_path, name, rows):

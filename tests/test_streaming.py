@@ -378,6 +378,59 @@ def test_warm_neardup_batch_runs_the_job_budget(spark, tmp_path):
     assert kept == set(range(1, 41))
 
 
+# Spark jobs of one warm pipeline.run_streaming micro-batch whose sink runs
+# one action. The runner's own 2 are the state write (page ids broadcast,
+# write); loading the state with its known schema and probing the batch
+# run none. The sink's action runs 5 (state broadcast, keep-latest
+# shuffle, latest cache, body shuffle, and the bodies).
+WARM_STREAMING_RUNNER_JOBS = 2
+WARM_STREAMING_SINK_JOBS = 5
+
+
+def test_warm_run_streaming_batch_runs_the_job_budget(spark, tmp_path):
+    """Counted with the DAG scheduler's job counter, as the near-dup
+    budget is. The second drain is one warm micro-batch: every key
+    re-stamped, a quarter with new content."""
+    import json
+
+    from entity_etl_spark.model import EngineConfig
+    from entity_etl_spark.pipeline import run_streaming
+
+    schema = "id long, x string, updatedOnMs long"
+    spec = TableSpec(name="s", id_field="id", ts_field="updatedOnMs")
+    proj = [{"target": "out_id", "source": "id"},
+            {"target": "out_x", "source": "x"}]
+    cfg = EngineConfig(max_batch_size=7, state_dir=str(tmp_path / "state"))
+    src = str(tmp_path / "src")
+    sc = spark.sparkContext._jsc.sc()
+    sent, sink_jobs = [], []
+
+    def sink(bodies):
+        j0 = sc.dagScheduler().numTotalJobs()
+        for r in bodies.collect():
+            sent.extend(json.loads(r["body"]))
+        sink_jobs.append(sc.dagScheduler().numTotalJobs() - j0)
+
+    def drain(n, rows):
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
+            f"{src}/f{n}"
+        )
+        sent.clear()
+        sink_jobs.clear()
+        j0 = sc.dagScheduler().numTotalJobs()
+        run_streaming(
+            spark, spec, spark.readStream.schema(schema).parquet(f"{src}/f*"),
+            proj, cfg, sink, str(tmp_path / "ckpt"), now_epoch_ms=1_000,
+        )
+        total = sc.dagScheduler().numTotalJobs() - j0
+        return total - sum(sink_jobs), sink_jobs
+
+    drain(1, [(i, f"v{i}", 10) for i in range(40)])
+    jobs = drain(2, [(i, f"v{i}{'x' * (i % 4 == 0)}", 20) for i in range(40)])
+    assert sorted(e["out_id"] for e in sent) == list(range(0, 40, 4))
+    assert jobs == (WARM_STREAMING_RUNNER_JOBS, [WARM_STREAMING_SINK_JOBS])
+
+
 def test_neardup_prep_crash_replay_matches_a_clean_run(spark, tmp_path):
     """Micro-batch 1 crashes after its first state dir, its replay crashes
     after both, and a third drain completes it: the kept ids and the

@@ -1,5 +1,5 @@
-"""Per-query Spark job/stage/task counter: fresh JVM, bench-identical
-config, one query per job group.
+"""Per-query Spark job/stage/task counter: fresh JVM, the engine's session
+(session.get_spark) with bench's file split size, one query per job group.
 
 Usage: python tools/count_jobs.py SF_DIR QUERY [QUERY...]
 Env: CJ_CPUS (default 32), CJ_MEM (default 16g).
@@ -22,32 +22,26 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
     from entity_etl_spark.queries import REGISTRY
+    from entity_etl_spark.session import get_spark
 
     sf_dir = sys.argv[1]
     names = sys.argv[2:]
     cpus = os.environ.get("CJ_CPUS", "32")
-    mem = os.environ.get("CJ_MEM", "16g")
 
-    spark = (
-        SparkSession.builder.appName("cj")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.files.maxPartitionBytes", str(8 * 1024 * 1024))
-        .config("spark.driver.memory", mem)
-        .config("spark.ui.enabled", "false")
-        # job history must cover one whole query's jobs/stages so the
-        # counter reads complete groups (bench queries run hundreds of
-        # jobs in streaming harnesses)
-        .config("spark.ui.retainedJobs", "20000")
-        .config("spark.ui.retainedStages", "20000")
-        .getOrCreate()
+    spark = get_spark(
+        "cj",
+        master=f"local[{cpus}]",
+        shuffle_partitions=int(cpus),
+        extra_conf={
+            "spark.sql.files.maxPartitionBytes": str(8 * 1024 * 1024),
+            "spark.driver.memory": os.environ.get("CJ_MEM", "16g"),
+            # job history must cover one whole query's jobs/stages so the
+            # counter reads complete groups (bench queries run hundreds of
+            # jobs in streaming harnesses)
+            "spark.ui.retainedJobs": "20000",
+            "spark.ui.retainedStages": "20000",
+        },
     )
     sc = spark.sparkContext
     sc.setLogLevel("ERROR")

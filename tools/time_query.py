@@ -1,4 +1,5 @@
-"""Solo query timer: fresh JVM, bench-identical config, one query.
+"""Solo query timer: fresh JVM, the engine's session (session.get_spark)
+with bench's file split size, one query.
 
 Usage: python tools/time_query.py SF_DIR QUERY [QUERY...]
 Env: TQ_CPUS (default 32), TQ_MEM (default 16g), TQ_PARTS (default
@@ -19,34 +20,25 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
     from entity_etl_spark.queries import REGISTRY
+    from entity_etl_spark.session import get_spark
 
     sf_dir = sys.argv[1]
     names = sys.argv[2:]
     cpus = os.environ.get("TQ_CPUS", "32")
-    mem = os.environ.get("TQ_MEM", "16g")
     parts = os.environ.get("TQ_PARTS", cpus)
-    initial = os.environ.get("TQ_INITIAL_PARTS", parts)
     runs = int(os.environ.get("TQ_RUNS", "2"))
 
-    spark = (
-        SparkSession.builder.appName("tq")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", parts)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            initial,
-        )
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.files.maxPartitionBytes", str(8 * 1024 * 1024))
-        .config("spark.driver.memory", mem)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = get_spark(
+        "tq",
+        master=f"local[{cpus}]",
+        shuffle_partitions=int(parts),
+        extra_conf={
+            "spark.sql.adaptive.coalescePartitions.initialPartitionNum":
+                os.environ.get("TQ_INITIAL_PARTS", parts),
+            "spark.sql.files.maxPartitionBytes": str(8 * 1024 * 1024),
+            "spark.driver.memory": os.environ.get("TQ_MEM", "16g"),
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
     REGISTRY["incremental_scan"].fn(spark, sf_dir).count()  # warm-up
