@@ -235,8 +235,6 @@ SF01_REF_BESTS: dict[str, float] = {
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
     from entity_etl_spark.queries import REGISTRY
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -250,52 +248,29 @@ def main() -> None:
     # heaps; this is the local-mode equivalent, not engine tuning.
     default_mem = {"1": "48g", "10": "64g"}.get(sf, "16g")
 
-    # AQE partition sizing: r9 promoted the r8 lesson (512 initial at
-    # sf10 fixes the final-agg sort-spill; the same wide start measured
-    # ~3x HARMFUL at sf1) from this harness into the ENGINE —
-    # session.aqe_initial_partitions keys the start width on scanned
-    # input bytes (1 GiB threshold, ~4 MiB compressed per partition,
-    # pow2, clamped). The bench consumes the engine policy so the
-    # numbers measure what a deployment actually gets; at the measured
-    # anchors it reproduces the r8 confs exactly (sf10 1.81 GB -> 512,
-    # sf1 172 MB -> cpus, sf0.1 -> cpus).
-    from entity_etl_spark.session import (
-        aqe_initial_partitions,
-        estimate_input_bytes,
-    )
+    # The engine's session policy (session.get_spark), including its AQE
+    # start width keyed on the scanned input bytes, so the numbers measure
+    # what a deployment actually gets; only what timing needs sits on top.
+    from entity_etl_spark.session import estimate_input_bytes, get_spark
 
-    initial_parts = str(
-        aqe_initial_partitions(
-            estimate_input_bytes(sf_dir), int(cpus) if cpus.isdigit() else 32
-        )
-    )
-
-    spark = (
-        SparkSession.builder.appName("entity-etl-spark-bench")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            initial_parts,
-        )
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # small test-scale files must still split across all cores; at real
-        # scale files exceed this and the default behavior is identical
-        .config("spark.sql.files.maxPartitionBytes", str(8 * 1024 * 1024))
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_DRIVER_MEMORY", default_mem),
-        )
-        .config("spark.ui.enabled", "false")
-        # the status store must still hold every job and stage of a
-        # query's first run when query_stats reads it (streaming harness
-        # queries run hundreds of jobs per run; the default keeps 1000)
-        .config("spark.ui.retainedJobs", "20000")
-        .config("spark.ui.retainedStages", "20000")
-        .getOrCreate()
+    spark = get_spark(
+        app_name="entity-etl-spark-bench",
+        input_bytes=estimate_input_bytes(sf_dir),
+        extra_conf={
+            # small test-scale files must still split across all cores; at
+            # real scale files exceed this and the default behavior is
+            # identical
+            "spark.sql.files.maxPartitionBytes": str(8 * 1024 * 1024),
+            "spark.driver.memory": os.environ.get(
+                "SPARK_DRIVER_MEMORY", default_mem
+            ),
+            # the status store must still hold every job and stage of a
+            # query's first run when query_stats reads it (streaming
+            # harness queries run hundreds of jobs per run; the default
+            # keeps 1000)
+            "spark.ui.retainedJobs": "20000",
+            "spark.ui.retainedStages": "20000",
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
 

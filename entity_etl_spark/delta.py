@@ -127,12 +127,3 @@ def changed_rows(
         )
         .drop("__state_id", "__state_hash", HASH_COL)
     )
-
-
-def seen_keys(incoming: DataFrame, id_field: str) -> DataFrame:
-    """Distinct non-null ids observed this batch. The reference refreshes
-    state TTL for every *seen* key, changed or not (cache.js:79 — a
-    side-effecting filter predicate; here it is an explicit pure set)."""
-    return (
-        incoming.filter(F.col(id_field).isNotNull()).select(id_field).distinct()
-    )

@@ -56,10 +56,6 @@ def state_schema(id_field: str, id_type: T.DataType) -> T.StructType:
     )
 
 
-def empty_state(spark: SparkSession, id_type: T.DataType, id_field: str) -> DataFrame:
-    return spark.createDataFrame([], state_schema(id_field, id_type))
-
-
 def state_path(state_dir: str, table: str) -> str:
     return os.path.join(state_dir, f"{table}.state.parquet")
 

@@ -8,17 +8,16 @@ Streaming natively:
 - file/parquet ``readStream`` + checkpointLocation replaces the
   ``updatedFromMs`` high-water mark (the source tracks processed files;
   offsets live in the checkpoint — O1/O3/O14 for free);
-- ``withWatermark`` bounds state, replacing the TTL horizon for the dedup
-  operator (O13);
-- changed-row suppression (O5) = ``dropDuplicates([id, content_hash])``
-  within the watermark — identical content re-arriving is suppressed,
-  changed content (new hash) passes;
-- last-write-wins upsert state (O12/O15) with explicit TTL =
-  ``applyInPandasWithState`` keyed by id, state = (content_hash, ttl),
-  ProcessingTimeTimeout purges idle keys — the exact cache.js contract;
 - ``Trigger.AvailableNow`` drains everything pending then stops — the
   streaming twin of the reference's do…while(partialResults) page loop
-  (app.js:48-59) on a cron tick.
+  (app.js:48-59) on a cron tick;
+- the keyed TTL state itself (change detection O5, last-write-wins
+  O12/O15, TTL purge and refresh-on-read O13) is not a streaming state
+  store: ``pipeline.run_streaming`` runs the same transition as
+  ``run_incremental`` over the keyed state table inside ``foreachBatch``;
+- the rest serves every ``foreachBatch`` callback: the zero-job
+  empty-batch probe, batch spreading, and the per-batch-slot state kernel
+  of the exactly-mergeable sketch families.
 
 Delivery remains at-least-once toward the sink (state commits after the
 batch), matching app.js:55-58; sinks must upsert by id.
@@ -27,16 +26,11 @@ batch), matching app.js:55-58; sinks must upsert by id.
 from __future__ import annotations
 
 import re
-from collections.abc import Callable, Sequence
-from typing import Any, Iterator
+from collections.abc import Callable
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-from .delta import HASH_COL, content_hash
-from .model import TableSpec
 
 
 def stream_source(
@@ -52,117 +46,6 @@ def stream_source(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.format(fmt).load(path)
-
-
-def changed_rows_stream(
-    stream: DataFrame,
-    spec: TableSpec,
-    watermark_delay: str = "1 hour",
-) -> DataFrame:
-    """Streaming changed-row suppression (O5 + O13 in one operator).
-
-    Emits a row iff its (id, content-hash-ignoring-ts) pair was not seen
-    within the watermark horizon. The watermark bounds the dedup state the
-    same way the reference's TTL bounds its cache (cache.js:60-67)."""
-    hashed = stream.withColumn(
-        HASH_COL, content_hash(stream.columns, exclude=(spec.ts_field,))
-    )
-    return (
-        hashed.filter(F.col(spec.id_field).isNotNull())
-        .withWatermark(spec.ts_field, watermark_delay)
-        .dropDuplicates([spec.id_field, HASH_COL])
-        .drop(HASH_COL)
-    )
-
-
-_TTL_HASH_COL = "__ttl_hash"
-
-
-def _ttl_dedup_fn(
-    id_field: str,
-    ts_field: str,
-    ttl_ms: int,
-    out_columns: Sequence[str],
-):
-    """Builds the applyInPandasWithState function for stateful TTL dedup
-    (O5/O12/O13): state per key = (content_hash, ttl); emit on new/changed;
-    refresh TTL on every sighting (cache.js:79 refresh-on-read); purge on
-    timeout.
-
-    The content hash arrives PRE-COMPUTED in ``_TTL_HASH_COL`` — the same
-    JVM-side :func:`delta.content_hash` expression the batch path uses, so
-    batch and streaming dedup states are interchangeable and the Python side
-    does no per-row work. The chain rule "emit iff hash differs from the
-    previously kept hash" collapses to a vectorized shifted-series compare:
-    a skipped row's hash always EQUALS the carried hash, so the carried hash
-    is simply the previous row's hash — first-of-each-consecutive-run."""
-    import pandas as pd
-
-    out_cols = list(out_columns)
-
-    def fn(
-        key: tuple, pdfs: Iterator["pd.DataFrame"], state: GroupState
-    ) -> Iterator["pd.DataFrame"]:
-        if state.hasTimedOut:
-            state.remove()  # TTL purge (cache.js:60-67)
-            return
-        prev_hash = state.get[0] if state.exists else None
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            pdf = pdf.sort_values(ts_field)
-            h = pdf[_TTL_HASH_COL]
-            shifted = h.shift(1)
-            if prev_hash is not None:
-                shifted.iloc[0] = prev_hash
-            # NaN != anything -> first row emits when there is no prior state
-            keep = h.ne(shifted)
-            prev_hash = h.iloc[-1]
-            out = pdf.loc[keep, out_cols]
-            if len(out):
-                yield out
-        state.update((prev_hash,))
-        state.setTimeoutDuration(ttl_ms)  # refresh-on-read (cache.js:79)
-
-    return fn
-
-
-def stateful_ttl_dedup(
-    stream: DataFrame,
-    spec: TableSpec,
-    ttl_hours: float = 8.0,
-) -> DataFrame:
-    """Keyed state with explicit TTL via applyInPandasWithState — the full
-    cache.js contract (change detection + last-write-wins + TTL purge +
-    refresh-on-read) as one stateful streaming operator.
-
-    Use :func:`changed_rows_stream` (watermark + dropDuplicates, pure
-    built-ins) when event-time TTL is acceptable; use this when TTL must be
-    processing-time like the reference's wall-clock TTL (cache.js:95-97)."""
-    out_schema = stream.schema
-    fn = _ttl_dedup_fn(
-        spec.id_field,
-        spec.ts_field,
-        int(ttl_hours * 3600 * 1000),
-        stream.columns,
-    )
-    # hash JVM-side with the SAME expression as the batch path (delta.py) —
-    # batch and streaming states share hash semantics, and Python only does
-    # one vectorized series compare per key-batch
-    hashed = stream.withColumn(
-        _TTL_HASH_COL, content_hash(stream.columns, exclude=(spec.ts_field,))
-    )
-    return (
-        hashed.filter(F.col(spec.id_field).isNotNull())
-        .groupBy(spec.id_field)
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType="h string",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-        )
-    )
 
 
 def run_available_now(
@@ -182,16 +65,16 @@ def run_available_now(
     correctly, so the error is retryable).
 
     Completion is detected by *progress*, not only by query termination:
-    a stateful operator with ``ProcessingTimeTimeout`` timers keeps an
-    availableNow query alive indefinitely (timer expiry schedules fresh
-    zero-input micro-batches after the source is drained, so
-    ``awaitTermination`` never returns True). availableNow plans all
-    pending offsets up front and runs them in the earliest batches, so
-    a completed batch with ``numInputRows == 0`` while the source
-    reports no data available means every pending batch has been
-    delivered to ``batch_fn`` — the drain is complete and the query is
-    stopped gracefully (timer-only batches emit nothing for our
-    append-mode state ops; TTL purge on a later real run re-arms).
+    a caller's stateful operator with ``ProcessingTimeTimeout`` timers
+    (``applyInPandasWithState``) keeps an availableNow query alive
+    indefinitely (timer expiry schedules fresh zero-input micro-batches
+    after the source is drained, so ``awaitTermination`` never returns
+    True). availableNow plans all pending offsets up front and runs them
+    in the earliest batches, so a completed batch with
+    ``numInputRows == 0`` while the source reports no data available
+    means every pending batch has been delivered to ``batch_fn`` — the
+    drain is complete and the query is stopped gracefully (a timer that
+    has not fired yet fires in a later run, from the checkpointed state).
 
     Two refinements close races in that detection:
 
@@ -284,112 +167,6 @@ def run_available_now(
             "output is a prefix of the pending batches; re-run resumes "
             "from the checkpointed offsets (or raise timeout_sec)"
         )
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas twin (Spark 4 StatefulProcessor API)
-# ---------------------------------------------------------------------------
-
-try:  # the API landed in Spark 4.0; guard so older runtimes still import.
-    # Runtime also needs protobuf: the TWS state server speaks a protobuf
-    # protocol (pyspark/sql/streaming/proto/StateMessage_pb2) — absent in
-    # some minimal environments, so gate on both.
-    import google.protobuf.descriptor  # noqa: F401
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    _HAS_TWS = True
-except ImportError:  # pragma: no cover
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-    _HAS_TWS = False
-
-
-class TtlDedupProcessor(StatefulProcessor):
-    """The cache.js contract (change-detect + last-write-wins + TTL purge +
-    refresh-on-read) on the Spark 4 ``transformWithStateInPandas`` API —
-    the successor of :func:`stateful_ttl_dedup`'s applyInPandasWithState.
-
-    What the new API buys at scale: typed per-key ValueState with a
-    *native* TTL (``ttlDurationMs`` — the state store expires keys without
-    a user-managed timer, exactly cache.js:60-67), incremental state
-    checkpointing (RocksDB changelog), and the same Arrow batch transfer.
-    The Python side stays vectorized: the emit rule collapses to one
-    shifted-series compare per key-batch (see ``_ttl_dedup_fn``); the
-    content hash arrives pre-computed JVM-side so batch and streaming
-    dedup states stay interchangeable.
-    """
-
-    def __init__(self, id_field: str, ts_field: str, ttl_ms: int,
-                 out_columns: Sequence[str]):
-        self._id = id_field
-        self._ts = ts_field
-        self._ttl_ms = ttl_ms
-        self._out_cols = list(out_columns)
-
-    def init(self, handle: "StatefulProcessorHandle") -> None:
-        # native state TTL: refresh happens on every update (refresh-on-read)
-        self._h = handle.getValueState(
-            "h", "h string", ttlDurationMs=self._ttl_ms
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        prev = self._h.get() if self._h.exists() else None
-        prev_hash = prev[0] if prev is not None else None
-        for pdf in rows:
-            if pdf.empty:
-                continue
-            pdf = pdf.sort_values(self._ts)
-            h = pdf[_TTL_HASH_COL]
-            shifted = h.shift(1)
-            if prev_hash is not None:
-                shifted.iloc[0] = prev_hash
-            keep = h.ne(shifted)
-            prev_hash = h.iloc[-1]
-            out = pdf.loc[keep, self._out_cols]
-            if len(out):
-                yield out
-        # update == TTL refresh for this key, even when nothing was emitted
-        self._h.update((prev_hash,))
-
-    def close(self) -> None:
-        pass
-
-
-def stateful_ttl_dedup_tws(
-    stream: DataFrame,
-    spec: TableSpec,
-    ttl_hours: float = 8.0,
-) -> DataFrame:
-    """:func:`stateful_ttl_dedup` re-expressed on transformWithStateInPandas.
-
-    Same semantics, pinned equal by ``tests/test_streaming.py``; prefer
-    this variant on Spark 4 state stores (RocksDB + changelog
-    checkpointing) — TTL is enforced by the store itself instead of a
-    per-key processing-time timer."""
-    if not _HAS_TWS:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires Spark >= 4.0 and the "
-            "protobuf package (the TWS state-server protocol)"
-        )
-    out_schema = stream.schema
-    hashed = stream.withColumn(
-        _TTL_HASH_COL, content_hash(stream.columns, exclude=(spec.ts_field,))
-    )
-    proc = TtlDedupProcessor(
-        spec.id_field,
-        spec.ts_field,
-        int(ttl_hours * 3600 * 1000),
-        stream.columns,
-    )
-    return (
-        hashed.filter(F.col(spec.id_field).isNotNull())
-        .groupBy(spec.id_field)
-        .transformWithStateInPandas(
-            proc,
-            outputStructType=out_schema,
-            outputMode="append",
-            timeMode="ProcessingTime",
-        )
-    )
 
 
 def require_local_state_paths(*paths: str) -> None:

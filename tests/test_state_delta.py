@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from entity_etl_spark.checkpoint import max_ts, next_checkpoint
-from entity_etl_spark.delta import changed_rows, seen_keys, with_content_hash
+from entity_etl_spark.delta import changed_rows, with_content_hash
 from entity_etl_spark.state import TTL_COL, merge_state
 
 COLS = ["id", "x", "updatedOnMs"]
@@ -77,11 +77,6 @@ def test_ttl_expiry_and_refresh(spark, seed_state):
     rows = st.collect()
     assert [r["id"] for r in rows] == [3]          # 1,2 expired; 3 survived
     assert rows[0][TTL_COL] == later + 8 * 3600 * 1000  # fresh TTL
-
-
-def test_seen_keys(spark):
-    batch = df_of(spark, [(1, 11, 10), (1, 12, 11), (None, 0, 1), (2, 5, 5)])
-    assert sorted(r["id"] for r in seen_keys(batch, "id").collect()) == [1, 2]
 
 
 def test_checkpoint_rules(spark):
@@ -246,78 +241,3 @@ def test_apply_cdc_none_state(spark):
     nxt = apply_cdc(None, changes, "id", "ts", tiebreak="eid")
     rows = {(r.id, r.op if "op" in nxt.columns else None) for r in nxt.collect()}
     assert {r[0] for r in rows} == {1}
-
-
-# ------------------------------------------------------- state backends
-def test_delta_probe_and_backend_resolution(spark):
-    """Capability probe: this sandbox has no delta-spark, so the probe
-    must say False, 'auto' must fall back to the bucketed backend, and
-    an explicit 'delta' request must fail loudly AT RESOLUTION (not
-    later inside a job) with install guidance."""
-    import pytest
-
-    from entity_etl_spark.state_backend import (
-        delta_available,
-        resolve_backend,
-    )
-
-    assert delta_available(spark) is False
-    assert resolve_backend("auto", spark).name == "bucketed"
-    assert resolve_backend("parquet").name == "parquet"
-    with pytest.raises(RuntimeError, match="delta-spark"):
-        resolve_backend("delta", spark)
-
-
-def test_state_backends_share_merge_contract(spark, tmp_path):
-    """The one-config-swap contract: parquet and bucketed backends run
-    the SAME merge cycle (purge expired -> upsert matched -> insert new
-    -> refresh TTL) and must land on identical state — the vendored-free
-    stand-in proving the interface the Delta MERGE implements natively
-    (reference cache.js:37-42 save-after-run)."""
-    from entity_etl_spark.delta import HASH_COL
-    from entity_etl_spark.state import TTL_COL
-    from entity_etl_spark.state_backend import resolve_backend, run_merge_cycle
-
-    t0 = 1_000_000
-    batches = [
-        # run 1: three fresh entities
-        [(1, "a", 10), (2, "b", 10), (3, "c", 10)],
-        # run 2: 2 changes content, 4 is new, 1 unseen (TTL keeps it),
-        [(2, "B", 20), (4, "d", 20)],
-        # run 3: only 4 seen again
-        [(4, "D", 30)],
-    ]
-    finals = {}
-    for kind in ("parquet", "bucketed"):
-        backend = resolve_backend(kind)
-        state_dir = str(tmp_path / kind)
-        for i, rows in enumerate(batches):
-            df = spark.createDataFrame(
-                rows, "id long, payload string, updatedOnMs long"
-            )
-            out = run_merge_cycle(
-                backend, df, state_dir, "entities", "id",
-                ttl_hours=1.0, now_epoch_ms=t0 + i,
-            )
-        finals[kind] = {
-            r["id"]: (r[HASH_COL], r[TTL_COL]) for r in out.collect()
-        }
-    assert finals["parquet"] == finals["bucketed"]
-    # all four keys alive (nothing reached TTL expiry at these clocks)
-    assert set(finals["parquet"]) == {1, 2, 3, 4}
-    # content change rewrote 2's hash; refresh-on-write bumped 4's TTL
-    assert finals["parquet"][4][1] == t0 + 2 + 3600 * 1000
-
-    # TTL purge: advance the clock past expiry; only the re-seen key
-    # survives the next cycle
-    for kind in ("parquet", "bucketed"):
-        backend = resolve_backend(kind)
-        state_dir = str(tmp_path / kind)
-        df = spark.createDataFrame(
-            [(9, "z", 99)], "id long, payload string, updatedOnMs long"
-        )
-        out = run_merge_cycle(
-            backend, df, state_dir, "entities", "id",
-            ttl_hours=1.0, now_epoch_ms=t0 + 2 + 3600 * 1000 + 1,
-        )
-        assert {r["id"] for r in out.collect()} == {9}, kind

@@ -1,18 +1,15 @@
-"""Structured Streaming pipeline tests: incremental file ingestion with
-checkpoint (O1/O14), streaming changed-row suppression (O5), stateful TTL
-dedup (O12/O13)."""
+"""Structured Streaming tests: ``pipeline.run_streaming`` over an
+incremental file source with its checkpoint (O1/O14), pinned to the
+cache.js transition (changed-row suppression O5, keep-latest O15, TTL
+state O12/O13); the availableNow drain; and the built-in stateful
+operators the registered streaming queries run."""
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from entity_etl_spark.model import TableSpec
-from entity_etl_spark.streaming import (
-    changed_rows_stream,
-    run_available_now,
-    stateful_ttl_dedup,
-    stream_source,
-)
+from entity_etl_spark.streaming import run_available_now, stream_source
 
 SCHEMA = T.StructType(
     [
@@ -40,55 +37,89 @@ def drain(spark, src_dir, ckpt, transform):
     return collected
 
 
+def drain_pipeline(spark, src_dir, ckpt, state_dir, now_epoch_ms):
+    """One availableNow drain of ``pipeline.run_streaming`` over the file
+    source with an 8 h TTL and a fixed clock: the sorted ``(id, x)`` of
+    every item the sink received."""
+    import json
+
+    from entity_etl_spark.model import EngineConfig
+    from entity_etl_spark.pipeline import run_streaming
+
+    sent = []
+    run_streaming(
+        spark,
+        SPEC,
+        stream_source(spark, f"{src_dir}/f*", SCHEMA),
+        [{"target": "id", "source": "id"}, {"target": "x", "source": "x"}],
+        EngineConfig(state_ttl_hours=8.0, state_dir=state_dir),
+        lambda bodies: sent.extend(
+            (e["id"], e["x"])
+            for r in bodies.collect()
+            for e in json.loads(r["body"])
+        ),
+        ckpt,
+        now_epoch_ms=now_epoch_ms,
+    )
+    return sorted(sent)
+
+
+TTL_MS = 8 * 3600 * 1000
+
+
 def test_incremental_file_source_with_changed_row_suppression(spark, tmp_path):
     src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    xform = lambda s: changed_rows_stream(s, SPEC, "10 minutes")
+    args = (str(tmp_path / "ckpt"), str(tmp_path / "state"))
 
     # batch 1: three entities
     write_batch(spark, src, [(1, 11, 0), (2, 12, 1), (3, 13, 2)], 1)
-    got1 = drain(spark, src, ckpt, xform)
-    assert sorted(r["id"] for r in got1) == [1, 2, 3]
+    assert drain_pipeline(spark, src, *args, 1_000) == [(1, 11), (2, 12), (3, 13)]
 
     # batch 2 (new files): unchanged re-send of 1 (new ts), changed 2, new 4,
     # and a null id that must be dropped
     write_batch(spark, src, [(1, 11, 3), (2, 24, 4), (4, 14, 5)], 2)
     write_batch(spark, src, [(None, 99, 6)], 3)
-    got2 = drain(spark, src, ckpt, xform)
-    # id=1 re-sent with SAME content -> suppressed by the (id, hash) dedup
-    # state carried in the checkpoint; 2 changed and 4 new -> emitted
-    assert sorted(r["id"] for r in got2) == [2, 4]
+    # id=1 re-sent with SAME content -> suppressed by the content-hash state;
+    # 2 changed and 4 new -> emitted
+    assert drain_pipeline(spark, src, *args, 2_000) == [(2, 24), (4, 14)]
     # restart with same checkpoint and no new files -> nothing
-    assert drain(spark, src, ckpt, xform) == []
+    assert drain_pipeline(spark, src, *args, 3_000) == []
 
 
 def test_stateful_ttl_dedup_truth_table(spark, tmp_path):
     src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    xform = lambda s: stateful_ttl_dedup(s, SPEC, ttl_hours=8.0)
+    args = (str(tmp_path / "ckpt"), str(tmp_path / "state"))
 
     write_batch(spark, src, [(1, 11, 0), (2, 12, 1), (3, 13, 2)], 1)
-    got1 = drain(spark, src, ckpt, xform)
-    assert sorted(r["id"] for r in got1) == [1, 2, 3]
+    assert drain_pipeline(spark, src, *args, 1_000) == [(1, 11), (2, 12), (3, 13)]
 
     # the cache.test.js:84-96 truth table: same-content/new-ts suppressed,
     # changed emitted, identical suppressed, new emitted
     write_batch(spark, src, [(1, 11, 3), (2, 24, 4), (3, 13, 2), (4, 14, 5)], 2)
-    got2 = drain(spark, src, ckpt, xform)
-    assert sorted(r["id"] for r in got2) == [2, 4]
+    assert drain_pipeline(spark, src, *args, 2_000) == [(2, 24), (4, 14)]
+
+    # every key was last seen at t=2000, so all have expired at this tick.
+    # Key 3, expired but not yet purged, is still suppressed: the delta
+    # compares against the stored state, expired keys included
+    write_batch(spark, src, [(3, 13, 6)], 3)
+    assert drain_pipeline(spark, src, *args, 2_000 + TTL_MS + 1) == []
+
+    # that tick purged the keys it did not see, so key 1's identical
+    # re-send is new again (cache.js:60-67)
+    write_batch(spark, src, [(1, 11, 7)], 4)
+    assert drain_pipeline(spark, src, *args, 2_000 + TTL_MS + 2) == [(1, 11)]
 
 
-def test_intra_batch_change_sequence_emitted_in_order(spark, tmp_path):
-    # two different values of one key in one batch: both are changes
-    # (the reference would see them across pages; LWW state ends at the last)
+def test_intra_batch_versions_keep_the_latest(spark, tmp_path):
+    """Several versions of one key in one micro-batch: only the latest by
+    ts is compared and emitted (O15, ``delta.keep_latest_per_key``), as in
+    ``run_incremental``; the next batch compares against that version."""
     src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    write_batch(spark, src, [(7, 1, 0), (7, 2, 1), (7, 2, 2)], 1)
-    got = drain(spark, src, ckpt, lambda s: stateful_ttl_dedup(s, SPEC))
-    assert [(r["id"], r["x"]) for r in sorted(got, key=lambda r: r["ts"])] == [
-        (7, 1),
-        (7, 2),
-    ]
+    args = (str(tmp_path / "ckpt"), str(tmp_path / "state"))
+    write_batch(spark, src, [(7, 1, 10), (7, 2, 11), (7, 2, 12)], 1)
+    assert drain_pipeline(spark, src, *args, 1_000) == [(7, 2)]
+    write_batch(spark, src, [(7, 2, 13), (7, 1, 14)], 2)
+    assert drain_pipeline(spark, src, *args, 2_000) == [(7, 1)]
 
 
 def test_streaming_session_window_aggregation(spark, tmp_path):
@@ -202,47 +233,6 @@ def test_run_streaming_prep_cross_batch_dedup(spark, tmp_path):
     assert {r.doc_id for r in all_rows} == {1, 3, 11}  # 10 deduped cross-batch
     # split column survives the partitioned write
     assert all(r.split in ("train", "val", "test") for r in all_rows)
-
-
-def test_transform_with_state_ttl_dedup_matches_applyinpandas(spark, tmp_path):
-    """The Spark 4 transformWithStateInPandas variant reproduces the exact
-    cache.test.js truth table the applyInPandasWithState path pins — the
-    two stateful APIs are behavioral twins."""
-    from entity_etl_spark.streaming import _HAS_TWS, stateful_ttl_dedup_tws
-
-    if not _HAS_TWS:
-        pytest.skip(
-            "transformWithStateInPandas needs google.protobuf (state-server "
-            "protocol), absent in this environment"
-        )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    # transformWithState requires the RocksDB state store provider
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        src = str(tmp_path / "src")
-        ckpt = str(tmp_path / "ckpt")
-        xform = lambda s: stateful_ttl_dedup_tws(s, SPEC, ttl_hours=8.0)
-
-        write_batch(spark, src, [(1, 11, 0), (2, 12, 1), (3, 13, 2)], 1)
-        got1 = drain(spark, src, ckpt, xform)
-        assert sorted(r["id"] for r in got1) == [1, 2, 3]
-
-        write_batch(
-            spark, src, [(1, 11, 3), (2, 24, 4), (3, 13, 2), (4, 14, 5)], 2
-        )
-        got2 = drain(spark, src, ckpt, xform)
-        assert sorted(r["id"] for r in got2) == [2, 4]
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
 
 
 def test_stream_static_broadcast_enrichment(spark, tmp_path):
@@ -579,8 +569,7 @@ def test_planned_batch_rows_never_reads_a_kafka_checkpoint_as_empty(
 
 
 def test_drop_duplicates_within_watermark(spark, tmp_path):
-    """dropDuplicatesWithinWatermark: the built-in twin of the
-    applyInPandasWithState TTL dedup (stateful_ttl_dedup) — dedup state
+    """dropDuplicatesWithinWatermark: built-in streaming dedup whose state
     for a key is dropped once the watermark passes its event time, so
     state is bounded without a custom processor. A re-send INSIDE the
     watermark window is suppressed even when its timestamp differs (the
@@ -603,10 +592,11 @@ def test_drop_duplicates_within_watermark(spark, tmp_path):
 
 
 def test_stateful_dedup_under_rocksdb_state_store(spark, tmp_path):
-    """The same changed-row suppression drains correctly under the
-    RocksDB state store provider — the 100 TB state backend (state
-    spills to disk instead of living in executor heap; changelog
-    checkpointing). No extra deps: RocksDB ships in Spark core."""
+    """The watermark-bounded dedup the ``streaming_dedup_watermark`` query
+    runs (``withWatermark`` + ``dropDuplicatesWithinWatermark``) drains
+    correctly under the RocksDB state store provider — the 100 TB state
+    backend (state spills to disk instead of living in executor heap;
+    changelog checkpointing). No extra deps: RocksDB ships in Spark core."""
     key = "spark.sql.streaming.stateStore.providerClass"
     old = spark.conf.get(key, None)
     try:
@@ -617,7 +607,9 @@ def test_stateful_dedup_under_rocksdb_state_store(spark, tmp_path):
         )
         src = str(tmp_path / "src")
         ckpt = str(tmp_path / "ckpt")
-        xform = lambda s: changed_rows_stream(s, SPEC, "10 minutes")
+        xform = lambda s: s.withWatermark(
+            "ts", "10 minutes"
+        ).dropDuplicatesWithinWatermark(["id", "x"])
         write_batch(spark, src, [(1, 11, 0), (2, 12, 1)], 1)
         got1 = drain(spark, src, ckpt, xform)
         assert sorted(r["id"] for r in got1) == [1, 2]
@@ -631,6 +623,53 @@ def test_stateful_dedup_under_rocksdb_state_store(spark, tmp_path):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, old)
+
+
+def test_available_now_drain_ends_under_processing_time_timers(spark, tmp_path):
+    """A ``ProcessingTimeTimeout`` timer keeps an availableNow query alive
+    after its source is drained: Spark keeps planning zero-input batches
+    for the timers, so the query never terminates by itself. The drain
+    must still end well inside its timeout, through the zero-input
+    fallback (a file source reports no ``latestOffset``), with every row
+    delivered to ``batch_fn``."""
+    import time
+
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    def count(key, pdfs, state):
+        if state.hasTimedOut:
+            state.remove()
+            return
+        n = (state.get[0] if state.exists else 0) + sum(len(p) for p in pdfs)
+        state.update((n,))
+        state.setTimeoutDuration(3_600_000)
+        yield pd.DataFrame({"id": [key[0]], "n": [n]})
+
+    src = str(tmp_path / "src")
+    write_batch(spark, src, [(1, 1, 0), (2, 1, 1), (1, 1, 2)], 1)
+    write_batch(spark, src, [(1, 1, 3), (3, 1, 4)], 2)
+    counts = (
+        stream_source(spark, f"{src}/f*", SCHEMA, max_files_per_trigger=1)
+        .groupBy("id")
+        .applyInPandasWithState(
+            count,
+            outputStructType="id long, n long",
+            stateStructType="n long",
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+        )
+    )
+    seen = {}
+    t0 = time.monotonic()
+    run_available_now(
+        counts,
+        str(tmp_path / "ckpt"),
+        lambda df, _bid: seen.update((r["id"], r["n"]) for r in df.collect()),
+        timeout_sec=60.0,
+    )
+    assert time.monotonic() - t0 < 30.0
+    assert seen == {1: 3, 2: 1, 3: 1}
 
 
 def test_stream_stream_left_outer_join_null_completion(spark, tmp_path):

@@ -1,12 +1,9 @@
-"""Re-probe the env-blocked capabilities each round (VERDICT r6 item 7)
-and emit a machine-readable artifact so every "env-blocked" claim in
-SURVEY.md §8 stays auditable.
+"""Re-probe the env-blocked capabilities and emit a machine-readable
+artifact so every "env-blocked" claim in SURVEY.md §8 stays auditable.
 
-Probes (all capabilities the repo gates behind import-try / runtime
+Probes (the capabilities the repo still gates behind import-try / runtime
 fallbacks, with the feature each one would unlock):
 
-- delta-spark      -> live Delta MERGE INTO state backend (state_backend.py)
-- google.protobuf  -> live transformWithStateInPandas (streaming.py TWS twin)
 - avro / fastavro  -> python-side Avro; plus a LIVE format("avro") round-trip
                       attempt (Spark ships avro core jars for internal use,
                       but the spark-avro DSv2 module is a separate artifact)
@@ -29,8 +26,6 @@ import sys
 import time
 
 MODULES = (
-    "delta",
-    "google.protobuf",
     "avro",
     "fastavro",
     "PIL",
@@ -60,8 +55,7 @@ def probe() -> dict:
     jar_dir = os.path.join(os.path.dirname(pyspark.__file__), "jars")
     out["relevant_jars"] = sorted(
         os.path.basename(j)
-        for pat in ("*avro*", "*delta*", "*protobuf*")
-        for j in glob.glob(os.path.join(jar_dir, pat))
+        for j in glob.glob(os.path.join(jar_dir, "*avro*"))
     )
 
     # live spark-avro probe: core avro jars ship with Spark but the
