@@ -23,7 +23,8 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, Observation
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 DEFAULT_CHECKPOINT_MS = 1  # reference cache.js:18
@@ -82,23 +83,51 @@ def observe_scan(df: DataFrame, ts_field: str) -> tuple[DataFrame, Observation]:
     return observed, obs
 
 
+# How long a read of an Observation waits for the listener bus to deliver
+# it: a bound, so a stalled bus costs the exact fallback, never a hang.
+LISTENER_DRAIN_MS = 10_000
+
+
+def delivered_row(obs: Observation, spark: SparkSession):
+    """The JVM row an Observation was filled with, or None when none was.
+
+    Spark fills an Observation from a query listener on the asynchronous
+    listener bus, so the row may land after the action over the observed
+    frame has returned. The bus is drained first (at most
+    :data:`LISTENER_DRAIN_MS`), so None means that no SQL action over the
+    frame ran, or that the optimizer dropped the observed node (it folds
+    a filter over an in-memory source into an empty relation before
+    anything runs), which delivers an empty row; not that the delivery
+    was late."""
+    fut = obs._jo.future()
+    if not fut.isCompleted():
+        try:
+            spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(
+                LISTENER_DRAIN_MS
+            )
+        except Py4JJavaError as e:
+            # timed out: read what has landed; any other error is raised
+            if not e.java_exception.getClass().getName().endswith(
+                "TimeoutException"
+            ):
+                raise
+    # read the JVM-side row directly: Observation.get cannot tell an
+    # empty (dropped) observation from a failure
+    row = fut.value().get().get() if fut.isCompleted() else None
+    return None if row is None or row.length() == 0 else row
+
+
 def observed_max_ts_and_count(
     obs: Observation, df: DataFrame, ts_field: str
 ) -> tuple[int | None, int]:
     """The (max ts, row count) an :func:`observe_scan` Observation saw.
 
-    Call after the first action over the observed frame has returned. The
-    metrics are delivered when that action ends. When the optimizer drops
-    the observed node (it folds a filter over an in-memory source into an
-    empty relation before anything runs), the action delivers an empty
-    row instead; then the exact :func:`max_ts_and_count` over ``df`` —
-    the same rows — runs, so a lost Observation costs jobs, never a wrong
-    checkpoint."""
-    # read the JVM-side row directly: Observation.get cannot tell an
-    # empty (dropped) observation from a failure
-    fut = obs._jo.future()
-    row = fut.value().get().get() if fut.isCompleted() else None
-    if row is None or row.length() == 0:
+    Call after the first action over the observed frame has returned.
+    When no action filled the Observation (:func:`delivered_row`), the
+    exact :func:`max_ts_and_count` over ``df`` — the same rows — runs, so
+    a lost Observation costs jobs, never a wrong checkpoint."""
+    row = delivered_row(obs, df.sparkSession)
+    if row is None:
         return max_ts_and_count(df, ts_field)
     mx = row.get(0)
     return (None if mx is None else int(mx)), int(row.getLong(1))

@@ -8,23 +8,34 @@ Per table, one incremental run is:
     latest     = keep_latest_per_key(page, id, ts), cached      # O15
     delta      = changed_rows(latest, state, id)                # O5
     shaped     = apply_mapping(delta, projection_spec)          # O6-O9
-    bodies     = assemble_bodies(assign_batches(to_json(shaped)))# O9/O10
+    batched    = assign_batches(to_json(shaped)) + observe(items)# O9/O10
+    bodies     = assemble_bodies(batched) + observe(batches, items)
     sink(bodies)                                                # O11
     state'     = upsert_state(state, latest, id, ...)           # O12/O13
     checkpoint'= next_checkpoint(observed max ts, prev, partial)# O14
 
 The page is hashed once and reduced to its latest row per key once; that
-``latest`` is cached, and the delta and the next state both read it. The
-checkpoint's max ts and the input row count are observed on the scan under
-it while the bodies are computed, so they cost no job of their own. The
-next state is the live state rows whose id the page does not hold (an
-anti-join against the broadcast page ids) plus the page's rows: only
-page-sized data crosses an exchange, the state is scanned and rewritten but
-never shuffled. A warm run executes: the bodies and their counts (one
-action: the state broadcast, the keep-latest shuffle, the latest cache, the
-body shuffle, the bodies cache and the count), the sink's own actions, and
-the state write (the page ids broadcast and the write). The state is read
-with its known schema, so loading it runs no job.
+``latest`` is cached, and the delta and the next state both read it. A page
+whose size estimate fits one file split is planned as one partition, so
+neither the keep-latest window nor the body aggregate shuffles; a larger
+page, or one of unknown size, keeps both exchanges. The checkpoint's max ts
+and the input row count are observed on the scan under ``latest``, and the
+batch and item counts on the bodies, so the sink's own action computes them
+and the run pays no job to count. The items are observed once more under the
+body aggregate, which consumes them all: a first action that read only some
+bodies shows as a mismatch, and the run then counts exactly. The next state
+is the live state rows whose id the page does not hold (an anti-join against
+the broadcast page ids) plus the page's rows: the state is scanned and
+rewritten but never shuffled.
+
+A warm run over a one-split page whose sink runs one action over the bodies
+executes 5 jobs: the state broadcast, the ``latest`` cache fill, the sink's
+action (the bodies and their counts), and the state write (the page ids
+broadcast and the write). The state is read with its known schema and the
+checkpoint from a file, so loading them runs no job. A sink that runs no SQL
+action over the bodies (none at all, or only RDD ones such as
+``foreachPartition``) fills no Observation: the run then counts the bodies
+with one exact aggregate of its own.
 
 State/checkpoint are saved after the sink succeeds, preserving the
 reference's at-least-once contract (app.js:55-58): a crash between send and
@@ -37,7 +48,7 @@ from collections.abc import Callable, Mapping, Sequence
 from contextlib import contextmanager
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import batch as batch_mod
@@ -87,6 +98,15 @@ def run_incremental(
 ) -> RunResult:
     """One incremental run for one table (reference handleEntityType,
     app.js:44-60).
+
+    ``sink`` should run ONE DataFrame action over the ``bodies`` it is
+    handed (a ``collect``, a write, :func:`~entity_etl_spark.sinks.http_sink`):
+    that action computes the bodies and, through Observations, the run's
+    counts. A sink that runs several actions recomputes the bodies from
+    the cached ``latest`` for each one, with the same bytes. A sink that
+    runs none, or only RDD actions, gets the same result and pays the
+    jobs of one exact count aggregate, as does one whose first action
+    reads only some bodies (a ``take``, a ``show``).
 
     The config's execution profile is active only for the DURATION of
     the run (profile_ctx, restored on exit) — RunResult carries scalars
@@ -143,21 +163,30 @@ def _transition(
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """One state transition over a page of fetched rows: the cached
     ``latest`` (one row per key, with its content hash) and two lazy
-    frames that read it, the request bodies (changed-rows → projection →
-    batch bodies) and the next state (purge expired keys, upsert every
-    seen key with a fresh TTL). The caller unpersists ``latest`` once both
-    have run. A page that already carries ``HASH_COL`` is not hashed
-    again.
+    frames that read it, the batched items (changed-rows → projection →
+    batch ids; :func:`~entity_etl_spark.batch.assemble_bodies` makes the
+    request bodies of them) and the next state (purge expired keys,
+    upsert every seen key with a fresh TTL). The caller unpersists
+    ``latest`` once both have run. A page that already carries
+    ``HASH_COL`` is not hashed again.
+
+    A page whose size estimate fits one file split
+    (:func:`~entity_etl_spark.state.split_count`, read from plan
+    statistics) is planned as one partition: that satisfies the
+    keep-latest window's and the body aggregate's clustering, so neither
+    shuffles. A page of unknown size or of several splits keeps its
+    exchanges.
 
     The delta compares against the full stored state, expired keys
     included; only the next state drops them. The next state is planned
     here, so without ``now_epoch_ms`` its TTL clock is read now."""
+    if state_mod.split_count(page) == 1:
+        page = page.coalesce(1)
     with _cache_at_coalesced_width(page.sparkSession):
         latest = keep_latest_per_key(page, spec.id_field, spec.ts_field).cache()
     delta = changed_rows(latest, state, spec.id_field, ignore=(spec.ts_field,))
     jsons = _project_to_json(delta, projection)
     batched = batch_mod.assign_batches_distributed(jsons, config.max_batch_size)
-    bodies = batch_mod.assemble_bodies(batched)
     merge_kw = dict(ttl_hours=config.state_ttl_hours, now_epoch_ms=now_epoch_ms)
     if bucketed:
         # with the state table bucketed by id, the join-based MERGE moves
@@ -168,7 +197,15 @@ def _transition(
     else:
         # the page's ids are broadcast to an anti-join: no state row moves
         next_state = state_mod.upsert_state(state, latest, spec.id_field, **merge_kw)
-    return latest, bodies, next_state
+    return latest, batched, next_state
+
+
+def _body_counts():
+    """The run's batch and emitted-item counts over the bodies frame."""
+    return (
+        F.count(F.lit(1)).alias("n_batches"),
+        F.coalesce(F.sum("n_items"), F.lit(0)).alias("emitted"),
+    )
 
 
 def _run_incremental_impl(
@@ -233,27 +270,34 @@ def _run_incremental_impl(
 
     scan = ckpt_mod.incremental_scan(source, spec.ts_field, checkpoint)
     scan, scan_stats = ckpt_mod.observe_scan(scan, spec.ts_field)
-    # hashed once; the bodies action fills the cached latest (and the scan
+    # hashed once; the sink's action fills the cached latest (and the scan
     # observation under it), the state write reads it again
     page = with_content_hash(scan, exclude=(spec.ts_field,))
-    latest, bodies, next_state = _transition(
+    latest, batched, next_state = _transition(
         page, state, spec, projection, config, now_epoch_ms, bucketed=bucketed
     )
-    with _cache_at_coalesced_width(spark):
-        bodies = bodies.cache()
+    # the sink's first action fills both Observations: the batch and item
+    # counts over the bodies, and the items under the body aggregate, which
+    # consumes every item even when the action reads only some bodies
+    # (emitted rows = items: delta is one row per emitted item)
+    item_stats, body_stats = Observation(), Observation()
+    bodies = batch_mod.assemble_bodies(
+        batched.observe(item_stats, F.count(F.lit(1)).alias("n"))
+    )
     try:
-        # metrics derive from the cached bodies in ONE aggregate — emitted
-        # rows = sum of per-batch item counts (delta is one row per emitted
-        # item), so no separate delta.count()/bodies.count() jobs
-        stats = bodies.agg(
-            F.count(F.lit(1)).alias("n_batches"),
-            F.coalesce(F.sum("n_items"), F.lit(0)).alias("emitted"),
-        ).first()
-        n_batches, emitted = int(stats["n_batches"]), int(stats["emitted"])
+        sink(bodies.observe(body_stats, *_body_counts()))
+        items = ckpt_mod.delivered_row(item_stats, spark)
+        row = ckpt_mod.delivered_row(body_stats, spark)
+        if None in (items, row) or row.getLong(1) != items.getLong(0):
+            # no SQL action over the bodies ran, or the first read only
+            # some of them: count them exactly (this also fills the
+            # cached latest and the scan observation under it)
+            n_batches, emitted = bodies.agg(*_body_counts()).first()
+        else:
+            n_batches, emitted = row.getLong(0), row.getLong(1)
         mx, n_input = ckpt_mod.observed_max_ts_and_count(
             scan_stats, page, spec.ts_field
         )
-        sink(bodies)
 
         # state + checkpoint persist AFTER the sink (at-least-once,
         # app.js:55-58). The merge reads every seen key (latest), not the
@@ -262,7 +306,6 @@ def _run_incremental_impl(
         persist_state(next_state)
     finally:
         latest.unpersist()
-        bodies.unpersist()
     new_ckpt = ckpt_mod.next_checkpoint(mx, checkpoint, partial_results)
     ckpt_mod.save_checkpoint(config.state_dir, spec.name, new_ckpt)
 
@@ -377,9 +420,10 @@ def run_streaming(
                     spec.name,
                 )
             return
-        latest, bodies, next_state = _transition(
+        latest, batched, next_state = _transition(
             batch_df, state, spec, projection, config, now_b
         )
+        bodies = batch_mod.assemble_bodies(batched)
         try:
             if sink_takes_batch_id:
                 sink(bodies, batch_id)

@@ -8,10 +8,11 @@ a crash between send and save re-sends — the target must upsert by id
 same contract.
 
 - :func:`write_parquet` / :func:`write_json` — test-harness sinks.
-- :func:`http_sink` — ``foreachPartition`` POST of assembled bodies. The
-  executor-side callable gets (body, n_items) tuples; non-2xx raises, which
-  fails the task and (with retries exhausted) the job — fail-fast parity.
-  The HTTP client is injected so tests run without a network.
+- :func:`http_sink` — POSTs the assembled bodies from one DataFrame action
+  (``mapInArrow`` into the ``noop`` writer). The executor-side callable
+  gets each body string; non-2xx raises, which fails the task and (with
+  retries exhausted) the job — fail-fast parity. The HTTP client is
+  injected so tests run without a network.
 """
 
 from __future__ import annotations
@@ -70,7 +71,11 @@ def http_sink(
     client posting to ``url`` is used. One HTTP round-trip per batch row,
     executed on the executors partition-parallel — the distributed
     analogue of the reference's sequential per-batch await
-    (app.js:99-111).
+    (app.js:99-111). The sends run in ONE DataFrame action
+    (``mapInArrow`` into the ``noop`` writer), not an RDD
+    ``foreachPartition``: a SQL execution fills an Observation attached
+    to ``bodies``, so the pipeline reads its body counts off this action
+    instead of running its own.
 
     Delivery semantics (reference parity + the distributed extra):
     fail-fast on non-2xx like http.js:15-19, but distributed execution
@@ -177,11 +182,19 @@ def http_sink(
                 raise RuntimeError(f"sink returned HTTP {status}")
             time.sleep(backoff * (2**attempt))
 
-    def send_partition(rows) -> None:
-        for row in rows:
-            send_one(row["body"])
+    def send_partition(batches):
+        for batch in batches:
+            for body in batch.column("body").to_pylist():
+                send_one(body)
+        yield from ()
 
-    bodies.select("body").foreachPartition(send_partition)
+    (
+        bodies.select("body")
+        .mapInArrow(send_partition, "sent long")
+        .write.format("noop")
+        .mode("overwrite")
+        .save()
+    )
 
 
 def write_training_shards(

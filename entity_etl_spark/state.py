@@ -345,7 +345,7 @@ def merge_state_join(
     )
 
 
-def _split_count(df: DataFrame) -> int:
+def split_count(df: DataFrame) -> int:
     """How many splits Spark's file scan cuts one file of ``df``'s
     estimated size into (its FilePartition split size: one split below the
     per-file open cost, one per core above it, at most
@@ -388,7 +388,7 @@ def upsert_state(
     Only page-sized data moves: the page's ids are broadcast to a
     map-side anti-join, so no window and no shuffle touch the state. The
     output has as many partitions as Spark's file scan would cut one file
-    of the state's size into (:func:`_split_count`)."""
+    of the state's size into (:func:`split_count`)."""
     now_epoch_ms = now_ms() if now_epoch_ms is None else now_epoch_ms
     ttl_ms = now_epoch_ms + int(ttl_hours * 3600 * 1000)
     fresh = latest.select(
@@ -405,7 +405,7 @@ def upsert_state(
     # a narrow coalesce (no shuffle): the page's rows ride along with the
     # state's, and the file count follows the state's size instead of
     # gaining the page's partitions every tick
-    return unseen.unionByName(fresh).coalesce(_split_count(state))
+    return unseen.unionByName(fresh).coalesce(split_count(state))
 
 
 def merge_state(

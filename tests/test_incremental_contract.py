@@ -1,16 +1,22 @@
 """The run contract of pipeline.run_incremental: how many Spark jobs a warm
-tick runs, what a tick over an already-seen page reports, that the state
-stays one compact table, that ties on (id, ts) resolve to one version in
-both the emitted body and the stored hash, and the arithmetic batch ids."""
+tick runs, that a page of one file split shuffles nothing and a page of
+several keeps its exchange with the same output, that a sink which runs no
+SQL action over the bodies gets the same result, what a tick over an
+already-seen page reports, that the state stays one compact table, that
+ties on (id, ts) resolve to one version in both the emitted body and the
+stored hash, and the arithmetic batch ids."""
 
 import json
 import os
+import re
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
 
 from entity_etl_spark import state as state_mod
 from entity_etl_spark.batch import BATCH_COL, assign_batches_distributed
+from entity_etl_spark.checkpoint import load_checkpoint
 from entity_etl_spark.delta import HASH_COL, with_content_hash
 from entity_etl_spark.model import EngineConfig, TableSpec
 from entity_etl_spark.pipeline import run_incremental
@@ -23,13 +29,13 @@ PROJ = [
 SCHEMA = "id long, x string, updatedOnMs long"
 NOW = 1_700_000_000_000
 
-# Spark jobs of one warm non-bucketed tick whose sink runs one action:
-# the bodies action runs 6 (state broadcast, keep-latest shuffle, latest
-# cache, body shuffle, bodies cache, and the count, one stage because the
-# cached bodies keep AQE's coalesced width), the sink 1, and the state
+# Spark jobs of one warm non-bucketed tick over a page that fits one file
+# split, whose sink runs one action over the bodies: the state broadcast,
+# the latest cache fill, the sink's action (the bodies and their counts,
+# observed on it: a one-partition page needs no shuffle), and the state
 # write 2 (page ids broadcast, write). Loading the state and the
 # checkpoint run none.
-WARM_TICK_JOBS = 9
+WARM_TICK_JOBS = 5
 
 
 def page(spark, tmp_path, name, rows):
@@ -40,10 +46,14 @@ def page(spark, tmp_path, name, rows):
     return spark.read.schema(SCHEMA).parquet(path)
 
 
-def collecting_sink(out):
+def collecting_sink(out, parts=None):
+    """Collects the items of every body into ``out``, and each batch id's
+    partition index into ``parts`` when given."""
     def sink(bodies):
         for r in bodies.collect():
             out.extend(json.loads(r["body"]))
+            if parts is not None:
+                parts.add(r["batch_id"] >> 32)
     return sink
 
 
@@ -78,24 +88,191 @@ def count_jobs(spark, fn):
 
 
 def test_warm_tick_runs_the_job_budget(spark, tmp_path):
+    """Pinned on three consecutive warm ticks, so a body Observation that
+    one tick misses (and pays the fallback's jobs for) shows."""
     cfg = EngineConfig(max_batch_size=7, state_dir=str(tmp_path / "state"))
     for tick in range(2):  # seed + one warm-up tick
         run_incremental(
             spark, SPEC, page(spark, tmp_path, f"p{tick}", tick_rows(tick)),
             PROJ, cfg, collecting_sink([]), now_epoch_ms=NOW,
         )
+    for tick in range(2, 5):
+        sent: list = []
+        src = page(spark, tmp_path, f"p{tick}", tick_rows(tick))
+        res, jobs = count_jobs(
+            spark,
+            lambda: run_incremental(
+                spark, SPEC, src, PROJ, cfg, collecting_sink(sent),
+                now_epoch_ms=NOW,
+            ),
+        )
+        assert (res.input_rows, res.emitted_rows, res.batches) == (40, 10, 2)
+        assert len(sent) == 10
+        assert jobs == WARM_TICK_JOBS, tick
+
+
+def executed_plans(spark, fn):
+    """Run ``fn``; return its result and the final physical plan tree of
+    every SQL execution it ran (AQE's final plan, cached plans nested in
+    it included; the initial plan and the per-node details left out)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        execs = store.executionsList()  # the retained ones, oldest first
+        return [execs.apply(k) for k in range(execs.size())]
+
+    before = max((e.executionId() for e in executions()), default=-1)
+    result = fn()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    trees = [
+        e.physicalPlanDescription()
+        .split("\n\n")[0]
+        .split("\n+- == Initial Plan ==")[0]
+        for e in executions()
+        if e.executionId() > before
+    ]
+    return result, trees
+
+
+# a shuffle in a formatted plan tree (not a broadcast or a reused exchange)
+SHUFFLE = re.compile(r"(?<![A-Za-z])Exchange\b|ShuffleQueryStage|AQEShuffleRead")
+
+
+@contextmanager
+def session_conf(spark, conf):
+    """Set the SQL confs ``conf`` for the block only."""
+    old = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, str(v))
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def test_warm_one_split_tick_shuffles_nothing(spark, tmp_path):
+    """A warm tick over a page of one file split: no SQL execution of the
+    tick (the sink's bodies action, the state write) plans a shuffle
+    Exchange, and no shuffle bytes are written. The page is planned as one
+    partition, which the keep-latest window's and the body aggregate's
+    clustering accept as is."""
+    from tests.test_ext import _shuffle_write_bytes
+
+    cfg = EngineConfig(max_batch_size=7, state_dir=str(tmp_path / "state"))
+    for tick in range(2):
+        run_incremental(
+            spark, SPEC, page(spark, tmp_path, f"p{tick}", tick_rows(tick)),
+            PROJ, cfg, collecting_sink([]), now_epoch_ms=NOW,
+        )
     sent: list = []
     src = page(spark, tmp_path, "p2", tick_rows(2))
-    res, jobs = count_jobs(
+    shuffled, trees = executed_plans(
         spark,
-        lambda: run_incremental(
-            spark, SPEC, src, PROJ, cfg, collecting_sink(sent),
-            now_epoch_ms=NOW,
+        lambda: _shuffle_write_bytes(
+            spark,
+            lambda: run_incremental(
+                spark, SPEC, src, PROJ, cfg, collecting_sink(sent),
+                now_epoch_ms=NOW,
+            ),
         ),
     )
-    assert (res.input_rows, res.emitted_rows) == (40, 10)
     assert len(sent) == 10
-    assert jobs == WARM_TICK_JOBS
+    assert any("CollectMetrics" in t and "Window" in t for t in trees), trees
+    for tree in trees:
+        assert not SHUFFLE.search(tree), tree
+    assert shuffled == 0
+
+
+def run_ticks(spark, tmp_path, name, sink_for, ticks=3):
+    """Seed tick plus warm ticks over ``tick_rows``: per tick the
+    RunResult, the items the sink saw (sorted), the batch ids' partition
+    indexes, the checkpoint, the stored ``(id, hash, ttl)`` rows (sorted)
+    and the final plan trees."""
+    cfg = EngineConfig(max_batch_size=7, state_dir=str(tmp_path / name))
+    out = []
+    for tick in range(ticks):
+        src = page(spark, tmp_path, f"{name}{tick}", tick_rows(tick))
+        items, parts = [], set()
+        res, trees = executed_plans(
+            spark,
+            lambda: run_incremental(
+                spark, SPEC, src, PROJ, cfg, sink_for(items, parts),
+                now_epoch_ms=NOW,
+            ),
+        )
+        stored = sorted(
+            map(tuple,
+                state_mod.load_state(spark, cfg.state_dir, SPEC.name).collect())
+        )
+        out.append(dict(
+            result=res, items=sorted(items, key=json.dumps), parts=parts,
+            checkpoint=load_checkpoint(cfg.state_dir, SPEC.name),
+            state=stored, trees=trees,
+        ))
+    return out
+
+
+def test_page_of_several_splits_keeps_its_exchange_and_its_output(
+    spark, tmp_path
+):
+    """The same rows landed as one split and, with tiny file splits, as
+    several: the several-split page keeps its keep-latest Exchange and
+    runs its window in more than one partition (the batch ids carry the
+    window's partition index), and every tick emits the same items and
+    reports the same counts and checkpoint, and writes the same state."""
+    one = run_ticks(spark, tmp_path, "one", collecting_sink)
+    with session_conf(spark, {
+        "spark.sql.files.maxPartitionBytes": 256,
+        "spark.sql.files.openCostInBytes": 256,
+        # AQE would fold the tiny keep-latest shuffle back into one partition
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": 1,
+    }):
+        several = run_ticks(spark, tmp_path, "several", collecting_sink)
+    for a, b in zip(one, several):
+        assert a["parts"] == {0}
+        assert len(b["parts"]) > 1
+        assert not any(SHUFFLE.search(t) for t in a["trees"])
+        assert any(
+            re.search(r"Window[\s\S]*Exchange", t) for t in b["trees"]
+        ), b["trees"]
+        assert a["items"] == b["items"]
+        ra, rb = a["result"], b["result"]
+        assert (ra.input_rows, ra.emitted_rows, ra.checkpoint_ms) == (
+            rb.input_rows, rb.emitted_rows, rb.checkpoint_ms
+        )
+        assert (a["checkpoint"], a["state"]) == (b["checkpoint"], b["state"])
+
+
+@pytest.mark.parametrize(
+    "kind", ["no_action", "rdd_foreach_partition", "take_one_first"]
+)
+def test_sink_without_a_full_sql_action_gets_the_same_run(spark, tmp_path, kind):
+    """A sink that runs no action over the bodies (as the registered
+    ``pipeline_incremental_run`` does), one that sends through the
+    RDD-based ``foreachPartition`` (which fills no Observation), and one
+    whose first action reads a single body: the run counts the bodies
+    with the exact fallback and reports, checkpoints and stores what a
+    collecting sink's run does, over a seed tick and two warm ticks."""
+    def other(items, parts):
+        if kind == "no_action":
+            return lambda bodies: None
+        if kind == "take_one_first":
+            return lambda bodies: (bodies.take(1), bodies.collect())
+        return lambda bodies: bodies.foreachPartition(
+            lambda rows: [r["body"] for r in rows]
+        )
+
+    want = run_ticks(spark, tmp_path, "collect", collecting_sink)
+    got = run_ticks(spark, tmp_path, kind, other)
+    assert [t["result"] for t in got] == [t["result"] for t in want]
+    assert [(t["checkpoint"], t["state"]) for t in got] == [
+        (t["checkpoint"], t["state"]) for t in want
+    ]
+    assert want[0]["result"].emitted_rows == 40
 
 
 @pytest.mark.parametrize("source", ["parquet", "in_memory"])

@@ -70,10 +70,8 @@ def bodies(spark):
 
 
 def test_http_sink_posts_every_batch(bodies):
-    # the injected transport must be picklable for executor-side use: a
-    # module-level-free closure writing to a temp file would be cleaner,
-    # but foreachPartition on local mode still pickles — use an accumulator
-    # via side-effect file
+    # the injected transport runs executor-side, pickled even in local
+    # mode: it records each body as a side-effect file
     import json
     import tempfile, os, glob
 

@@ -371,10 +371,11 @@ def test_warm_neardup_batch_runs_the_job_budget(spark, tmp_path):
 # Spark jobs of one warm pipeline.run_streaming micro-batch whose sink runs
 # one action. The runner's own 2 are the state write (page ids broadcast,
 # write); loading the state with its known schema and probing the batch
-# run none. The sink's action runs 5 (state broadcast, keep-latest
-# shuffle, latest cache, body shuffle, and the bodies).
+# run none. The sink's action runs 3 (state broadcast, latest cache fill,
+# and the bodies): a one-file micro-batch fits one split, so neither the
+# keep-latest window nor the body aggregate shuffles.
 WARM_STREAMING_RUNNER_JOBS = 2
-WARM_STREAMING_SINK_JOBS = 5
+WARM_STREAMING_SINK_JOBS = 3
 
 
 def test_warm_run_streaming_batch_runs_the_job_budget(spark, tmp_path):
