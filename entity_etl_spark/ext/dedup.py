@@ -132,8 +132,11 @@ def _spread_input(df: DataFrame) -> DataFrame:
     an in-memory frame) is trusted as-is: its partitioning was chosen by
     the materializing caller (e.g. streaming.spread_batch's input-scaled
     width), and a blind full-parallelism re-repartition would both pay an
-    extra exchange and undo that sizing (r12; the streaming batch path
-    previously repartitioned the same tiny batch twice)."""
+    extra exchange and undo that sizing (the streaming batch path once
+    repartitioned the same tiny batch twice). So the caller of a fileless
+    frame chooses its width: a single-partition in-memory frame shingles
+    in one task. :func:`exact_neardup_dedup_incremental` relies on this,
+    since a one-partition batch is what selects its one-partition plan."""
     files = df.inputFiles() or ()
     if not files:
         return df
@@ -206,6 +209,11 @@ def jaccard_pairs(
     join. Capped runs UNDERESTIMATE Jaccard (dropped shingles still count
     toward sizes but not intersections) — a stated candidate-recall
     trade, reported via ``observation``; default None is exact.
+
+    An input of fewer files than cores is spread over every core before
+    shingling; a fileless input (in memory, checkpointed) keeps its own
+    partitioning (:func:`_spread_input`), so its caller chooses the
+    width: a single-partition in-memory frame shingles in one task.
     """
     from .graph import within_group_pairs
 
@@ -1358,7 +1366,10 @@ def load_neardup_state(
 
     def load(table: str, schema: T.StructType) -> DataFrame:
         if not names:
-            return spark.createDataFrame([], schema)
+            # an empty local relation, which the planner sizes at 0 bytes;
+            # createDataFrame's own frame has unknown statistics, which
+            # read as huge and would take the several-split plan
+            return spark.createDataFrame([], schema).limit(0)
         root = state_mod.state_path(state_dir, table)
         return spark.read.schema(schema).parquet(
             *(os.path.join(root, name) for name in names)
@@ -1495,32 +1506,73 @@ def exact_neardup_dedup_incremental(
     batch docs map-side (a batch may resend a doc an earlier increment
     stored), and the same scan of the sizes finds those ``stored`` docs.
 
+    Two plans, chosen from plan statistics (no Spark job):
+
+    - **One partition.** When the pinned batch shingles are one partition
+      of known size and each state frame fits one file split
+      (:func:`~entity_etl_spark.state.split_count`), the state sides and
+      the pair join's left side are coalesced to one partition and the
+      pair join is a shuffled hash join over them: one partition
+      satisfies the join's and the pair aggregation's clustering, so
+      nothing is exchanged and the batch is not broadcast. The corpus
+      sizes still attach by the planner's broadcast (hinting that join
+      too put an exchange on both of its sides, one more job).
+    - **Several splits.** Otherwise the planner sizes the pair join,
+      broadcasting the batch side while it is small, and the pair
+      aggregation shuffles the (batch-bounded) pairs. The corpus sizes
+      attach by a broadcast of the doc-count-sized table while it fits
+      the broadcast threshold and by a shuffle of slim (id, int) rows
+      past it; forcing a broadcast of the PAIR side instead measured
+      140 s vs 44 s at sf1, where a shared-vocabulary corpus emits
+      millions of candidate pairs per batch.
+
+    The dropped batch docs (the losers and the stored docs) leave the
+    survivors and the deltas. On the one-partition plan they come back in
+    one collect, one row per doc (so no more ids than the batch holds,
+    and the batch fits one split), and the survivors and both deltas are
+    ``isin`` filters over the batch and the pinned shingles: no pin and
+    no broadcast of the dropped set. On the several-split plan the
+    dropped set is pinned and broadcast to ``left_anti`` joins, and the
+    delta is pinned once for both appends. Both keep a batch doc whose id
+    is NULL.
+
     Returns ``(kept_batch, shingles_delta, sizes_delta)``: the survivors,
-    and the rows of the survivors not already stored for each table, both
-    read from ONE pinned delta, for :func:`append_neardup_state` — so a
-    doc enters the state at most once, and a resent doc is still judged
-    and emitted. At 100 TB bucket the shingles by ``sh``
+    and the rows of the survivors not already stored for each table,
+    both read from one frame over the shingle pin (the sizes are its
+    ``__pos == 0`` rows), for :func:`append_neardup_state` — so a doc
+    enters the state at most once, and a resent doc is still judged and
+    emitted. At 100 TB bucket the shingles by ``sh``
     (sinks.write_bucketed) so the candidate join is shuffle-free, and
     store ``xxhash64(sh)`` instead of the shingle text to cut state bytes
     ~3x (in-doc collisions are ~2^-64-improbable but make the operator
     no-longer-bitwise-exact; the text form here keeps the contract
     airtight)."""
-    batch_ids = F.broadcast(batch.select(F.col(id_col).alias("doc")))
-    corpus_shingles = corpus_shingles.select("doc", "sh").join(
-        batch_ids, "doc", "left_anti"
-    )
-    stored = corpus_sizes.select("doc").join(batch_ids, "doc", "left_semi")
-    corpus_sizes = corpus_sizes.select("doc", "n").join(
-        batch_ids, "doc", "left_anti"
-    )
     # pinned: consumed by the join's right side, the union'd left side
-    # and the survivors' delta. Rows carry the per-doc
+    # and the survivors' deltas. Rows carry the per-doc
     # distinct shingle-set size ``n`` (computed map-side at shingling
     # time — never a per-batch O(state) aggregation).
     batch_sh = (
         _shingle_rows_with_size(_spread_input(batch), id_col, text_col, k)
         .localCheckpoint(eager=True)
     )
+    # a one-partition pin of known size over a state of one split each:
+    # the planner keeps a one-partition join side unshuffled only while
+    # its size estimate is known to be small (maxSinglePartitionBytes)
+    one_split = batch_sh.rdd.getNumPartitions() == 1 and all(
+        state_mod.split_count(df) == 1
+        for df in (batch_sh, corpus_shingles, corpus_sizes)
+    )
+    sizes = corpus_sizes.select("doc", "n")
+    if one_split:
+        # one task reads every small state file: the sizes' broadcast and
+        # the stored-docs scan run one task, not one per file
+        sizes = sizes.coalesce(1)
+    batch_ids = F.broadcast(batch.select(F.col(id_col).alias("doc")))
+    corpus_shingles = corpus_shingles.select("doc", "sh").join(
+        batch_ids, "doc", "left_anti"
+    )
+    stored = sizes.select("doc").join(batch_ids, "doc", "left_semi")
+    corpus_sizes = sizes.join(batch_ids, "doc", "left_anti")
     # The batch rows already carry their doc's size, so nb and a batch
     # doc_a's na ride the pair join's fan-out rows (a corpus doc_a's row
     # carries NULL) and the aggregation keeps them as group keys, which
@@ -1536,6 +1588,11 @@ def exact_neardup_dedup_incremental(
         F.col("sh").alias("__shb"),
         F.col("n").alias("__nb"),
     )
+    if one_split:
+        # both join sides are one partition, which the hash join's and the
+        # pair aggregation's clustering accept as is: nothing is broadcast
+        # or exchanged
+        left, right = left.coalesce(1), right.coalesce(1).hint("shuffle_hash")
     pair_counts = (
         left.join(
             right,
@@ -1559,11 +1616,10 @@ def exact_neardup_dedup_incremental(
     scored = pair_counts.join(corpus_na, "doc_a", "left").withColumn(
         "__na", F.coalesce("__nca", "__nba")
     )
-    # pinned: the batch docs left out of the deltas — the losers, and
-    # (flagged) the stored docs, found on a scan of the sizes with the
-    # same broadcast of batch ids. Both are anti-join build sides, so
-    # duplicates are harmless and broadcasting them keeps the batch from
-    # shuffling.
+    # the batch docs left out of the deltas: the losers, and (flagged) the
+    # stored docs, found on a scan of the sizes with the same broadcast of
+    # batch ids. A doc may appear more than once: the collect groups the
+    # repeats away, and the pinned form only ever excludes by them.
     dropped = (
         scored.filter(
             F.col("__ni") / (F.col("__na") + F.col("__nb") - F.col("__ni"))
@@ -1575,22 +1631,49 @@ def exact_neardup_dedup_incremental(
                 F.col("doc").alias("__drop"), F.lit(True).alias("__stored")
             )
         )
-        .localCheckpoint(eager=True)
     )
-    losers = dropped.filter(~F.col("__stored"))
-    kept = batch.join(
-        F.broadcast(losers), batch[id_col] == losers["__drop"], "left_anti"
-    )
-    # pinned once for both appends; without it each append re-runs the
-    # survivors plan. Neither delta shuffles: sizes are the __pos == 0 rows.
-    delta = batch_sh.join(
-        F.broadcast(dropped), batch_sh["doc"] == dropped["__drop"], "left_anti"
-    ).localCheckpoint(eager=True)
+    if one_split:
+        # one row per dropped batch doc, grouped inside the collect's one
+        # task (a single partition needs no exchange to group): at most
+        # the batch's doc count, and the batch fits one file split
+        rows = (
+            dropped.coalesce(1)
+            .groupBy("__drop")
+            .agg(F.bool_or(~F.col("__stored")).alias("__lost"))
+            .collect()
+        )
+        # the survivors and both deltas filter frames already pinned
+        kept = _without(batch, id_col, [d for d, lost in rows if lost])
+        delta = _without(batch_sh, "doc", [d for d, _ in rows])
+    else:
+        # pinned: both are anti-join build sides, and broadcasting them
+        # keeps the batch from shuffling
+        dropped = dropped.localCheckpoint(eager=True)
+        losers = dropped.filter(~F.col("__stored"))
+        kept = batch.join(
+            F.broadcast(losers), batch[id_col] == losers["__drop"], "left_anti"
+        )
+        # pinned once for both appends; without it each append re-runs
+        # the survivors plan
+        delta = batch_sh.join(
+            F.broadcast(dropped),
+            batch_sh["doc"] == dropped["__drop"],
+            "left_anti",
+        ).localCheckpoint(eager=True)
+    # neither delta shuffles: the sizes are the __pos == 0 rows
     return (
         kept,
         delta.select("doc", "sh"),
         delta.filter(F.col("__pos") == 0).select("doc", "n"),
     )
+
+
+def _without(df: DataFrame, col: str, ids: list) -> DataFrame:
+    """``df`` less the rows whose ``col`` is one of ``ids``; a row with a
+    NULL ``col`` stays, as it does in a ``left_anti`` join."""
+    if not ids:
+        return df
+    return df.filter(df[col].isNull() | ~df[col].isin(ids))
 
 
 def repeated_substring_spans(

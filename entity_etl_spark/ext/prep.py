@@ -149,9 +149,12 @@ def run_streaming_prep(
     impossible; the fingerprint state makes re-sends harmless — the same
     two-layer idempotence as pipeline.run_streaming.
 
-    State is a one-column parquet (``fp``) swapped atomically per batch via
-    a generation dir, like state.save_state — at scale, a bucketed-by-fp
-    table (sinks.write_bucketed) keeps the anti-join shuffle-free.
+    State is a one-column parquet table (``fp``) that each batch grows by
+    its new fingerprints only (:func:`...state.append_state`), never
+    rewriting the accumulated rows. A replayed batch may append its
+    fingerprints twice; the anti-join reading them is insensitive to
+    duplicates. At scale, a bucketed-by-fp table (sinks.write_bucketed)
+    keeps the anti-join shuffle-free.
     """
     from ..state import append_state, load_state
     from ..streaming import probe_batch_rows, run_available_now, spread_batch
@@ -231,7 +234,15 @@ def run_streaming_neardup_prep(
     from ``<checkpoint>/metadata``, so a new checkpoint never overwrites
     an old one's dirs). A replayed batch therefore replaces its own dirs
     and never sees its first attempt, and no exchange moves the
-    accumulated state (it is still scanned map-side each batch). A
+    accumulated state (it is still scanned map-side each batch).
+
+    A landed one-file batch is planned as one partition, and over a state
+    that fits one file split the operator plans it with no shuffle at
+    all: a warm micro-batch runs 8 Spark jobs (the gate pin, the shingle
+    pin, two broadcasts, the collect of the dropped ids, the output write
+    and the two state writes) and the first, over an empty state, 6. A
+    larger batch or state takes the operator's several-split plan, which
+    pins and broadcasts the dropped ids instead of collecting them. A
     ``state_dir`` written in an older layout raises ``ValueError`` before
     the stream starts; convert it once with
     :func:`...dedup.migrate_neardup_state`."""

@@ -519,9 +519,20 @@ def kept_ids(kept):
     return sorted(r["doc_id"] for r in kept.collect())
 
 
-def neardup_increment(spark, state_dir, key, rows):
+def landed_batch(spark, path, rows, schema=("doc_id", "text")):
+    """``rows`` as the streaming runner hands a landed one-file micro-batch
+    to the operator: one parquet file, read back pinned, so one partition
+    whose size the planner knows."""
+    spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(path)
+    return spark.read.parquet(path).localCheckpoint()
+
+
+def neardup_increment(spark, state_dir, key, rows, landed=False):
     """One increment through the state on disk: load every committed key
-    but ``key``, run the operator on ``rows``, commit its deltas as
+    but ``key``, run the operator on ``rows`` (an in-memory frame, or
+    with ``landed`` a :func:`landed_batch`), commit its deltas as
     ``key``. Returns (kept ids, shingle delta rows, size delta rows)."""
     from pyspark.sql import types as T
 
@@ -534,8 +545,13 @@ def neardup_increment(spark, state_dir, key, rows):
     shingles, sizes = load_neardup_state(
         spark, state_dir, T.LongType(), exclude=key
     )
+    batch = (
+        landed_batch(spark, f"{state_dir}-{key}", rows)
+        if landed
+        else spark.createDataFrame(rows, ["doc_id", "text"])
+    )
     kept, sh_delta, n_delta = exact_neardup_dedup_incremental(
-        spark.createDataFrame(rows, ["doc_id", "text"]), shingles, sizes
+        batch, shingles, sizes
     )
     out = (
         kept_ids(kept),
@@ -988,48 +1004,164 @@ def test_exact_neardup_incremental_resent_doc_adds_no_state_rows(
 def test_exact_neardup_losers_plan_has_no_exchange_over_state(
     spark, tmp_path, monkeypatch
 ):
-    """The pinned losers frame of an increment over a state on disk: no
-    shuffle Exchange sits above a state FileScan in its executed plan
-    until the candidate join has cut the state rows down to the pairs
-    they share with the batch, so a micro-batch moves nothing O(state).
-    (A shuffle of the pairs, above that join, is batch-bounded.)"""
+    """The dropped-docs frame of an increment over a state on disk: no
+    shuffle Exchange sits above a state FileScan in the executed plan of
+    the action that computes it (the collect on the one-partition plan,
+    the pin on the several-split one) until the candidate join has cut
+    the state rows down to the pairs they share with the batch, so a
+    micro-batch moves nothing O(state). (A shuffle of the pairs, above
+    that join, is batch-bounded.) Checked on the one-partition plan (a
+    hash join of two one-partition sides) and on the several-split plan
+    (tiny file splits; the batch is broadcast)."""
     from pyspark.sql.classic.dataframe import DataFrame
 
-    state_dir = str(tmp_path / "state")
-    neardup_increment(spark, state_dir, "q-0", NEARDUP_CORPUS)
-    plans = []
-    pin = DataFrame.localCheckpoint
+    from entity_etl_spark.ext import dedup
+    from tests.test_incremental_contract import session_conf
 
-    def recording(self, *args, **kwargs):
-        out = pin(self, *args, **kwargs)
-        plans.append(self._jdf.queryExecution().executedPlan().toString())
-        return out
+    plans, inside = [], []
 
-    monkeypatch.setattr(DataFrame, "localCheckpoint", recording)
-    neardup_increment(spark, state_dir, "q-1", NEARDUP_BATCH)
-    # the batch is in memory: the only file scans are of the state
-    state_plans = [
-        p.split("== Initial Plan ==")[0] for p in plans if "FileScan" in p
+    def recording(action):
+        def run(self, *args, **kwargs):
+            out = action(self, *args, **kwargs)
+            if inside:
+                plans.append(
+                    self._jdf.queryExecution().executedPlan().toString()
+                )
+            return out
+
+        return run
+
+    operator = dedup.exact_neardup_dedup_incremental
+
+    def traced(*args, **kwargs):
+        inside.append(True)
+        try:
+            return operator(*args, **kwargs)
+        finally:
+            inside.clear()
+
+    # the actions the operator itself runs
+    monkeypatch.setattr(DataFrame, "collect", recording(DataFrame.collect))
+    monkeypatch.setattr(
+        DataFrame, "localCheckpoint", recording(DataFrame.localCheckpoint)
+    )
+    monkeypatch.setattr(dedup, "exact_neardup_dedup_incremental", traced)
+    tiny_splits = {
+        "spark.sql.files.maxPartitionBytes": 256,
+        "spark.sql.files.openCostInBytes": 256,
+    }
+    for candidate, conf in (
+        ("ShuffledHashJoin", {}), ("BroadcastHashJoin", tiny_splits)
+    ):
+        state_dir = str(tmp_path / candidate)
+        neardup_increment(spark, state_dir, "q-0", NEARDUP_CORPUS)
+        plans.clear()
+        with session_conf(spark, conf):
+            neardup_increment(
+                spark, state_dir, "q-1", NEARDUP_BATCH, landed=True
+            )
+        # the batch is pinned: the only file scans are of the state
+        state_plans = [
+            p.split("== Initial Plan ==")[0] for p in plans if "FileScan" in p
+        ]
+        assert len(state_plans) == 1
+        nodes = []  # (depth, operator) per plan line
+        for ln in state_plans[0].splitlines():
+            op = ln.lstrip(" :+-")
+            nodes.append((len(ln) - len(op), re.sub(r"^\*\(\d+\) ", "", op)))
+        assert any(
+            op.startswith(candidate) and ", Inner," in op for _, op in nodes
+        ), state_plans[0]
+        scans = [
+            i for i, (_, op) in enumerate(nodes) if op.startswith("FileScan")
+        ]
+        # the shingles, the sizes for na and the sizes for the stored docs
+        assert len(scans) == 3
+        for i in scans:
+            depth, pairs_only = nodes[i][0], False
+            for d, op in reversed(nodes[:i]):  # the scan's ancestors, upward
+                if d >= depth:
+                    continue
+                depth = d
+                if op.startswith(
+                    ("BroadcastHashJoin", "ShuffledHashJoin")
+                ) and ", Inner," in op:
+                    pairs_only = True
+                assert pairs_only or not op.startswith(
+                    ("Exchange", "ShuffleQueryStage", "AQEShuffleRead")
+                ), state_plans[0]
+
+
+def test_exact_neardup_plans_give_the_same_answer(spark, tmp_path):
+    """The same increments on the one-partition plan (the dropped ids
+    collected) and on the several-split plan (tiny file splits; the
+    dropped ids pinned and broadcast): the same kept ids, deltas and
+    loaded state. A batch
+    doc with a NULL id is kept, as the anti-join keeps it, and its rows
+    enter the state."""
+    from pyspark.sql import types as T
+
+    from entity_etl_spark.ext import dedup
+    from tests.test_incremental_contract import (
+        SHUFFLE,
+        executed_plans,
+        session_conf,
+    )
+
+    doc5, doc13 = (5, "a b c d e f g h"), (13, "d e f g h p q r")
+    increments = [
+        NEARDUP_CORPUS + [doc5],
+        # a stored doc resent, near-dups of corpus docs, a NULL id
+        [NEARDUP_CORPUS[1]] + NEARDUP_BATCH + [doc13, (None, "x y z w v u")],
+        # near-dups of kept batch docs 12 and 13
+        [
+            (20, "a wholly novel sentence with nothing shared at all there"),
+            (21, "d e f g h p q s"),
+            (22, "one more novel line of words that nothing else shares"),
+        ],
     ]
-    assert len(state_plans) == 1
-    nodes = []  # (depth, operator) per plan line
-    for ln in state_plans[0].splitlines():
-        op = ln.lstrip(" :+-")
-        nodes.append((len(ln) - len(op), re.sub(r"^\*\(\d+\) ", "", op)))
-    scans = [i for i, (_, op) in enumerate(nodes) if op.startswith("FileScan")]
-    # the shingles, the sizes for na and the sizes for the stored docs
-    assert len(scans) == 3
-    for i in scans:
-        depth, pairs_only = nodes[i][0], False
-        for d, op in reversed(nodes[:i]):  # the scan's ancestors, upward
-            if d >= depth:
-                continue
-            depth = d
-            if op.startswith("BroadcastHashJoin") and ", Inner," in op:
-                pairs_only = True
-            assert pairs_only or not op.startswith(
-                ("Exchange", "ShuffleQueryStage", "AQEShuffleRead")
-            ), state_plans[0]
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()), key=repr)
+
+    def run(name):
+        state_dir = str(tmp_path / name)
+        out = []
+        for b, batch_rows in enumerate(increments):
+            shingles, sizes = dedup.load_neardup_state(
+                spark, state_dir, T.LongType(), exclude=f"q-{b}"
+            )
+            batch = landed_batch(
+                spark, f"{state_dir}-{b}", batch_rows, "doc_id long, text string"
+            )
+            (kept, sh_delta, n_delta), trees = executed_plans(
+                spark,
+                lambda: dedup.exact_neardup_dedup_incremental(
+                    batch, shingles, sizes
+                ),
+            )
+            out.append((rows(kept), rows(sh_delta), rows(n_delta)))
+            dedup.append_neardup_state(state_dir, sh_delta, n_delta, f"q-{b}")
+        loaded = dedup.load_neardup_state(spark, state_dir, T.LongType())
+        return out, [rows(df) for df in loaded], trees
+
+    one, one_state, one_trees = run("one")
+    with session_conf(spark, {
+        "spark.sql.files.maxPartitionBytes": 256,
+        "spark.sql.files.openCostInBytes": 256,
+    }):
+        several, several_state, several_trees = run("several")
+    # the last increment's plans: which plan each run took
+    assert not any(SHUFFLE.search(t) for t in one_trees), one_trees
+    assert any(SHUFFLE.search(t) for t in several_trees), several_trees
+    # the several-split plan pins the dropped docs and the delta where the
+    # one-partition plan collects the dropped ids
+    assert len(several_trees) == len(one_trees) + 1, several_trees
+    assert one == several
+    assert one_state == several_state
+    kept = [[r[0] for r in k] for k, _, _ in one]
+    assert kept == [[1, 2, 5], [12, 13, 2, None], [22]]
+    assert (None, 4) in one_state[1]
 
 
 def _shuffle_write_bytes(spark, fn):

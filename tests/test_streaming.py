@@ -306,16 +306,17 @@ def test_run_streaming_neardup_prep_drops_paraphrased_resend(spark, tmp_path):
 
 # Spark jobs of one warm run_streaming_neardup_prep micro-batch (a
 # one-file batch over a non-empty state, some survivors, no merge) on the
-# fixture below: the clean + quality-gate pin 1 (a one-partition batch is
-# coalesced, not shuffled), the shingle pin 1, the dropped-docs pin 5
-# (batch-ids broadcast, pair-join broadcast, pair aggregation, corpus
-# sizes broadcast, checkpoint), the survivors' delta pin 2
-# (dropped-docs broadcast, checkpoint), the split output write 2 (losers
-# broadcast, write), and one write per state dir (shingles, sizes) 2.
+# fixture below, one job each: the clean + quality-gate pin (a
+# one-partition batch is coalesced, not shuffled), the shingle pin, the
+# batch-ids broadcast, the corpus-sizes broadcast, the collect of the
+# dropped ids, one row per doc (the one-partition pair join, the pair
+# aggregation and the grouping of the dropped ids run inside it), the
+# split output write, and one write per state dir (shingles, sizes).
 # Loading the state and probing the batch run none.
-WARM_NEARDUP_BATCH_JOBS = 13
-# The first micro-batch, over an empty state, runs as many.
-COLD_NEARDUP_BATCH_JOBS = 13
+WARM_NEARDUP_BATCH_JOBS = 8
+# The first micro-batch, over an empty state, loads empty local relations:
+# the planner drops every state side, with its two broadcasts.
+COLD_NEARDUP_BATCH_JOBS = 6
 
 
 NEARDUP_SCHEMA = "doc_id long, text string, source string"
@@ -342,8 +343,15 @@ def land_neardup_docs(spark, src, n, ids):
 
 def test_warm_neardup_batch_runs_the_job_budget(spark, tmp_path):
     """Counted with the DAG scheduler's job counter: the micro-batch runs
-    on the stream's own thread, which a job group set here misses."""
+    on the stream's own thread, which a job group set here misses. The
+    warm batch, one file over a one-split state, also shuffles nothing:
+    the batch, the state sides and the pair join are planned as one
+    partition each, which the hash join's and the pair aggregation's
+    clustering accept as is, so no SQL execution of it plans an exchange
+    and it writes no shuffle bytes."""
     from entity_etl_spark.ext.prep import run_streaming_neardup_prep
+    from tests.test_ext import _shuffle_write_bytes
+    from tests.test_incremental_contract import SHUFFLE, executed_plans
 
     src = str(tmp_path / "src")
     sc = spark.sparkContext._jsc.sc()
@@ -363,7 +371,15 @@ def test_warm_neardup_batch_runs_the_job_budget(spark, tmp_path):
     assert drain() == COLD_NEARDUP_BATCH_JOBS
     # 30-40 are new docs, 41-69 one-word edits of batch 1's 1-29
     land_neardup_docs(spark, src, 2, range(30, 70))
-    assert drain() == WARM_NEARDUP_BATCH_JOBS
+    jobs = []
+    shuffled, trees = executed_plans(
+        spark, lambda: _shuffle_write_bytes(spark, lambda: jobs.append(drain()))
+    )
+    assert jobs == [WARM_NEARDUP_BATCH_JOBS]
+    assert any("ShuffledHashJoin" in t for t in trees), trees
+    for tree in trees:
+        assert not SHUFFLE.search(tree), tree
+    assert shuffled == 0
     kept = {r.doc_id for r in spark.read.parquet(str(tmp_path / "out")).collect()}
     assert kept == set(range(1, 41))
 
