@@ -11,7 +11,7 @@ Per table, one incremental run is:
     batched    = assign_batches(to_json(shaped)) + observe(items)# O9/O10
     bodies     = assemble_bodies(batched) + observe(batches, items)
     sink(bodies)                                                # O11
-    state'     = upsert_state(state, latest, id, ...)           # O12/O13
+    state'     = upsert_state | merge_state_join(state, latest) # O12/O13
     checkpoint'= next_checkpoint(observed max ts, prev, partial)# O14
 
 The page is hashed once and reduced to its latest row per key once; that
@@ -23,19 +23,30 @@ and the input row count are observed on the scan under ``latest``, and the
 batch and item counts on the bodies, so the sink's own action computes them
 and the run pays no job to count. The items are observed once more under the
 body aggregate, which consumes them all: a first action that read only some
-bodies shows as a mismatch, and the run then counts exactly. The next state
-is the live state rows whose id the page does not hold (an anti-join against
-the broadcast page ids) plus the page's rows: the state is scanned and
-rewritten but never shuffled.
+bodies shows as a mismatch, and the run then counts exactly.
 
-A warm run over a one-split page whose sink runs one action over the bodies
-executes 5 jobs: the state broadcast, the ``latest`` cache fill, the sink's
-action (the bodies and their counts), and the state write (the page ids
-broadcast and the write). The state is read with its known schema and the
-checkpoint from a file, so loading them runs no job. A sink that runs no SQL
-action over the bodies (none at all, or only RDD ones such as
-``foreachPartition``) fills no Observation: the run then counts the bodies
-with one exact aggregate of its own.
+The delta and the next state each join the page to the state, by one of two
+plans; neither ever shuffles the state:
+
+- a one-split page over a state of one file split: both are read as one
+  partition, and both joins are shuffled hash joins of the two
+  one-partition sides, so nothing is exchanged or broadcast. The delta
+  hashes the state and streams the page; the next state is a full outer
+  join of the live state rows with the page's rows
+  (:func:`~entity_etl_spark.state.merge_state_join`) that hashes the page.
+- any other page or state: the delta is a left join against the broadcast
+  state, and the next state is the live state rows whose id the page does
+  not hold (an anti-join against the broadcast page ids) plus the page's
+  rows (:func:`~entity_etl_spark.state.upsert_state`).
+
+A warm run over a one-split page and state whose sink runs one action over
+the bodies executes 3 jobs: the ``latest`` cache fill, the sink's action (the
+bodies and their counts), and the state write. The broadcast plan adds two:
+the state broadcast and the page ids broadcast. The state is read with its
+known schema and the checkpoint from a file, so loading them runs no job. A
+sink that runs no SQL action over the bodies (none at all, or only RDD ones
+such as ``foreachPartition``) fills no Observation: the run then counts the
+bodies with one exact aggregate of its own.
 
 State/checkpoint are saved after the sink succeeds, preserving the
 reference's at-least-once contract (app.js:55-58): a crash between send and
@@ -108,6 +119,11 @@ def run_incremental(
     jobs of one exact count aggregate, as does one whose first action
     reads only some bodies (a ``take``, a ``show``).
 
+    A warm run over a page and a state of one file split each runs 3
+    Spark jobs with such a sink (the cache fill, the sink's action, the
+    state write) and shuffles nothing; a larger page or state adds the two
+    broadcast jobs of the other join plan (see the module docstring).
+
     The config's execution profile is active only for the DURATION of
     the run (profile_ctx, restored on exit) — RunResult carries scalars
     and every plan inside is built before return, so a production-
@@ -177,18 +193,48 @@ def _transition(
     shuffles. A page of unknown size or of several splits keeps its
     exchanges.
 
+    When the state also fits one file split, it is read as one partition
+    too, and both joins are shuffled hash joins of two one-partition
+    sides, which need no exchange and no broadcast (the module docstring
+    has both plans). The delta's join streams the page, so the delta keeps
+    the page's row order and with it the batch ids. Any other page or
+    state keeps the broadcast plan, and the bucketed state its own merge.
+
     The delta compares against the full stored state, expired keys
     included; only the next state drops them. The next state is planned
     here, so without ``now_epoch_ms`` its TTL clock is read now."""
-    if state_mod.split_count(page) == 1:
+    one_split = state_mod.split_count(page) == 1
+    if one_split:
         page = page.coalesce(1)
     with _cache_at_coalesced_width(page.sparkSession):
         latest = keep_latest_per_key(page, spec.id_field, spec.ts_field).cache()
-    delta = changed_rows(latest, state, spec.id_field, ignore=(spec.ts_field,))
+    one_partition = (
+        one_split
+        and not bucketed
+        and state is not None
+        and state_mod.split_count(state) == 1
+    )
+    page_side, state_side = latest, state
+    if one_partition:
+        # The cached latest is read through a coalesce as well: AQE's first
+        # plan does not know a cache stage's partitioning, and would shuffle
+        # both join sides and the body aggregate. Hashing the state leaves
+        # the page as the streamed side, whose row order the batch ids follow.
+        state = state.coalesce(1)
+        page_side, state_side = latest.coalesce(1), state.hint("shuffle_hash")
+    delta = changed_rows(page_side, state_side, spec.id_field, ignore=(spec.ts_field,))
     jsons = _project_to_json(delta, projection)
     batched = batch_mod.assign_batches_distributed(jsons, config.max_batch_size)
     merge_kw = dict(ttl_hours=config.state_ttl_hours, now_epoch_ms=now_epoch_ms)
-    if bucketed:
+    if one_partition:
+        # an outer join, not upsert_state's anti-join: the optimizer pushes
+        # a left-anti join below the state's coalesce, which puts an
+        # exchange back on the state
+        next_state = state_mod.merge_state_join(
+            state, page_side.hint("shuffle_hash"), spec.id_field,
+            ignore=(spec.ts_field,), **merge_kw
+        )
+    elif bucketed:
         # with the state table bucketed by id, the join-based MERGE moves
         # only the page side
         next_state = state_mod.merge_state_join(

@@ -19,11 +19,17 @@ Batch representation: a plain DataFrame/parquet table
 streaming.py (state store with native TTL).
 
 Scale notes: the merge keeps the latest row per key of the PAGE, then
-upserts it: live state rows whose id the page does not hold (a map-side
-anti-join against the broadcast page ids) union the page's rows with a
-fresh TTL. Only page-sized data crosses an exchange; the state is scanned
-and rewritten, never shuffled. The bucketed layout (``state_buckets``)
-merges with :func:`merge_state_join` instead.
+upserts it, by one of two plans; the state is scanned and rewritten, never
+shuffled:
+
+- :func:`upsert_state`: live state rows whose id the page does not hold (a
+  map-side anti-join against the broadcast page ids) union the page's rows
+  with a fresh TTL. Only page-sized data crosses an exchange.
+- :func:`merge_state_join`: a full outer join on id. The pipeline takes it
+  when the page and the state each fit one file split (:func:`split_count`):
+  both sides are read as one partition, and a shuffled hash join that
+  hashes the page needs no exchange and no broadcast. The bucketed layout
+  (``state_buckets``) merges with it too, for its id partitioning.
 """
 
 from __future__ import annotations
@@ -309,8 +315,11 @@ def merge_state_join(
     one-row-per-key (delta.keep_latest_per_key runs first). It is the
     bucketed layout's merge: against a state table bucketed by id the join
     needs NO shuffle on the state side, and its output keeps the id
-    partitioning the bucketed write needs. :func:`upsert_state`, the plain
-    layout's merge, spares the state a shuffle by broadcasting the page's
+    partitioning the bucketed write needs. It is also the plain layout's
+    merge when the page and the state are each one partition
+    (pipeline._transition): a shuffled hash join of two one-partition
+    sides exchanges nothing. :func:`upsert_state`, the plain layout's
+    merge otherwise, spares the state a shuffle by broadcasting the page's
     ids instead.
 
     TTL semantics unchanged: expired rows filtered before the join
@@ -388,7 +397,12 @@ def upsert_state(
     Only page-sized data moves: the page's ids are broadcast to a
     map-side anti-join, so no window and no shuffle touch the state. The
     output has as many partitions as Spark's file scan would cut one file
-    of the state's size into (:func:`split_count`)."""
+    of the state's size into (:func:`split_count`).
+
+    The pipeline uses it for a page or a state of several file splits
+    (or of unknown size); a one-split page over a one-split state takes
+    :func:`merge_state_join`'s one-partition plan instead, which runs no
+    broadcast job (pipeline._transition)."""
     now_epoch_ms = now_ms() if now_epoch_ms is None else now_epoch_ms
     ttl_ms = now_epoch_ms + int(ttl_hours * 3600 * 1000)
     fresh = latest.select(

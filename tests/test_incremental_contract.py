@@ -1,6 +1,7 @@
 """The run contract of pipeline.run_incremental: how many Spark jobs a warm
-tick runs, that a page of one file split shuffles nothing and a page of
-several keeps its exchange with the same output, that a sink which runs no
+tick runs, that a page and a state of one file split shuffle and broadcast
+nothing, that a page of several keeps its exchange and a state of several
+its broadcasts with the same output, that a sink which runs no
 SQL action over the bodies gets the same result, what a tick over an
 already-seen page reports, that the state stays one compact table, that
 ties on (id, ts) resolve to one version in both the emitted body and the
@@ -29,13 +30,16 @@ PROJ = [
 SCHEMA = "id long, x string, updatedOnMs long"
 NOW = 1_700_000_000_000
 
-# Spark jobs of one warm non-bucketed tick over a page that fits one file
-# split, whose sink runs one action over the bodies: the state broadcast,
-# the latest cache fill, the sink's action (the bodies and their counts,
-# observed on it: a one-partition page needs no shuffle), and the state
-# write 2 (page ids broadcast, write). Loading the state and the
-# checkpoint run none.
-WARM_TICK_JOBS = 5
+# Spark jobs of one warm non-bucketed tick over a page and a state that
+# fit one file split each, whose sink runs one action over the bodies:
+# 1. the latest cache fill;
+# 2. the sink's action: the bodies and their counts, observed on it. The
+#    delta is a shuffled hash join of the one-partition page and state, so
+#    nothing is broadcast or shuffled;
+# 3. the state write: the one-partition full outer join, again with no
+#    broadcast.
+# Loading the state and the checkpoint run none.
+WARM_TICK_JOBS = 3
 
 
 def page(spark, tmp_path, name, rows):
@@ -136,6 +140,7 @@ def executed_plans(spark, fn):
 
 # a shuffle in a formatted plan tree (not a broadcast or a reused exchange)
 SHUFFLE = re.compile(r"(?<![A-Za-z])Exchange\b|ShuffleQueryStage|AQEShuffleRead")
+BROADCAST = re.compile(r"BroadcastExchange|BroadcastQueryStage")
 
 
 @contextmanager
@@ -155,11 +160,14 @@ def session_conf(spark, conf):
 
 
 def test_warm_one_split_tick_shuffles_nothing(spark, tmp_path):
-    """A warm tick over a page of one file split: no SQL execution of the
-    tick (the sink's bodies action, the state write) plans a shuffle
-    Exchange, and no shuffle bytes are written. The page is planned as one
-    partition, which the keep-latest window's and the body aggregate's
-    clustering accept as is."""
+    """A warm tick over a page and a state of one file split each: no SQL
+    execution of the tick (the sink's bodies action, the state write)
+    plans a shuffle Exchange or a broadcast, and no shuffle bytes are
+    written. The page and the state are planned as one partition each,
+    which the keep-latest window's, the body aggregate's and both joins'
+    clustering accept as is: the delta and the next state are shuffled
+    hash joins, the delta's streaming the page (so its rows keep the
+    page's order) and the next state's hashing it."""
     from tests.test_ext import _shuffle_write_bytes
 
     cfg = EngineConfig(max_batch_size=7, state_dir=str(tmp_path / "state"))
@@ -184,18 +192,25 @@ def test_warm_one_split_tick_shuffles_nothing(spark, tmp_path):
     assert any("CollectMetrics" in t and "Window" in t for t in trees), trees
     for tree in trees:
         assert not SHUFFLE.search(tree), tree
+        assert not BROADCAST.search(tree), tree
+    joins = [j for t in trees for j in re.findall(r"ShuffledHashJoin \w+ \w+", t)]
+    assert sorted(joins) == [
+        "ShuffledHashJoin FullOuter BuildRight",
+        "ShuffledHashJoin LeftOuter BuildRight",
+    ], trees
     assert shuffled == 0
 
 
-def run_ticks(spark, tmp_path, name, sink_for, ticks=3):
-    """Seed tick plus warm ticks over ``tick_rows``: per tick the
-    RunResult, the items the sink saw (sorted), the batch ids' partition
-    indexes, the checkpoint, the stored ``(id, hash, ttl)`` rows (sorted)
-    and the final plan trees."""
+def run_ticks(spark, tmp_path, name, sink_for, ticks=3, seed_keys=40):
+    """Seed tick of ``seed_keys`` keys plus warm ticks over ``tick_rows``:
+    per tick the RunResult, the items the sink saw (sorted), the batch
+    ids' partition indexes, the checkpoint, the stored ``(id, hash, ttl)``
+    rows (sorted) and the final plan trees."""
     cfg = EngineConfig(max_batch_size=7, state_dir=str(tmp_path / name))
     out = []
     for tick in range(ticks):
-        src = page(spark, tmp_path, f"{name}{tick}", tick_rows(tick))
+        rows = tick_rows(tick, seed_keys if tick == 0 else 40)
+        src = page(spark, tmp_path, f"{name}{tick}", rows)
         items, parts = [], set()
         res, trees = executed_plans(
             spark,
@@ -245,6 +260,39 @@ def test_page_of_several_splits_keeps_its_exchange_and_its_output(
             rb.input_rows, rb.emitted_rows, rb.checkpoint_ms
         )
         assert (a["checkpoint"], a["state"]) == (b["checkpoint"], b["state"])
+
+
+def test_one_split_page_over_a_several_split_state_keeps_the_broadcast_plan(
+    spark, tmp_path
+):
+    """A 1,000-key state and 40-row pages, run with the default file split
+    and with 16 KiB splits, which the state spans several times and the
+    page fits in once: the warm ticks of the second run keep the
+    broadcast plan (the state broadcast to the delta, the page ids to the
+    upsert's anti-join) and still shuffle nothing, and every tick reports,
+    emits, checkpoints and stores what the one-partition plan does."""
+    one = run_ticks(spark, tmp_path, "one", collecting_sink, seed_keys=1000)
+    with session_conf(spark, {
+        "spark.sql.files.maxPartitionBytes": 16384,
+        "spark.sql.files.openCostInBytes": 16384,
+    }):
+        several = run_ticks(
+            spark, tmp_path, "several", collecting_sink, seed_keys=1000
+        )
+        state = state_mod.load_state(
+            spark, str(tmp_path / "several"), SPEC.name
+        )
+        assert state_mod.split_count(state) > 1
+    for a, b in zip(one[1:], several[1:]):
+        assert any("ShuffledHashJoin" in t for t in a["trees"]), a["trees"]
+        assert not any(BROADCAST.search(t) for t in a["trees"]), a["trees"]
+        assert not any("ShuffledHashJoin" in t for t in b["trees"]), b["trees"]
+        assert sum("BroadcastHashJoin" in t for t in b["trees"]) == 2, b["trees"]
+        assert not any(SHUFFLE.search(t) for t in a["trees"] + b["trees"])
+    for a, b in zip(one, several):
+        assert (a["result"], a["items"]) == (b["result"], b["items"])
+        assert (a["checkpoint"], a["state"]) == (b["checkpoint"], b["state"])
+    assert one[1]["result"].emitted_rows == 10
 
 
 @pytest.mark.parametrize(

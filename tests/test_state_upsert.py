@@ -1,7 +1,8 @@
-"""The state upsert of a cron tick (state.merge_state / state.upsert_state):
-its result against a pure-Python model of the reference cache
-(cache.js:44-67), and that the state it rewrites never crosses a shuffle,
-so the state write costs the same shuffle bytes at any state size."""
+"""The state upsert of a cron tick (state.merge_state / state.upsert_state,
+and the one-partition state.merge_state_join): its result against a
+pure-Python model of the reference cache (cache.js:44-67), and that the
+state it rewrites never crosses a shuffle, so the state write costs the
+same shuffle bytes at any state size."""
 
 import hashlib
 import json
@@ -13,10 +14,10 @@ from hypothesis import strategies as st
 from pyspark.sql import types as T
 
 from entity_etl_spark import state as state_mod
-from entity_etl_spark.delta import HASH_COL
+from entity_etl_spark.delta import HASH_COL, keep_latest_per_key
 from entity_etl_spark.model import EngineConfig, TableSpec
 from entity_etl_spark.pipeline import run_incremental
-from entity_etl_spark.state import TTL_COL, merge_state
+from entity_etl_spark.state import TTL_COL, merge_state, merge_state_join
 
 SPEC = TableSpec(name="entities", id_field="id", ts_field="updatedOnMs")
 PROJ = [
@@ -73,6 +74,23 @@ pages = st.lists(
 )
 
 
+def one_partition_upsert(state_df, page_df):
+    """The next state as a tick over a one-split page and state plans it:
+    keep-latest, then the full outer join of the two sides read as one
+    partition each, hashing the page. (These in-memory frames have no
+    size estimate, so the planner still exchanges both sides; a tick's
+    parquet page and state do not.)"""
+    latest = keep_latest_per_key(page_df, "id", "updatedOnMs")
+    return merge_state_join(
+        state_df.coalesce(1),
+        latest.coalesce(1).hint("shuffle_hash"),
+        "id",
+        ignore=("updatedOnMs",),
+        ttl_hours=TTL_HOURS,
+        now_epoch_ms=NOW,
+    )
+
+
 @given(stored=stored, page=pages)
 @settings(
     max_examples=25,
@@ -82,24 +100,36 @@ pages = st.lists(
 )
 def test_merge_state_matches_the_cache_model(spark, stored, page):
     """Duplicate keys in a page, (id, ts) ties broken by hash, expired keys
-    seen again (fresh ttl), unseen expired keys purged, null ids dropped."""
+    seen again (fresh ttl), unseen expired keys purged, null ids dropped:
+    by the anti-join upsert (merge_state) and by the one-partition full
+    outer join the pipeline runs for a one-split page and state."""
     state = {i: (model_hash(i, x), ttl) for i, (x, ttl) in stored.items()}
     state_df = spark.createDataFrame(
         [(i, h, ttl) for i, (h, ttl) in state.items()],
         state_mod.state_schema("id", T.LongType()),
     )
-    got = merge_state(
+    page_df = spark.createDataFrame(page, SCHEMA)
+    want = model_update(state, page, NOW, TTL_MS)
+    anti_join = merge_state(
         state_df,
-        spark.createDataFrame(page, SCHEMA),
+        page_df,
         "id",
         ignore=("updatedOnMs",),
         ts_field="updatedOnMs",
         ttl_hours=TTL_HOURS,
         now_epoch_ms=NOW,
-    ).collect()
-    want = model_update(state, page, NOW, TTL_MS)
-    assert len(got) == len(want)  # one row per key
-    assert {r["id"]: (r[HASH_COL], r[TTL_COL]) for r in got} == want
+    )
+    one_partition = one_partition_upsert(state_df, page_df)
+    if stored and page:  # an empty side folds the join away
+        # the plan as planned: at run time AQE may fold an all-NULL-id page
+        assert re.search(
+            r"ShuffledHashJoin .*FullOuter, BuildRight",
+            one_partition._jdf.queryExecution().executedPlan().toString(),
+        )
+    for nxt in (anti_join, one_partition):
+        got = nxt.collect()
+        assert len(got) == len(want)  # one row per key
+        assert {r["id"]: (r[HASH_COL], r[TTL_COL]) for r in got} == want
 
 
 def page(spark, tmp_path, name, rows):
@@ -131,8 +161,9 @@ def warm_tick_state_write(spark, tmp_path, name, n_keys, record):
 
 def test_state_write_plan_has_no_exchange_over_the_state(spark, tmp_path):
     """In the executed plan of a warm tick's state write, no shuffle
-    Exchange sits between the state FileScan and the write: the page's ids
-    reach the state rows as a broadcast."""
+    Exchange sits between the state FileScan and the write: the page and
+    the state each fit one file split, so the page's rows reach the state
+    rows through a shuffled hash join of two one-partition sides."""
     jvm_session = spark._jsparkSession
     plans = []
 

@@ -385,13 +385,16 @@ def test_warm_neardup_batch_runs_the_job_budget(spark, tmp_path):
 
 
 # Spark jobs of one warm pipeline.run_streaming micro-batch whose sink runs
-# one action. The runner's own 2 are the state write (page ids broadcast,
-# write); loading the state with its known schema and probing the batch
-# run none. The sink's action runs 3 (state broadcast, latest cache fill,
-# and the bodies): a one-file micro-batch fits one split, so neither the
-# keep-latest window nor the body aggregate shuffles.
-WARM_STREAMING_RUNNER_JOBS = 2
-WARM_STREAMING_SINK_JOBS = 3
+# one action. A one-file micro-batch and the state each fit one split, so
+# both are planned as one partition: neither the keep-latest window, nor
+# the body aggregate, nor either join exchanges or broadcasts anything.
+# - The runner's own 1 is the state write (the one-partition full outer
+#   join). Loading the state with its known schema and probing the batch
+#   run none.
+# - The sink's action runs 2: the latest cache fill, and the bodies (the
+#   delta's one-partition hash join of the batch and the state).
+WARM_STREAMING_RUNNER_JOBS = 1
+WARM_STREAMING_SINK_JOBS = 2
 
 
 def test_warm_run_streaming_batch_runs_the_job_budget(spark, tmp_path):
