@@ -37,6 +37,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import colcache
 from .. import state as state_mod
 
 
@@ -97,8 +98,18 @@ def shingles(text_col: str | Column, k: int = 3) -> Column:
     lambda here captures the tokenization: the token array is bound to
     the outer lambda's variable (a one-element ``transform``), split runs
     once per row, and the shingles come from zipping the ``k`` shifted
-    views of that variable, which is linear in the document's length."""
+    views of that variable, which is linear in the document's length.
 
+    The tree of a named column is built once per (column, ``k``)
+    (:mod:`~entity_etl_spark.colcache`)."""
+    if isinstance(text_col, str):
+        return colcache.cached(
+            ("shingles", text_col, k), lambda: _shingles(F.col(text_col), k)
+        )
+    return _shingles(text_col, k)
+
+
+def _shingles(text_col: Column, k: int) -> Column:
     def from_tokens(toks: Column) -> Column:
         n = F.size(toks)
         # view j holds the tokens at j, j+1, ..., j+n-k; the length is
@@ -1670,10 +1681,21 @@ def exact_neardup_dedup_incremental(
 
 def _without(df: DataFrame, col: str, ids: list) -> DataFrame:
     """``df`` less the rows whose ``col`` is one of ``ids``; a row with a
-    NULL ``col`` stays, as it does in a ``left_anti`` join."""
+    NULL ``col`` stays, as it does in a ``left_anti`` join.
+
+    A string, integral or boolean ``col`` gets the ids as one JSON
+    literal, which the optimizer folds to an array constant: one
+    expression, where ``isin`` builds one literal per id. JSON round-trips
+    these types exactly."""
     if not ids:
         return df
-    return df.filter(df[col].isNull() | ~df[col].isin(ids))
+    dtype = df.schema[col].dataType
+    if isinstance(dtype, (T.StringType, T.IntegralType, T.BooleanType)):
+        listed = F.from_json(F.lit(json.dumps(ids)), T.ArrayType(dtype))
+        hit = F.array_contains(listed, df[col])
+    else:
+        hit = df[col].isin(ids)
+    return df.filter(df[col].isNull() | ~hit)
 
 
 def repeated_substring_spans(

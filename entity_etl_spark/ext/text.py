@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import colcache
+
 # marker-word lists per language; count of hits decides the language.
 # (The harness corpus is synthetic; real deployments swap in a trained
 # identifier via pandas_udf with the same (text)->lang signature.)
@@ -74,7 +76,16 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Per-document quality features + a composite score in [0, ~1].
 
     Features: char length, token count, mean token length, stopword ratio.
-    Single map-only scan."""
+    Single map-only scan. The five columns are built once per text column
+    (:mod:`~entity_etl_spark.colcache`)."""
+    return df.withColumns(
+        colcache.cached(
+            ("quality_features", text_col), lambda: _quality_columns(text_col)
+        )
+    )
+
+
+def _quality_columns(text_col: str) -> dict[str, Column]:
     col = F.col(text_col)
     n_tokens = token_count(col)
     low = F.lower(col)
@@ -90,15 +101,13 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
         + F.least(stop_ratio_raw * F.lit(4.0), F.lit(1.0)) * 0.5,
         4,
     )
-    return df.withColumns(
-        {
-            "n_chars_calc": n_chars,
-            "n_tokens": n_tokens,
-            "avg_token_len": avg_tok_len,
-            "stopword_ratio": stop_ratio,
-            "quality_score": score,
-        }
-    )
+    return {
+        "n_chars_calc": n_chars,
+        "n_tokens": n_tokens,
+        "avg_token_len": avg_tok_len,
+        "stopword_ratio": stop_ratio,
+        "quality_score": score,
+    }
 
 
 def repetition_metrics(

@@ -42,6 +42,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import colcache
+
 # Handlebars escapeExpression table (handlebars utils.js); '&' first so the
 # entity replacements themselves are not re-escaped.
 _HTML_ESCAPES = [
@@ -191,9 +193,32 @@ def _compile_parts(parts: list, dtypes: dict, subject: str | None) -> Column:
     return F.concat(*cols)
 
 
+def _exprs(parts: list):
+    """Every mustache expression and ``{{#with}}`` subject of a parsed
+    template."""
+    for part in parts:
+        if isinstance(part, _WithNode):
+            yield part.subject
+            yield from _exprs(part.then_parts)
+            yield from _exprs(part.else_parts)
+        elif part[0] == "ref":
+            yield part[1]
+
+
 def compile_hbs(template: str, df: DataFrame) -> Column:
-    """Compile a Handlebars template to one string Column over ``df``."""
-    return _compile_parts(_parse(template), dict(df.dtypes), None)
+    """Compile a Handlebars template to one string Column over ``df``.
+
+    The Column is built once per template, schema and value of every
+    ``{{env.X}}`` the template reads (:mod:`~entity_etl_spark.colcache`),
+    so a changed environment value compiles afresh."""
+    parts = _parse(template)
+    dtypes = tuple(df.dtypes)
+    env_names = {e.strip()[4:] for e in _exprs(parts) if e.strip().startswith("env.")}
+    env = tuple(sorted((n, os.environ.get(n, "")) for n in env_names))
+    return colcache.cached(
+        ("hbs", template, dtypes, env),
+        lambda: _compile_parts(parts, dict(dtypes), None),
+    )
 
 
 def render_hbs(df: DataFrame, template: str, out_col: str = "rendered") -> DataFrame:

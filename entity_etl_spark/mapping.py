@@ -33,11 +33,14 @@ escape literal braces.
 
 from __future__ import annotations
 
+import json
 import re
 from collections.abc import Iterable, Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from . import colcache
 
 _TEMPLATE_TOKEN = re.compile(r"\{\{|\}\}|\{([^{}]+)\}")
 
@@ -128,16 +131,32 @@ def compile_mapping(
 
 def apply_mapping(df: DataFrame, specs: Iterable[Mapping]) -> DataFrame:
     """Project ``df`` through a mapping spec (reference transform(),
-    app.js:84-86). Unknown source fields render as ``""`` per Handlebars."""
-    fields = set(df.columns)
-    return df.select(*compile_mapping(specs, fields))
+    app.js:84-86). Unknown source fields render as ``""`` per Handlebars.
+
+    The select list is built once per spec and set of column names
+    (:mod:`~entity_etl_spark.colcache`); a spec that does not serialize
+    to JSON is compiled every call."""
+    specs = list(specs)
+    fields = frozenset(df.columns)
+    try:
+        key = ("mapping", json.dumps(specs, sort_keys=True), fields)
+    except (TypeError, ValueError):
+        return df.select(*compile_mapping(specs, set(fields)))
+    return df.select(
+        *colcache.cached(key, lambda: compile_mapping(specs, set(fields)))
+    )
 
 
 def to_json_rows(df: DataFrame, columns: Sequence[str] | None = None) -> DataFrame:
     """Serialize each row to one JSON string column ``json`` (reference O9:
     every template render emits a JSON string per entity, app.js:85)."""
-    cols = list(columns) if columns else df.columns
-    return df.select(F.to_json(F.struct(*[F.col(c) for c in cols])).alias("json"))
+    cols = tuple(columns) if columns else tuple(df.columns)
+    return df.select(
+        colcache.cached(
+            ("to_json", cols),
+            lambda: F.to_json(F.struct(*[F.col(c) for c in cols])).alias("json"),
+        )
+    )
 
 
 def load_projection_specs(specs_dir: str | None = None) -> dict[str, list]:
@@ -151,7 +170,6 @@ def load_projection_specs(specs_dir: str | None = None) -> dict[str, list]:
     awsDynamoDb.hbs:6-7 missing comma) and its azureVm aws_hypervisor
     copy-paste bug reproduced-but-documented (specs/azureVm.json)."""
     import glob as _glob
-    import json as _json
     import os as _os
 
     if specs_dir is None:
@@ -160,5 +178,5 @@ def load_projection_specs(specs_dir: str | None = None) -> dict[str, list]:
     for path in sorted(_glob.glob(_os.path.join(specs_dir, "*.json"))):
         name = _os.path.splitext(_os.path.basename(path))[0]
         with open(path) as f:
-            out[name] = _json.load(f)
+            out[name] = json.load(f)
     return out

@@ -37,11 +37,13 @@ class EngineConfig:
     - ``initial_checkpoint_ms``: first-run high-water mark (cache.js:18,
       default 1)
     - ``state_buckets``: when set, state persists as a warehouse table
-      bucketed by the id column and the state merge runs as a join-based
-      MERGE — the recurring delta join (O5) and merge (O12) then read
-      pre-partitioned buckets instead of shuffling the state side every run
-      (state.py:save_state_bucketed / merge_state_join). None = plain
-      parquet state + union-window merge.
+      bucketed by the id column (state.py:save_state_bucketed) and the
+      next state is the join-based MERGE of ``merge_state_join``, which
+      moves only the page side. None = plain parquet state, whose
+      transition never shuffles the state either: it broadcasts the state
+      and the page ids, or, when the page and the state fit one file split
+      each, joins them as one partition each
+      (pipeline.py:_transition).
     - ``profile``: execution profile name (``entity_etl_spark.profile``):
       ``"parity"`` (default) leaves every LSH-family hot-group cap off so
       oracle comparisons see complete output; ``"production"`` flips every

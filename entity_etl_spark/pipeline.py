@@ -46,7 +46,15 @@ the state broadcast and the page ids broadcast. The state is read with its
 known schema and the checkpoint from a file, so loading them runs no job. A
 sink that runs no SQL action over the bodies (none at all, or only RDD ones
 such as ``foreachPartition``) fills no Observation: the run then counts the
-bodies with one exact aggregate of its own.
+bodies with one exact aggregate of its own. A one-split page's bodies are
+planned as one partition, which :func:`~entity_etl_spark.sinks.http_sink`
+collects and sends from the driver; it sends any other bodies from the
+executors.
+
+The projection's Column tree is built once per projection and input schema
+and reused by every later tick and micro-batch of that schema (the
+compilers look it up in :mod:`~entity_etl_spark.colcache`), so a warm tick
+does not pay the few hundred py4j calls of building it again.
 
 State/checkpoint are saved after the sink succeeds, preserving the
 reference's at-least-once contract (app.js:55-58): a crash between send and
@@ -79,6 +87,9 @@ def _project_to_json(delta: DataFrame, projection) -> DataFrame:
     - a Handlebars template STRING (the reference's own .hbs dialect,
       hbs.py) → the rendered text IS the JSON — byte-faithful migration
       mode: point the engine at an unmodified reference template.
+
+    Both compilers reuse the Column tree they built for the same
+    projection and schema on an earlier tick.
     """
     if isinstance(projection, str):
         from .hbs import compile_hbs

@@ -8,11 +8,20 @@ a crash between send and save re-sends — the target must upsert by id
 same contract.
 
 - :func:`write_parquet` / :func:`write_json` — test-harness sinks.
-- :func:`http_sink` — POSTs the assembled bodies from one DataFrame action
-  (``mapInArrow`` into the ``noop`` writer). The executor-side callable
-  gets each body string; non-2xx raises, which fails the task and (with
-  retries exhausted) the job — fail-fast parity. The HTTP client is
-  injected so tests run without a network.
+- :func:`http_sink` — sends the assembled bodies from one SQL action, by
+  one of two paths chosen from the bodies' planned partitioning (no job
+  runs to choose):
+
+  - one partition (a warm tick over a page of one file split): one
+    ``collect`` of the bodies, sent from the driver. A task that ran the
+    sends in a Python worker would pay the worker's start, about 0.2-0.3 s
+    on a small host (``tools/probe_env.py``), for a few small bodies;
+  - any other partitioning: ``mapInArrow`` into the ``noop`` writer, each
+    partition sending its bodies from its executor.
+
+  Either way non-2xx raises and fails the action — fail-fast parity — and
+  delivery stays at-least-once. The HTTP client is injected so tests run
+  without a network.
 """
 
 from __future__ import annotations
@@ -68,21 +77,36 @@ def http_sink(
     """Send each assembled batch body (batch.py:assemble_bodies output).
 
     ``post`` is the injected transport; when None, a stdlib ``urllib``
-    client posting to ``url`` is used. One HTTP round-trip per batch row,
-    executed on the executors partition-parallel — the distributed
-    analogue of the reference's sequential per-batch await
-    (app.js:99-111). The sends run in ONE DataFrame action
-    (``mapInArrow`` into the ``noop`` writer), not an RDD
-    ``foreachPartition``: a SQL execution fills an Observation attached
-    to ``bodies``, so the pipeline reads its body counts off this action
-    instead of running its own.
+    client posting to ``url`` is used. One HTTP round-trip per batch row.
+    The sends run in ONE SQL action, not an RDD ``foreachPartition``: a
+    SQL execution fills an Observation attached to ``bodies``, so the
+    pipeline reads its body counts off this action instead of running
+    its own. Which action depends on the bodies' planned partitioning
+    (the physical plan's output partitioning, under AQE that of the plan
+    it starts from; reading it runs no job):
+
+    - one partition: one ``collect`` of the ``body`` column, and the
+      driver sends each body in turn, as the reference's sequential
+      per-batch await does (app.js:99-111). No Python worker starts.
+      The pipeline plans the bodies as one partition only for a page of
+      one file split (:func:`~entity_etl_spark.state.split_count`), and
+      on a session of more than one core such a page's size estimate is
+      at most ``spark.sql.files.openCostInBytes`` (4 MiB by default), so
+      the collected bodies, a projection of that page's changed rows,
+      are small. A caller's own one-partition frame is collected whole
+      too.
+    - any other partitioning: ``mapInArrow`` into the ``noop`` writer;
+      each partition's task sends its bodies from its executor,
+      partition-parallel, the distributed analogue of that loop.
 
     Delivery semantics (reference parity + the distributed extra):
-    fail-fast on non-2xx like http.js:15-19, but distributed execution
-    adds a failure mode the sequential reference never has — a task that
-    dies MID-partition is re-run by Spark from the partition's first
-    row, re-sending every body the failed attempt already delivered. So
-    the sink is at-least-once per BODY, and each request carries a
+    fail-fast on non-2xx like http.js:15-19, on either path. The
+    executor path adds a failure mode the sequential reference never
+    has — a task that dies MID-partition is re-run by Spark from the
+    partition's first row, re-sending every body the failed attempt
+    already delivered. On the driver path a failed run re-sends on the
+    next one, as the reference does. So the sink is at-least-once per
+    BODY on both paths, and each request carries a
     deterministic ``Idempotency-Key`` header (md5 of the body) so a
     conforming receiver can collapse replays into exactly-once effect;
     an upsert-by-id receiver (the reference's documented contract,
@@ -182,6 +206,12 @@ def http_sink(
                 raise RuntimeError(f"sink returned HTTP {status}")
             time.sleep(backoff * (2**attempt))
 
+    frame = bodies.select("body")
+    if _planned_single_partition(frame):
+        for row in frame.collect():
+            send_one(row[0])
+        return
+
     def send_partition(batches):
         for batch in batches:
             for body in batch.column("body").to_pylist():
@@ -189,12 +219,21 @@ def http_sink(
         yield from ()
 
     (
-        bodies.select("body")
-        .mapInArrow(send_partition, "sent long")
+        frame.mapInArrow(send_partition, "sent long")
         .write.format("noop")
         .mode("overwrite")
         .save()
     )
+
+
+def _planned_single_partition(df: DataFrame) -> bool:
+    """Whether ``df``'s physical plan computes it as one partition. Reads
+    the planned output partitioning, which runs no job; under AQE that of
+    the plan AQE starts from, since the adaptive root reports none."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.inputPlan()
+    return plan.outputPartitioning().getClass().getSimpleName() == "SinglePartition$"
 
 
 def write_training_shards(

@@ -92,6 +92,22 @@ def test_missing_column_renders_empty_and_env(spark):
     )
 
 
+def test_changed_env_value_renders_afresh(spark, monkeypatch):
+    """Compiled Columns are reused per template and schema, but an
+    ``{{env.X}}`` value is read at compile time: a changed value must
+    render the new value, in a mustache and as a ``{{#with}}`` subject."""
+    df = _fixture_df(spark, "x")
+    tpl = "foo={{env.HBS_TEST_CHANGING}};{{#with env.HBS_TEST_CHANGING}}[{{.}}]{{else}}none{{/with}}"
+    rendered = []
+    for value in ("one", "two", None):
+        if value is None:
+            monkeypatch.delenv("HBS_TEST_CHANGING")
+        else:
+            monkeypatch.setenv("HBS_TEST_CHANGING", value)
+        rendered.append(render_hbs(df, tpl).first()["rendered"])
+    assert rendered == ["foo=one;[one]", "foo=two;[two]", "foo=;none"]
+
+
 def test_each_rejected(spark):
     df = _fixture_df(spark, "x")
     with pytest.raises(ValueError, match="each"):

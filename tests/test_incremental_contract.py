@@ -1,15 +1,18 @@
 """The run contract of pipeline.run_incremental: how many Spark jobs a warm
 tick runs, that a page and a state of one file split shuffle and broadcast
 nothing, that a page of several keeps its exchange and a state of several
-its broadcasts with the same output, that a sink which runs no
-SQL action over the bodies gets the same result, what a tick over an
-already-seen page reports, that the state stays one compact table, that
+its broadcasts with the same output, that ``http_sink`` sends a one-split
+tick's bodies from the driver, that warm ticks build their projection
+once, that a sink which runs no SQL action over the bodies gets the same
+result, what a tick over an already-seen page reports, that the state stays one compact table, that
 ties on (id, ts) resolve to one version in both the emitted body and the
 stored hash, and the arithmetic batch ids."""
 
+import hashlib
 import json
 import os
 import re
+import tempfile
 from contextlib import contextmanager
 
 import pytest
@@ -21,6 +24,7 @@ from entity_etl_spark.checkpoint import load_checkpoint
 from entity_etl_spark.delta import HASH_COL, with_content_hash
 from entity_etl_spark.model import EngineConfig, TableSpec
 from entity_etl_spark.pipeline import run_incremental
+from entity_etl_spark.sinks import http_sink
 
 SPEC = TableSpec(name="entities", id_field="id", ts_field="updatedOnMs")
 PROJ = [
@@ -293,6 +297,115 @@ def test_one_split_page_over_a_several_split_state_keeps_the_broadcast_plan(
         assert (a["result"], a["items"]) == (b["result"], b["items"])
         assert (a["checkpoint"], a["state"]) == (b["checkpoint"], b["state"])
     assert one[1]["result"].emitted_rows == 10
+
+
+def http_sink_for(root, sent):
+    """A ``run_ticks`` sink that sends through ``http_sink`` to a transport
+    writing each body to a file. Per tick it appends to ``sent`` the bodies
+    the transport received and those a plain collect of the same frame
+    reads, both sorted."""
+    def sink_for(items, parts):
+        d = tempfile.mkdtemp(dir=root)
+
+        def post(body):
+            name = hashlib.md5(body.encode("utf-8")).hexdigest()
+            with open(os.path.join(d, name), "w") as f:
+                f.write(body)
+            return 200
+
+        def sink(bodies):
+            http_sink(bodies, post)
+            got = []
+            for name in os.listdir(d):
+                with open(os.path.join(d, name)) as f:
+                    got.append(f.read())
+            items.extend(x for b in got for x in json.loads(b))
+            sent.append(
+                (sorted(got), sorted(r[0] for r in bodies.select("body").collect()))
+            )
+        return sink
+    return sink_for
+
+
+PYTHON_UDF = re.compile(r"MapInArrow")  # MapInArrow and PythonMapInArrow
+
+
+def test_one_split_tick_sends_from_the_driver(spark, tmp_path):
+    """Warm ticks over a page and a state of one file split plan their
+    bodies as one partition: ``http_sink`` sends them from the driver, so
+    no SQL execution of the tick holds a Python UDF node. The same ticks
+    over a page of several splits send from the executors, through
+    ``mapInArrow``. Every tick sends each body exactly as a collect of
+    the bodies frame reads it, and both forms send the same items."""
+    sent_one, sent_several = [], []
+    one = run_ticks(spark, tmp_path, "one", http_sink_for(tmp_path, sent_one))
+    with session_conf(spark, {
+        "spark.sql.files.maxPartitionBytes": 256,
+        "spark.sql.files.openCostInBytes": 256,
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": 1,
+    }):
+        several = run_ticks(
+            spark, tmp_path, "several", http_sink_for(tmp_path, sent_several)
+        )
+    for a, b in zip(one[1:], several[1:]):
+        assert not any(PYTHON_UDF.search(t) for t in a["trees"]), a["trees"]
+        assert any(PYTHON_UDF.search(t) for t in b["trees"]), b["trees"]
+    for a, b in zip(one, several):
+        assert a["items"] == b["items"]
+        assert (a["checkpoint"], a["state"]) == (b["checkpoint"], b["state"])
+    for got, want in sent_one + sent_several:
+        assert got == want and got
+    assert one[1]["result"].emitted_rows == 10
+
+
+@pytest.mark.parametrize("kind", ["spec", "template"])
+def test_warm_ticks_compile_their_projection_once(
+    spark, tmp_path, monkeypatch, kind
+):
+    """Three warm ticks over pages of one schema build the projection's
+    Column tree once: the compiler runs on the first and is skipped on the
+    next two. The projection is new to the session, so no earlier test has
+    built it."""
+    from entity_etl_spark import hbs, mapping
+
+    calls, depth = [0], [0]
+
+    def counting(fn):
+        def wrapper(*args, **kwargs):
+            # hbs compiles {{#with}} blocks recursively: count the outermost
+            calls[0] += depth[0] == 0
+            depth[0] += 1
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                depth[0] -= 1
+        return wrapper
+
+    tag = os.urandom(8).hex()
+    if kind == "spec":
+        proj = PROJ + [{"target": "tag", "value": tag}]
+        monkeypatch.setattr(
+            mapping, "compile_mapping", counting(mapping.compile_mapping)
+        )
+    else:
+        proj = '{"cmdb_ci": "{{id}}", "value": "{{x}}", "tag": "' + tag + '"}'
+        monkeypatch.setattr(hbs, "_compile_parts", counting(hbs._compile_parts))
+    cfg = EngineConfig(max_batch_size=7, state_dir=str(tmp_path / "state"))
+    run_incremental(
+        spark, SPEC, page(spark, tmp_path, "p0", tick_rows(0)), PROJ, cfg,
+        collecting_sink([]), now_epoch_ms=NOW,
+    )
+    per_tick = []
+    for tick in range(1, 4):
+        sent: list = []
+        before = calls[0]
+        run_incremental(
+            spark, SPEC, page(spark, tmp_path, f"p{tick}", tick_rows(tick)),
+            proj, cfg, collecting_sink(sent), now_epoch_ms=NOW,
+        )
+        per_tick.append(calls[0] - before)
+        assert len(sent) == 10 and all(e["tag"] == tag for e in sent)
+    assert per_tick == [1, 0, 0]
 
 
 @pytest.mark.parametrize(

@@ -5,7 +5,7 @@ from pyspark.sql import functions as F
 
 from entity_etl_spark.batch import assemble_bodies, assign_batches
 from entity_etl_spark.mapping import to_json_rows
-from entity_etl_spark.sinks import http_sink
+from entity_etl_spark.sinks import _planned_single_partition, http_sink
 from entity_etl_spark.sources import Catalog, rest_source
 from entity_etl_spark.model import TableSpec
 
@@ -62,16 +62,25 @@ def test_catalog_select():
     assert [s.name for s in cat.select(["b", "zz"])] == ["b"]
 
 
-@pytest.fixture()
-def bodies(spark):
-    df = spark.range(0, 10).select(F.col("id"), (F.col("id") * 2).alias("v"))
+@pytest.fixture(params=["one_partition", "several_partitions"])
+def bodies(spark, request):
+    """Three bodies of ten rows, planned as one partition (``http_sink``
+    sends them from the driver) or as several (from the executors)."""
+    one = request.param == "one_partition"
+    df = spark.range(0, 10, numPartitions=1 if one else 4).select(
+        F.col("id"), (F.col("id") * 2).alias("v")
+    )
     batched = assign_batches(to_json_rows(df), 4, ["json"])
-    return assemble_bodies(batched)
+    out = assemble_bodies(batched)
+    if not one:
+        out = out.repartition(2)
+    assert _planned_single_partition(out.select("body")) == one
+    return out
 
 
 def test_http_sink_posts_every_batch(bodies):
-    # the injected transport runs executor-side, pickled even in local
-    # mode: it records each body as a side-effect file
+    # the injected transport runs on the driver or executor-side, pickled
+    # even in local mode: it records each body as a side-effect file
     import json
     import tempfile, os, glob
 

@@ -10,6 +10,13 @@ fallbacks, with the feature each one would unlock):
 - PIL / cv2 / soundfile -> real image/video/audio codecs (ext/multimodal.py
                       env-gate; WAV/BMP/VID0 decode paths are real already)
 
+Plus one timing probe, ``python_worker_action_s``: the median wall time
+of a trivial one-row, one-partition action with and without a Python
+worker (``mapInArrow`` vs a plain ``collect``). One partition runs one
+task, so the probe starts one worker, not a pool. The gap is the fixed
+cost a sink pays to send from the executors instead of the driver
+(``sinks.http_sink``).
+
 No installation is attempted: the environment brief forbids pip/apt, so
 the probe records importability + a live format probe only.
 
@@ -82,6 +89,29 @@ def probe() -> dict:
         import shutil
 
         shutil.rmtree(d, ignore_errors=True)
+    out["python_worker_action_s"] = python_worker_action_s(spark)
+    return out
+
+
+def python_worker_action_s(spark, repeats: int = 7) -> dict:
+    """Median wall seconds of a one-row, one-partition ``collect`` with and
+    without a Python worker in its task, each after one warm-up run."""
+    import statistics
+
+    one_row = spark.range(1, numPartitions=1)
+    actions = {
+        "without_worker": one_row,
+        "with_worker": one_row.mapInArrow(lambda batches: batches, "id long"),
+    }
+    out: dict = {"repeats": repeats}
+    for name, df in actions.items():
+        df.collect()  # warm-up: the worker start, codegen
+        walls = []
+        for _ in range(repeats):
+            t = time.perf_counter()
+            df.collect()
+            walls.append(time.perf_counter() - t)
+        out[name] = round(statistics.median(walls), 4)
     return out
 
 
