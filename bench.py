@@ -234,6 +234,141 @@ SF01_REF_BESTS: dict[str, float] = {
 }
 
 
+def factor_ceiling(name: str, refs: dict[str, float], pad: float) -> float:
+    """The cross-decade scaling gate: quadratic-contract queries may
+    scale ~110x per decade, everything else 15x, plus a fixed-cost
+    pad."""
+    return (110.0 if name in QUADRATIC_CONTRACT else 15.0) * refs[name] + pad
+
+
+def build_artifact(
+    sf: str,
+    timings: dict[str, float],
+    timings2: dict[str, float],
+    note: str | None = None,
+) -> dict:
+    """The bench JSON artifact from the headline (``timings``) and heavy
+    (``timings2``) per-query seconds at scale factor ``sf``: totals, heavy
+    ceilings (sf0.1), factor ratchets against the committed
+    previous-decade reference bests (sf1 vs sf0.1 refs, sf10 vs sf1
+    refs), ungated lists, and the frozen-18 subtotal. ``main`` and the
+    merge tools (tools/merge_bench_min.py, tools/assemble_bench.py) build
+    their artifacts here, so a gate rule has one definition; the tools
+    record their provenance in ``note``."""
+    both = {**timings, **timings2}
+
+    # Heavy-group ratchet (BASELINE.md round-4): per-query ceilings =
+    # 2x the recorded r3-final best + 0.5 s absolute slack (sub-second
+    # queries triple under host contention; the slack keeps a loaded box
+    # from reading as a regression while a real blowup — the 10-100x
+    # class bench2 caught twice in r3 — still goes red).
+    breaches = (
+        {
+            name: {"sec": t, "ceiling": HEAVY_CEILINGS_SF01[name]}
+            for name, t in timings2.items()
+            if name in HEAVY_CEILINGS_SF01 and t > HEAVY_CEILINGS_SF01[name]
+        }
+        if sf == "0.1"
+        else {}
+    )
+
+    # sf1 factor ratchet (round 6, BASELINE.md): at 10x the data every
+    # query must stay under a LOOSE 15x of its recorded sf0.1 quiet best
+    # (+2 s absolute slack for sub-second queries) — the superlinear class
+    # (semantic_dedup_pairs read 22x at r5's rehearsal) goes red here
+    # instead of relying on someone eyeballing the factors. Reference
+    # bests are the r6-close quiet sf0.1 run; update them when a query's
+    # implementation legitimately changes.
+    #
+    # QUADRATIC_CONTRACT (module level): minhash_recall_gate's exact
+    # SHINGLE join is additionally row-explosive (~25G join rows at sf10
+    # — excluded there, see SF10_EXCLUDED); semantic_dedup_pairs' exact
+    # truth is a BLAS block matmul, so it RUNS at sf10 (measured 492 s =
+    # 81x sf1) under the 110x allowance. The production semdedup path
+    # (auto-k, no in-query truth) stays linear by design.
+    sf1_breaches = (
+        {
+            name: {
+                "sec": t,
+                "factor_ceiling": round(
+                    factor_ceiling(name, SF01_REF_BESTS, 2.0), 1
+                ),
+            }
+            for name, t in both.items()
+            if name in SF01_REF_BESTS
+            and t > factor_ceiling(name, SF01_REF_BESTS, 2.0)
+        }
+        if sf == "1"
+        else {}
+    )
+    # a timed query missing from the reference dict is UNGATED, which
+    # silently defeats the ratchet for queries added after the dict was
+    # recorded — always surface the uncovered list so a zero-breach run
+    # can't hide an unratcheted regression
+    sf1_ungated = sorted(set(both) - set(SF01_REF_BESTS)) if sf == "1" else []
+
+    # sf10 factor ratchet (round 7): the second measured decade. Same
+    # per-decade rule as sf1 — every query < 15x its recorded sf1 quiet
+    # best + 3 s absolute slack — so a query that stays ~linear passes
+    # with margin while the superlinear class compounds into a breach.
+    # Names missing from SF1_REF_BESTS surface in sf10_ratchet_ungated,
+    # never pass silently.
+    sf10_breaches = (
+        {
+            name: {
+                "sec": t,
+                "factor_ceiling": round(
+                    factor_ceiling(name, SF1_REF_BESTS, 3.0), 1
+                ),
+            }
+            for name, t in both.items()
+            if name in SF1_REF_BESTS
+            and t > factor_ceiling(name, SF1_REF_BESTS, 3.0)
+        }
+        if sf == "10"
+        else {}
+    )
+    sf10_ungated = sorted(set(both) - set(SF1_REF_BESTS)) if sf == "10" else []
+
+    total = round(sum(timings.values()), 3)
+    # minhash_near_dups history: r6 folded the exact-truth recall gate
+    # into this name (~2.5x r1 work); r7 moved the gate to the heavy
+    # group (minhash_recall_gate) and the frozen name benches the linear
+    # LSH leg again — at the 64/16 config (r5's recall fix; r1 ran 32/8,
+    # about half the signature work) with the portable cross-engine hash
+    # (~0.25 s premium over xxhash64 at sf0.1). r8 added the DEPLOYABLE
+    # engine-native leg under its own headline name (VERDICT r7 item 3);
+    # r9 renamed that bench entry to minhash_near_dups_xxh64_pairs when
+    # the original name became the oracle-paired gate row (VERDICT r8
+    # item 2). Both legs stay excluded from the frozen-18 subtotal,
+    # which remains the strictly-like-for-like r1 comparison.
+    frozen18 = round(
+        total
+        - timings.get("minhash_near_dups", 0.0)
+        - timings.get("minhash_near_dups_xxh64_pairs", 0.0),
+        3,
+    )
+    artifact = {
+        "metric": "headline-queries-total-sec",
+        "value": total,
+        "unit": "sec",
+        "frozen18_subtotal_sec": frozen18,
+        "queries": timings,
+        "heavy_total_sec": round(sum(timings2.values()), 3),
+        "heavy_queries": timings2,
+        "heavy_ceiling_breaches": breaches,
+        "sf1_factor_breaches": sf1_breaches,
+        "sf1_ratchet_ungated": sf1_ungated,
+        "sf10_factor_breaches": sf10_breaches,
+        "sf10_ratchet_ungated": sf10_ungated,
+        "sf10_excluded": dict(SF10_EXCLUDED) if sf == "10" else {},
+        "sf": sf,
+    }
+    if note is not None:
+        artifact["note"] = note
+    return artifact
+
+
 def main() -> None:
     from entity_etl_spark.queries import REGISTRY
 
@@ -282,12 +417,9 @@ def main() -> None:
         name for name, q in REGISTRY.items() if "bench2" in q.tags
     ]
 
-    sf10_excluded = dict(SF10_EXCLUDED)
     if sf == "10":
-        bench_queries = [q for q in bench_queries if q not in sf10_excluded]
-        bench2_queries = [q for q in bench2_queries if q not in sf10_excluded]
-    else:
-        sf10_excluded = {}
+        bench_queries = [q for q in bench_queries if q not in SF10_EXCLUDED]
+        bench2_queries = [q for q in bench2_queries if q not in SF10_EXCLUDED]
 
     # warm-up: JVM + parquet footer reads
     REGISTRY[bench_queries[0]].fn(spark, sf_dir).count()
@@ -354,157 +486,24 @@ def main() -> None:
     timings = run_group(bench_queries)
     timings2 = run_group(bench2_queries)
 
-    # Heavy-group ratchet (BASELINE.md round-4): per-query ceilings =
-    # 2x the recorded r3-final best + 0.5 s absolute slack (sub-second
-    # queries triple under host contention; the slack keeps a loaded box
-    # from reading as a regression while a real blowup — the 10-100x
-    # class bench2 caught twice in r3 — still goes red). Breaches are
-    # REPORTED in the JSON (and on stderr), never swallowed.
-    heavy_ceilings_sf01 = HEAVY_CEILINGS_SF01
-    breaches = (
-        {
-            name: {"sec": t, "ceiling": heavy_ceilings_sf01[name]}
-            for name, t in timings2.items()
-            if name in heavy_ceilings_sf01 and t > heavy_ceilings_sf01[name]
-        }
-        if sf == "0.1"
-        else {}
-    )
-    if breaches:
-        print(
-            f"HEAVY CEILING BREACH: {json.dumps(breaches)}",
-            file=sys.stderr,
-        )
-
-    # sf1 factor ratchet (round 6, BASELINE.md): at 10x the data every
-    # query must stay under a LOOSE 15x of its recorded sf0.1 quiet best
-    # (+2 s absolute slack for sub-second queries) — the superlinear class
-    # (semantic_dedup_pairs read 22x at r5's rehearsal) goes red here
-    # instead of relying on someone eyeballing the factors. Reference
-    # bests are the r6-close quiet sf0.1 run; update them when a query's
-    # implementation legitimately changes.
-    #
-    # QUADRATIC_CONTRACT (module level): minhash_recall_gate's exact
-    # SHINGLE join is additionally row-explosive (~25G join rows at sf10
-    # — excluded there, see SF10_EXCLUDED); semantic_dedup_pairs' exact
-    # truth is a BLAS block matmul, so it RUNS at sf10 (measured 492 s =
-    # 81x sf1) under the 110x allowance. The production semdedup path
-    # (auto-k, no in-query truth) stays linear by design.
-    quadratic_contract = QUADRATIC_CONTRACT
-    sf01_ref_bests = SF01_REF_BESTS
-    def _sf1_ceiling(name: str) -> float:
-        factor = 110.0 if name in quadratic_contract else 15.0
-        return factor * sf01_ref_bests[name] + 2.0
-
-    sf1_breaches = (
-        {
-            name: {
-                "sec": t,
-                "factor_ceiling": round(_sf1_ceiling(name), 1),
-            }
-            for name, t in {**timings, **timings2}.items()
-            if name in sf01_ref_bests and t > _sf1_ceiling(name)
-        }
-        if sf == "1"
-        else {}
-    )
-    # a timed query missing from the reference dict is UNGATED, which
-    # silently defeats the ratchet for queries added after the dict was
-    # recorded — always surface the uncovered list so a zero-breach run
-    # can't hide an unratcheted regression
-    sf1_ungated = (
-        sorted(set({**timings, **timings2}) - set(sf01_ref_bests))
-        if sf == "1"
-        else []
-    )
-    if sf1_breaches:
-        print(
-            f"SF1 FACTOR BREACH: {json.dumps(sf1_breaches)}",
-            file=sys.stderr,
-        )
-    if sf1_ungated:
-        print(
-            f"SF1 RATCHET GAP (no sf0.1 reference best): {sf1_ungated}",
-            file=sys.stderr,
-        )
-
-    # sf10 factor ratchet (round 7): the second measured decade. Same
-    # per-decade rule as sf1 — every query < 15x its recorded sf1 quiet
-    # best + 3 s absolute slack — so a query that stays ~linear passes
-    # with margin while the superlinear class compounds into a breach.
-    # Reference bests are the r7 sf1 quiet run on the regenerated
-    # (clustered-embedding) twin, BENCH_sf1_r7.json. (Filled after that
-    # run; empty entries surface in sf10_ratchet_ungated, never pass
-    # silently.)
-    sf1_ref_bests = dict(SF1_REF_BESTS)
-
-    def _sf10_ceiling(name: str) -> float:
-        factor = 110.0 if name in quadratic_contract else 15.0
-        return factor * sf1_ref_bests[name] + 3.0
-
-    sf10_breaches = (
-        {
-            name: {
-                "sec": t,
-                "factor_ceiling": round(_sf10_ceiling(name), 1),
-            }
-            for name, t in {**timings, **timings2}.items()
-            if name in sf1_ref_bests and t > _sf10_ceiling(name)
-        }
-        if sf == "10"
-        else {}
-    )
-    sf10_ungated = (
-        sorted(set({**timings, **timings2}) - set(sf1_ref_bests))
-        if sf == "10"
-        else []
-    )
-    if sf10_breaches:
-        print(
-            f"SF10 FACTOR BREACH: {json.dumps(sf10_breaches)}",
-            file=sys.stderr,
-        )
-    if sf10_ungated:
-        print(
-            f"SF10 RATCHET GAP (no sf1 reference best): {sf10_ungated}",
-            file=sys.stderr,
-        )
-
-    total = round(sum(timings.values()), 3)
-    # minhash_near_dups history: r6 folded the exact-truth recall gate
-    # into this name (~2.5x r1 work); r7 moved the gate to the heavy
-    # group (minhash_recall_gate) and the frozen name benches the linear
-    # LSH leg again — at the 64/16 config (r5's recall fix; r1 ran 32/8,
-    # about half the signature work) with the portable cross-engine hash
-    # (~0.25 s premium over xxhash64 at sf0.1). r8 added the DEPLOYABLE
-    # engine-native leg under its own headline name (VERDICT r7 item 3);
-    # r9 renamed that bench entry to minhash_near_dups_xxh64_pairs when
-    # the original name became the oracle-paired gate row (VERDICT r8
-    # item 2). Both legs stay excluded from the frozen-18 subtotal,
-    # which remains the strictly-like-for-like r1 comparison.
-    frozen18 = round(
-        total
-        - timings.get("minhash_near_dups", 0.0)
-        - timings.get("minhash_near_dups_xxh64_pairs", 0.0),
-        3,
-    )
+    artifact = build_artifact(sf, timings, timings2)
+    # breaches and ratchet gaps are REPORTED on stderr as well as in the
+    # JSON, never swallowed
+    for key, label in (
+        ("heavy_ceiling_breaches", "HEAVY CEILING BREACH"),
+        ("sf1_factor_breaches", "SF1 FACTOR BREACH"),
+        ("sf1_ratchet_ungated", "SF1 RATCHET GAP (no sf0.1 reference best)"),
+        ("sf10_factor_breaches", "SF10 FACTOR BREACH"),
+        ("sf10_ratchet_ungated", "SF10 RATCHET GAP (no sf1 reference best)"),
+    ):
+        found = artifact[key]
+        if found:
+            shown = json.dumps(found) if isinstance(found, dict) else found
+            print(f"{label}: {shown}", file=sys.stderr)
     print(
         json.dumps(
             {
-                "metric": "headline-queries-total-sec",
-                "value": total,
-                "unit": "sec",
-                "frozen18_subtotal_sec": frozen18,
-                "queries": timings,
-                "heavy_total_sec": round(sum(timings2.values()), 3),
-                "heavy_queries": timings2,
-                "heavy_ceiling_breaches": breaches,
-                "sf1_factor_breaches": sf1_breaches,
-                "sf1_ratchet_ungated": sf1_ungated,
-                "sf10_factor_breaches": sf10_breaches,
-                "sf10_ratchet_ungated": sf10_ungated,
-                "sf10_excluded": sf10_excluded,
-                "sf": sf,
+                **artifact,
                 # scaling evidence (r12): the core count this run actually
                 # executed with, and per-query executed job/stage/task
                 # counts from run 1 — additions only; the timed loop and

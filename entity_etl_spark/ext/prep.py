@@ -123,81 +123,6 @@ def prepare_training_data(
     return out
 
 
-def run_streaming_prep(
-    spark,
-    stream: DataFrame,
-    out_dir: str,
-    state_dir: str,
-    checkpoint_dir: str,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    group_col: str = "source",
-    min_tokens: int = 20,
-    min_quality: float = 0.15,
-    timeout_sec: float = 120.0,
-) -> None:
-    """Continuous training-data ingest: the prep pipeline as a Structured
-    Streaming job over any streaming docs source (files landing in a
-    bucket, Kafka, the rest_entities DataSource).
-
-    Per micro-batch (foreachBatch): clean → quality gate → incremental
-    exact dedup against the PERSISTENT fingerprint state (so a document
-    seen in ANY earlier batch never re-enters the corpus — cross-batch,
-    not just in-batch) → leakage-safe split → append surviving rows
-    partitioned by split. Source offsets (the checkpoint dir) make re-reads
-    impossible; the fingerprint state makes re-sends harmless — the same
-    two-layer idempotence as pipeline.run_streaming.
-
-    State is a one-column parquet table (``fp``) that each batch grows by
-    its new fingerprints only (:func:`...state.append_state`), never
-    rewriting the accumulated rows. A replayed batch may append its
-    fingerprints twice; the anti-join reading them is insensitive to
-    duplicates. At scale, a bucketed-by-fp table (sinks.write_bucketed)
-    keeps the anti-join shuffle-free.
-    """
-    from ..state import append_state, load_state
-    from ..streaming import probe_batch_rows, run_available_now, spread_batch
-    from .dedup import exact_dedup_incremental
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        rows = probe_batch_rows(batch_df, checkpoint_dir, batch_id)
-        if rows == 0:
-            return
-        # a micro-batch often arrives as ONE input partition (one landed
-        # file / one page); fan out before the per-doc heavy work or all
-        # cores but one sit idle — width scaled to the batch's size
-        batch_df = spread_batch(spark, batch_df, rows)
-        cleaned = batch_df.withColumn(text_col, clean_text(text_col))
-        # pinned: the gated batch has several downstream consumers
-        # (fingerprints, body semi-join, split+write) — without the
-        # barrier each re-runs the clean + quality-feature scan
-        gated = (
-            quality_features(cleaned, text_col)
-            # barrier BELOW the gate: FilterExec applies no
-            # subexpression elimination, so a pushed-down gate
-            # re-evaluates the whole feature tree ~8x (see
-            # prepare_training_data); the ckpt was already here for
-            # the multi-consumer pin and now also pays the features
-            # exactly once
-            .localCheckpoint(eager=True)
-            .filter(
-                (F.col("n_tokens") >= min_tokens)
-                & (F.col("quality_score") >= min_quality)
-            )
-        )
-        seen = load_state(spark, state_dir, "doc_fps")
-        kept, new_fps = exact_dedup_incremental(
-            seen, gated, id_col=id_col, text_col=text_col, new_fps_only=True
-        )
-        out = grouped_split(kept, group_col)
-        out.write.mode("append").partitionBy("split").parquet(out_dir)
-        # state grows by O(batch), never rewriting the accumulated table
-        append_state(new_fps, state_dir, "doc_fps")
-
-    run_available_now(stream, checkpoint_dir, process, timeout_sec=timeout_sec)
-
-
 def run_streaming_neardup_prep(
     spark,
     stream: DataFrame,
@@ -213,18 +138,21 @@ def run_streaming_neardup_prep(
     verify_threshold: float = 0.5,
     timeout_sec: float = 120.0,
 ) -> None:
-    """Continuous ingest with NEAR-dup suppression: like
-    :func:`run_streaming_prep` but the persistent state carries document
-    CONTENT structure, so a paraphrased/near-duplicate re-send of any
-    earlier document is dropped, not just byte-identical ones.
+    """Continuous training-data ingest with NEAR-dup suppression: the prep
+    pipeline as a Structured Streaming job over any streaming docs source
+    (files landing in a bucket, Kafka, the rest_entities DataSource),
+    whose persistent state carries document CONTENT structure, so a
+    paraphrased/near-duplicate re-send of any earlier document is
+    dropped, not just byte-identical ones.
 
     Per micro-batch: clean → quality gate → incremental exact near-dup
     dedup (:func:`...dedup.exact_neardup_dedup_incremental`) against the
-    persistent shingle inverted index → leakage-safe split → append. Same
-    two-layer idempotence as run_streaming_prep (source offsets +
-    content state). The drop decision uses the exact pair set at any
-    scale, and the corpus contributes only a columnar scan of the state
-    per batch (document bodies are never re-read).
+    persistent shingle inverted index → leakage-safe split → append.
+    Source offsets (the checkpoint dir) make re-reads impossible; the
+    content state makes re-sends harmless — the same two-layer idempotence
+    as pipeline.run_streaming. The drop decision uses the exact pair set
+    at any scale, and the corpus contributes only a columnar scan of the
+    state per batch (document bodies are never re-read).
 
     State is the operator's two tables, ``doc_shingles`` ``(doc, sh)`` and
     ``doc_sizes`` ``(doc, n)`` (:func:`...dedup.load_neardup_state`). Each

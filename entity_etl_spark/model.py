@@ -36,14 +36,6 @@ class EngineConfig:
     - ``state_ttl_hours``: keyed-state TTL (config.json:21, default 8)
     - ``initial_checkpoint_ms``: first-run high-water mark (cache.js:18,
       default 1)
-    - ``state_buckets``: when set, state persists as a warehouse table
-      bucketed by the id column (state.py:save_state_bucketed) and the
-      next state is the join-based MERGE of ``merge_state_join``, which
-      moves only the page side. None = plain parquet state, whose
-      transition never shuffles the state either: it broadcasts the state
-      and the page ids, or, when the page and the state fit one file split
-      each, joins them as one partition each
-      (pipeline.py:_transition).
     - ``profile``: execution profile name (``entity_etl_spark.profile``):
       ``"parity"`` (default) leaves every LSH-family hot-group cap off so
       oracle comparisons see complete output; ``"production"`` flips every
@@ -56,6 +48,5 @@ class EngineConfig:
     state_ttl_hours: float = 8.0
     initial_checkpoint_ms: int = 1
     state_dir: str = "data/state"
-    state_buckets: int | None = None
     profile: str = "parity"
     extra: dict = field(default_factory=dict)

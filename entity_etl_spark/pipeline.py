@@ -185,8 +185,6 @@ def _transition(
     projection,
     config: EngineConfig,
     now_epoch_ms: int | None,
-    *,
-    bucketed: bool = False,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """One state transition over a page of fetched rows: the cached
     ``latest`` (one row per key, with its content hash) and two lazy
@@ -199,9 +197,10 @@ def _transition(
 
     A page whose size estimate fits one file split
     (:func:`~entity_etl_spark.state.split_count`, read from plan
-    statistics) is planned as one partition: that satisfies the
-    keep-latest window's and the body aggregate's clustering, so neither
-    shuffles. A page of unknown size or of several splits keeps its
+    statistics) is planned as one partition, with or without a state:
+    that satisfies the keep-latest window's and the body aggregate's
+    clustering, so neither shuffles, and its bodies are planned as one
+    partition. A page of unknown size or of several splits keeps its
     exchanges.
 
     When the state also fits one file split, it is read as one partition
@@ -209,7 +208,7 @@ def _transition(
     sides, which need no exchange and no broadcast (the module docstring
     has both plans). The delta's join streams the page, so the delta keeps
     the page's row order and with it the batch ids. Any other page or
-    state keeps the broadcast plan, and the bucketed state its own merge.
+    state keeps the broadcast plan.
 
     The delta compares against the full stored state, expired keys
     included; only the next state drops them. The next state is planned
@@ -219,42 +218,69 @@ def _transition(
         page = page.coalesce(1)
     with _cache_at_coalesced_width(page.sparkSession):
         latest = keep_latest_per_key(page, spec.id_field, spec.ts_field).cache()
-    one_partition = (
-        one_split
-        and not bucketed
-        and state is not None
-        and state_mod.split_count(state) == 1
-    )
-    page_side, state_side = latest, state
-    if one_partition:
-        # The cached latest is read through a coalesce as well: AQE's first
-        # plan does not know a cache stage's partitioning, and would shuffle
-        # both join sides and the body aggregate. Hashing the state leaves
-        # the page as the streamed side, whose row order the batch ids follow.
-        state = state.coalesce(1)
-        page_side, state_side = latest.coalesce(1), state.hint("shuffle_hash")
-    delta = changed_rows(page_side, state_side, spec.id_field, ignore=(spec.ts_field,))
-    jsons = _project_to_json(delta, projection)
-    batched = batch_mod.assign_batches_distributed(jsons, config.max_batch_size)
+    # The cached latest is read through a coalesce as well: AQE's first plan
+    # does not know a cache stage's partitioning, and would shuffle the join
+    # sides and the body aggregate, and plan the bodies over an unknown
+    # partitioning, which http_sink sends from the executors.
+    page_side = latest.coalesce(1) if one_split else latest
     merge_kw = dict(ttl_hours=config.state_ttl_hours, now_epoch_ms=now_epoch_ms)
-    if one_partition:
-        # an outer join, not upsert_state's anti-join: the optimizer pushes
-        # a left-anti join below the state's coalesce, which puts an
-        # exchange back on the state
+    if one_split and state is not None and state_mod.split_count(state) == 1:
+        # Hashing the state leaves the page as the delta's streamed side,
+        # whose row order the batch ids follow. The next state is an outer
+        # join, not upsert_state's anti-join: the optimizer pushes a
+        # left-anti join below the state's coalesce, which puts an exchange
+        # back on the state.
+        state = state.coalesce(1)
+        state_side = state.hint("shuffle_hash")
         next_state = state_mod.merge_state_join(
             state, page_side.hint("shuffle_hash"), spec.id_field,
             ignore=(spec.ts_field,), **merge_kw
         )
-    elif bucketed:
-        # with the state table bucketed by id, the join-based MERGE moves
-        # only the page side
-        next_state = state_mod.merge_state_join(
-            state, latest, spec.id_field, ignore=(spec.ts_field,), **merge_kw
-        )
     else:
         # the page's ids are broadcast to an anti-join: no state row moves
+        state_side = state
         next_state = state_mod.upsert_state(state, latest, spec.id_field, **merge_kw)
+    delta = changed_rows(page_side, state_side, spec.id_field, ignore=(spec.ts_field,))
+    jsons = _project_to_json(delta, projection)
+    batched = batch_mod.assign_batches_distributed(jsons, config.max_batch_size)
     return latest, batched, next_state
+
+
+def _load_state(
+    spark: SparkSession, config: EngineConfig, spec: TableSpec, page: DataFrame
+) -> DataFrame | None:
+    """The stored state of ``spec``'s table, or None before its first save.
+
+    The state's id column has the page's id type (it was merged from
+    earlier pages), so a known schema spares the inference job; a page
+    without the id column (a schemaless empty fetch) leaves it inferred."""
+    return state_mod.load_state(
+        spark,
+        config.state_dir,
+        spec.name,
+        schema=state_mod.state_schema(
+            spec.id_field, page.schema[spec.id_field].dataType
+        )
+        if spec.id_field in page.columns
+        else None,
+    )
+
+
+def _purge_expired(
+    state: DataFrame | None,
+    config: EngineConfig,
+    spec: TableSpec,
+    now_epoch_ms: int | None,
+) -> None:
+    """Save ``state`` without its expired keys: the transition of an empty
+    page, which sends nothing but still purges (cache.js:60-67,101-104)."""
+    if state is not None:
+        now = state_mod.now_ms() if now_epoch_ms is None else now_epoch_ms
+        state_mod.save_state(
+            state.filter(F.col(state_mod.TTL_COL) >= F.lit(now)),
+            config.state_dir,
+            spec.name,
+        )
 
 
 def _body_counts():
@@ -276,35 +302,7 @@ def _run_incremental_impl(
     partial_results: bool = False,
     now_epoch_ms: int | None = None,
 ) -> RunResult:
-    bucketed = bool(config.state_buckets)
-    if bucketed:
-        state = state_mod.load_state_bucketed(spark, config.state_dir, spec.name)
-    else:
-        # the state's id column has the source's id type (it was merged from
-        # earlier pages), so a known schema spares the inference job
-        state = state_mod.load_state(
-            spark,
-            config.state_dir,
-            spec.name,
-            schema=state_mod.state_schema(
-                spec.id_field, source.schema[spec.id_field].dataType
-            )
-            if spec.id_field in source.columns
-            else None,
-        )
-
-    def persist_state(df: DataFrame) -> None:
-        if bucketed:
-            state_mod.save_state_bucketed(
-                df,
-                config.state_dir,
-                spec.name,
-                spec.id_field,
-                n_buckets=config.state_buckets,
-            )
-        else:
-            state_mod.save_state(df, config.state_dir, spec.name)
-
+    state = _load_state(spark, config, spec, source)
     checkpoint = ckpt_mod.load_checkpoint(
         config.state_dir, spec.name, config.initial_checkpoint_ms
     )
@@ -312,11 +310,8 @@ def _run_incremental_impl(
     if spec.ts_field not in source.columns or spec.id_field not in source.columns:
         # empty/schemaless fetch (a dynamic-schema source returns no rows, so
         # no columns): reference behavior for an empty page — expired state
-        # entries still purge, checkpoint is kept (cache.js:60-67,101-104)
-        if state is not None:
-            now = state_mod.now_ms() if now_epoch_ms is None else now_epoch_ms
-            live = state.filter(F.col(state_mod.TTL_COL) >= F.lit(now))
-            persist_state(live)
+        # entries still purge, checkpoint is kept
+        _purge_expired(state, config, spec, now_epoch_ms)
         return RunResult(
             table=spec.name,
             input_rows=0,
@@ -331,7 +326,7 @@ def _run_incremental_impl(
     # observation under it), the state write reads it again
     page = with_content_hash(scan, exclude=(spec.ts_field,))
     latest, batched, next_state = _transition(
-        page, state, spec, projection, config, now_epoch_ms, bucketed=bucketed
+        page, state, spec, projection, config, now_epoch_ms
     )
     # the sink's first action fills both Observations: the batch and item
     # counts over the bodies, and the items under the body aggregate, which
@@ -360,7 +355,7 @@ def _run_incremental_impl(
         # app.js:55-58). The merge reads every seen key (latest), not the
         # delta, which reproduces TTL refresh-on-read for unchanged keys
         # (cache.js:79).
-        persist_state(next_state)
+        state_mod.save_state(next_state, config.state_dir, spec.name)
     finally:
         latest.unpersist()
     new_ckpt = ckpt_mod.next_checkpoint(mx, checkpoint, partial_results)
@@ -451,31 +446,14 @@ def run_streaming(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         now_b = now_fn(batch_id) if now_fn is not None else now_epoch_ms
-        # the state's id column has the stream's id type, so a known schema
-        # spares the inference job
-        state = state_mod.load_state(
-            spark,
-            config.state_dir,
-            spec.name,
-            schema=state_mod.state_schema(
-                spec.id_field, batch_df.schema[spec.id_field].dataType
-            )
-            if spec.id_field in batch_df.columns
-            else None,
-        )
+        state = _load_state(spark, config, spec, batch_df)
         # zero-job empty probe (file-source checkpoint log); non-file
         # sources fall back to the take(1) job. A planned-rows>0 batch
         # emptied by caller-side transforms would run the main branch on
         # an empty frame — same resulting state (the upsert filters
         # expired rows itself), plus one empty sink append.
         if probe_batch_rows(batch_df, checkpoint_dir, batch_id) == 0:
-            if state is not None:
-                now = state_mod.now_ms() if now_b is None else now_b
-                state_mod.save_state(
-                    state.filter(F.col(state_mod.TTL_COL) >= F.lit(now)),
-                    config.state_dir,
-                    spec.name,
-                )
+            _purge_expired(state, config, spec, now_b)
             return
         latest, batched, next_state = _transition(
             batch_df, state, spec, projection, config, now_b

@@ -12,7 +12,7 @@ same contract.
   one of two paths chosen from the bodies' planned partitioning (no job
   runs to choose):
 
-  - one partition (a warm tick over a page of one file split): one
+  - one partition (a tick over a page of one file split): one
     ``collect`` of the bodies, sent from the driver. A task that ran the
     sends in a Python worker would pay the worker's start, about 0.2-0.3 s
     on a small host (``tools/probe_env.py``), for a few small bodies;

@@ -28,8 +28,12 @@ shuffled:
 - :func:`merge_state_join`: a full outer join on id. The pipeline takes it
   when the page and the state each fit one file split (:func:`split_count`):
   both sides are read as one partition, and a shuffled hash join that
-  hashes the page needs no exchange and no broadcast. The bucketed layout
-  (``state_buckets``) merges with it too, for its id partitioning.
+  hashes the page needs no exchange and no broadcast.
+
+The pipeline reads and writes only the plain parquet table
+(:func:`load_state` / :func:`save_state`). The bucketed warehouse layout
+(:func:`save_state_bucketed` / :func:`load_state_bucketed`) is what
+:func:`state_lifecycle_metrics` reports generation-swap accounting over.
 """
 
 from __future__ import annotations
@@ -312,15 +316,13 @@ def merge_state_join(
     WHEN MATCHED take the update, WHEN NOT MATCHED keep the (live) state row.
 
     Semantically equal to :func:`merge_state` when ``incoming`` is already
-    one-row-per-key (delta.keep_latest_per_key runs first). It is the
-    bucketed layout's merge: against a state table bucketed by id the join
-    needs NO shuffle on the state side, and its output keeps the id
-    partitioning the bucketed write needs. It is also the plain layout's
-    merge when the page and the state are each one partition
+    one-row-per-key (delta.keep_latest_per_key runs first). The pipeline
+    merges with it when the page and the state are each one partition
     (pipeline._transition): a shuffled hash join of two one-partition
-    sides exchanges nothing. :func:`upsert_state`, the plain layout's
-    merge otherwise, spares the state a shuffle by broadcasting the page's
-    ids instead.
+    sides exchanges nothing. :func:`upsert_state`, its merge otherwise,
+    spares the state a shuffle by broadcasting the page's ids instead.
+    Against a state table bucketed by id (:func:`save_state_bucketed`)
+    the join needs no shuffle on the state side either.
 
     TTL semantics unchanged: expired rows filtered before the join
     (cache.js:60-67); every seen key gets a fresh TTL (cache.js:79

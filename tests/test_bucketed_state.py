@@ -1,5 +1,5 @@
 """Bucketed state path: join-based MERGE semantics, generation-swap
-persistence, pipeline wiring, and the no-shuffle-on-state-side plan claim."""
+persistence, and the no-shuffle-on-state-side plan claim."""
 
 import json
 import os
@@ -31,21 +31,23 @@ def _canon(state_df):
     )
 
 
-def test_merge_state_join_matches_union_window_merge(spark):
+def test_merge_state_join_matches_merge_state(spark):
     """Same transition, both merge strategies: upsert changed+new, keep
     untouched live rows, purge expired, refresh TTL for every seen key."""
     seed = df_of(spark, SEED)
     kw = dict(ignore=("updatedOnMs",), ttl_hours=8.0, now_epoch_ms=NOW)
     s0_join = merge_state_join(None, seed, "id", **kw)
-    s0_win = merge_state(None, seed, "id", ts_field="updatedOnMs", **kw)
-    assert _canon(s0_join) == _canon(s0_win)
+    s0_upsert = merge_state(None, seed, "id", ts_field="updatedOnMs", **kw)
+    assert _canon(s0_join) == _canon(s0_upsert)
 
     # batch 2 (one-row-per-key): change id=2, add id=4; ids 1,3 unseen
     batch2 = df_of(spark, [(2, 24, 21), (4, 14, 40)])
     kw2 = dict(ignore=("updatedOnMs",), ttl_hours=8.0, now_epoch_ms=NOW + 500)
     s1_join = merge_state_join(s0_join, batch2, "id", **kw2)
-    s1_win = merge_state(s0_win, batch2, "id", ts_field="updatedOnMs", **kw2)
-    assert _canon(s1_join) == _canon(s1_win)
+    s1_upsert = merge_state(
+        s0_upsert, batch2, "id", ts_field="updatedOnMs", **kw2
+    )
+    assert _canon(s1_join) == _canon(s1_upsert)
     # unseen keys keep the OLD ttl; seen keys get the fresh one
     ttls = {r["id"]: r[TTL_COL] for r in s1_join.collect()}
     assert ttls[1] == ttls[3] == NOW + 8 * 3600 * 1000
@@ -117,39 +119,6 @@ def test_merge_against_bucketed_state_shuffles_only_the_delta(spark, tmp_path):
         spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
         spark.sql("DROP TABLE IF EXISTS t2_state_g0")
         spark.sql("DROP TABLE IF EXISTS t2_state_g1")
-
-
-def test_pipeline_run_incremental_bucketed(spark, tmp_path):
-    """EngineConfig.state_buckets end-to-end: run 1 emits everything, run 2
-    suppresses everything via the bucketed state + checkpoint."""
-    from entity_etl_spark import pipeline
-    from entity_etl_spark.model import EngineConfig, TableSpec
-
-    src = spark.createDataFrame(
-        [(i, f"v{i}", 100 + i) for i in range(50)], ["id", "value", "updatedOnMs"]
-    )
-    spec = TableSpec(name="bktevents", id_field="id", ts_field="updatedOnMs")
-    proj = [{"target": "out_id", "source": "id"},
-            {"target": "out_value", "source": "value"}]
-    emitted = []
-
-    def sink(df):
-        emitted.append(df.count())
-
-    cfg = EngineConfig(state_dir=str(tmp_path), max_batch_size=10,
-                       state_buckets=4)
-    try:
-        r1 = pipeline.run_incremental(spark, spec, src, proj, cfg, sink)
-        assert (r1.emitted_rows, r1.batches) == (50, 5)
-        r2 = pipeline.run_incremental(spark, spec, src, proj, cfg, sink)
-        assert (r2.input_rows, r2.emitted_rows) == (0, 0)
-        meta = json.load(
-            open(os.path.join(str(tmp_path), "bktevents.state.bucketed.json"))
-        )
-        assert spark.catalog.tableExists(meta["table"])
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bktevents_state_g0")
-        spark.sql("DROP TABLE IF EXISTS bktevents_state_g1")
 
 
 def test_state_lifecycle_metrics_accounting(spark, tmp_path):

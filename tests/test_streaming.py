@@ -192,49 +192,6 @@ def test_stream_stream_join_with_watermarks(spark, tmp_path):
     assert [r["id"] for r in collected] == [1]
 
 
-def test_run_streaming_prep_cross_batch_dedup(spark, tmp_path):
-    from entity_etl_spark.ext.prep import run_streaming_prep
-    from entity_etl_spark.streaming import stream_source
-
-    src = str(tmp_path / "docs_src")
-    out = str(tmp_path / "corpus")
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "prep_ckpt")
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("source", T.StringType()),
-        ]
-    )
-    good = ("the quick brown fox jumps over the lazy dog and it "
-            "is a fine day in the park of wonders to see it all ") * 2
-
-    def write_docs(rows, n):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{src}/f{n}")
-
-    def run():
-        run_streaming_prep(
-            spark, stream_source(spark, f"{src}/f*", schema),
-            out, state, ckpt,
-        )
-
-    write_docs([(1, good, "sa"), (2, "tiny", "sa"), (3, good + "x", "sb")], 1)
-    run()
-    got1 = {r.doc_id for r in spark.read.parquet(out).collect()}
-    assert got1 == {1, 3}  # quality gate dropped 2
-
-    # batch 2: replay of doc 1's content under a new id + genuinely new doc
-    write_docs([(10, good, "sa"), (11, good + "y z", "sb")], 2)
-    run()
-    all_rows = spark.read.parquet(out).collect()
-    assert {r.doc_id for r in all_rows} == {1, 3, 11}  # 10 deduped cross-batch
-    # split column survives the partitioned write
-    assert all(r.split in ("train", "val", "test") for r in all_rows)
-
-
 def test_stream_static_broadcast_enrichment(spark, tmp_path):
     """Stream-static join — the enrichment pattern: a streaming fact joins
     a static dimension (broadcast; re-read per micro-batch so dim updates

@@ -11,8 +11,8 @@ artifact with the gate fields computed by bench.py's committed rules.
 This tool generalizes that merge: it takes any number of {name: sec}
 JSON fragments (aborted-run parses, time_query outputs), min-merges
 them, splits headline vs heavy by the registry's bench/bench2 tags, and
-computes every gate field via tools/_bench_common.py — shared with
-merge_bench_min.py so the two merge paths cannot drift (ADVICE r9).
+computes every gate field with bench.build_artifact — the one definition
+bench.py and merge_bench_min.py use too, so the gate rules cannot drift.
 
 Usage: python tools/assemble_bench.py SF OUT.json FRAG1.json [...] [--note TEXT]
 """
@@ -23,11 +23,9 @@ import json
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(__file__))
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
-from _bench_common import build_artifact  # noqa: E402
-from bench import SF10_EXCLUDED  # noqa: E402
+from bench import SF10_EXCLUDED, build_artifact  # noqa: E402
 
 
 def main() -> None:

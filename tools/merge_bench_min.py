@@ -6,8 +6,8 @@ move BETWEEN runs (the SF1_AB_r8 diagnosis) — the per-query minimum
 across repeated quiet runs is the committed reference form ("per-query
 MIN of the round-8 quiet runs", bench.py). Gate fields (heavy ceilings,
 sf1/sf10 factor ratchets, ungated lists) are recomputed from bench.py's
-COMMITTED rule definitions via tools/_bench_common.py — shared with
-assemble_bench.py so the two merge paths cannot drift (ADVICE r9).
+COMMITTED rule definitions by bench.build_artifact — the one definition
+bench.py and assemble_bench.py use too, so the gate rules cannot drift.
 
 Usage: python tools/merge_bench_min.py OUT.json RUN1.json RUN2.json [...]
 The sf field must agree across inputs. Provenance (input run list) is
@@ -20,9 +20,9 @@ import json
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(__file__))
+sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
-from _bench_common import build_artifact  # noqa: E402
+from bench import build_artifact  # noqa: E402
 
 
 def main() -> None:
